@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.GraftFunctions
 
 /** SparkSessionExtensions entry point: makes graft's native expressions
-  * (cosine_sim, l2_sq, simhash60, minhash_sig16) AND the TopKPerKey
-  * planner strategy available in any session via
+  * (every name in [[GraftFunctions.builders]]), the TopKPerKey planner
+  * strategy and the NativeKernelRule available in any session via
   *
   * {{{
   * SparkSession.builder()

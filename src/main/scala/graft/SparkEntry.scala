@@ -28,7 +28,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- relational core ----
     "q1_agg"            -> (Relational.q1PricingSummary(_, _)),
     "sql1_pricing_summary" -> (Relational.sql1PricingSummary(_, _)),
@@ -123,14 +123,14 @@ object SparkEntry {
     "dedup_minhash_lsh" -> ((s, dir) =>
       Dedup.minhashLsh(s, Fixtures.mutantDocs(s, dir))),
     "dedup_simhash"     -> ((s, dir) =>
-      Dedup.simhash(s, Fixtures.mutantDocs(s, dir))),
+      Dedup.simhash(Fixtures.mutantDocs(s, dir))),
     "dedup_simhash_pairs" -> ((s, dir) =>
       Dedup.simhashPairs(s, Fixtures.mutantDocs(s, dir))),
     "dedup_clusters"    -> ((s, dir) =>
       Dedup.connectedComponents(
         Dedup.ngramJaccardPairs(Fixtures.mutantSlice(s, dir)))),
     "dedup_incremental" -> ((s, dir) =>
-      Dedup.incremental(s, Tables.documents(s, dir),
+      Dedup.incremental(Tables.documents(s, dir),
         Fixtures.crawlBatch(Tables.documents(s, dir)))),
     "dedup_cross_near"  -> ((s, dir) =>
       Dedup.nearDupCross(s, Tables.documents(s, dir),
@@ -181,7 +181,7 @@ object SparkEntry {
     "samp3_split"       -> ((s, dir) =>
       Sampling.trainTestSplit(Tables.documents(s, dir))),
     "sim_semdedup"      -> ((s, dir) =>
-      Similarity.semDedup(s,
+      Similarity.semDedup(
         Fixtures.embeddingMutants(Tables.embeddings(s, dir)))),
     "text_contamination" -> (TextAnalysis.contamination(_, _)),
     "text_repetition"   -> ((s, dir) =>
@@ -270,7 +270,7 @@ object SparkEntry {
     "samp5_balanced"    -> ((s, dir) =>
       Sampling.balancedSample(s, Tables.documents(s, dir))),
     "text_shingle_gen"  -> ((s, dir) =>
-      TextAnalysis.shingleRows(s, Tables.documents(s, dir))),
+      TextAnalysis.shingleRows(Tables.documents(s, dir))),
     // ---- round-4m: Welch t-test, calendar dimension ----
     "stat11_ttest"      -> (Relational.stat11TTest(_, _)),
     "time1_calendar"    -> (Relational.time1Calendar(_, _)),
@@ -604,7 +604,7 @@ object SparkEntry {
     "ts14_seasonal_strength" -> (EventAnalytics.ts14SeasonalStrength(_, _)),
   )
 
-  def oracleSql: Map[String, String] = Map(
+  lazy val oracleSql: Map[String, String] = Map(
     "q1_agg" ->
       """SELECT l_returnflag, l_linestatus,
          sum(l_quantity) AS sum_qty,

@@ -1,90 +1,55 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import Kernels._
 
-/** Registry for graft's native Catalyst expressions. Operators call
-  * `register` (idempotent) and reference the functions by name via
-  * `call_function`; external users can instead attach
-  * [[graft.GraftExtensions]] at session build time.
+/** SQL names of graft's native Catalyst expressions, for SQL callers:
+  * [[graft.GraftExtensions]] injects them at session build and
+  * [[graft.Graft.attach]] adds them to a built session. Each builder
+  * delegates to its typed constructor in [[Kernels]], which column
+  * code calls directly.
   */
 object GraftFunctions {
 
-  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "cosine_sim"    -> (es => CosineSimilarity(es(0), es(1))),
-    "l2_sq"         -> (es => L2Squared(es(0), es(1))),
-    "plane_sig"     -> (es => PlaneSignature(es(0), es(1))),
-    "simhash60"     -> (es => SimHash60(es.head)),
-    "md5_base60"    -> (es => Md5Base60(es.head)),
-    // even-odd ray-cast against the geo8 octagon (see OctagonContains:
-    // the declarative 8-edge CASE tree blew HotSpot's JIT method limit
-    // inside the candidate join's condition)
-    "octagon_contains" -> (es =>
-      OctagonContains(es(0), es(1), es(2), es(3), es(4))),
-    "minhash_sig16" -> (es => MinHashSig(es.head, 16)),
-    // Spark ships bloom-filter expressions for its runtime join filters
-    // but does not register them as SQL functions; graft exposes them
-    // for explicit bloom pre-filters (incremental dedup's broadcast
-    // membership sketch). bloom_agg(longCol, estItems, numBits) →
-    // binary; bloom_might_contain(bf, longCol) → boolean.
-    "bloom_agg" -> (es =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(es(0), es(1), es(2))),
-    "bloom_might_contain" -> (es =>
-      new org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(es(0), es(1))),
-    // Misra-Gries heavy-hitters sketch: mg_topk(strCol, capacity) →
-    // map<string,bigint> of surviving counters (capacity must be a
-    // literal — it sizes every task's constant-memory buffer)
-    "mg_topk" -> (es => MisraGriesAgg(es(0),
-      es(1).eval().asInstanceOf[Number].intValue)),
-    // table-generating function (Generator): one output row per
-    // n-token shingle, streamed — no per-document shingle array
-    // streaming ordered-triple generator (rec6_lift3's combination
-    // explode): one row per i<j<k triple of the sorted brand set
-    "combo3_gen" -> (es => Combo3Generator(es.head)),
-    "shingle_gen" -> (es => ShingleGenerator(es(0),
-      es(1).eval().asInstanceOf[Number].intValue)),
-    // native n-gram constructor: token_ngrams(tk, n [, wholeShort])
-    // → array<string> of positional space-joined grams (one pass —
-    // codegen-safe replacement for the transform/slice HOF form)
-    "token_ngrams" -> (es => TokenNGrams(es(0),
-      es(1).eval().asInstanceOf[Number].intValue,
-      if (es.length > 2) es(2).eval().asInstanceOf[Boolean] else true)),
-    // sliding-window minima over array<bigint> (winnowing selection)
-    "rolling_min" -> (es => RollingMin(es(0),
-      es(1).eval().asInstanceOf[Number].intValue)),
-    // unigram-LM Viterbi segmentation of one word (tok11's kernel)
-    "unigram_segment" -> (es => UnigramSegment(es.head)),
-    // greedy longest-match WordPiece segmentation (tok10's kernel)
-    "wordpiece_segment" -> (es => WordPieceSegment(es.head)),
-    // CDC boundary positions: cdc_boundaries(text, mod) → array<int>
-    // of 1-based end positions whose trailing 8-char window hash ≡ 0
-    "cdc_boundaries" -> (es => CdcBoundaries(es(0),
-      es(1).eval().asInstanceOf[Number].intValue)),
-    // per-frame PCM energies: frame_energies(payload, flen) →
-    // array<bigint> (mm9's kernel)
-    "frame_energies" -> (es => FrameEnergies(es(0),
-      es(1).eval().asInstanceOf[Number].intValue)),
-    // Hilbert-curve key on the 16-bit grid (zorder2's kernel)
-    "hilbert_key" -> (es => HilbertKey(es(0), es(1))),
-    // fused PII battery: pii_scan(text) → struct(n_urls, n_emails,
-    // n_ips, n_phones, redacted) — one call replaces 4 regex counts +
-    // the 4-pass sequential scrub, match-for-match
-    "pii_scan" -> (es => PiiScan(es.head)),
-    // Gopher quality integer stats: gopher_scan(text) →
-    // struct(n_words, sum_len, n_alpha, n_stop); ratios/rounding stay
-    // in Catalyst so derived signals are structurally bit-equal
-    "gopher_scan" -> (es => GopherScan(es.head)),
-    // 26-letter histogram of the lowercased text: letter_counts(text)
-    // → array<bigint>(26) — one pass, replaces charEntropy's 26-regex
-    // battery bit-for-bit
-    "letter_counts" -> (es => LetterCounts(es.head)))
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+  /** A SQL builder over a typed constructor. Aggregates go back as the
+    * bare function, which the analyzer wraps itself. */
+  private def sql(f: Seq[Column] => Column): Seq[Expression] => Expression =
+    es => expression(f(es.map(column))) match {
+      case a: AggregateExpression => a.aggregateFunction
+      case x => x
     }
-  }
+
+  /** A literal argument (size, capacity, flag), read at resolution. */
+  private def lit(c: Column): Any = expression(c).eval()
+  private def int(c: Column): Int = lit(c).asInstanceOf[Number].intValue
+  private def long(c: Column): Long = lit(c).asInstanceOf[Number].longValue
+
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "cosine_sim"          -> sql(cs => cosineSim(cs(0), cs(1))),
+    "l2_sq"               -> sql(cs => l2Sq(cs(0), cs(1))),
+    "plane_sig"           -> sql(cs => planeSig(cs(0), cs(1))),
+    "simhash60"           -> sql(cs => simhash60(cs.head)),
+    "md5_base60"          -> sql(cs => md5Base60(cs.head)),
+    "octagon_contains"    -> sql(cs => octagonContains(cs(0), cs(1), cs(2), cs(3), cs(4))),
+    "minhash_sig16"       -> sql(cs => minhashSig16(cs.head)),
+    "bloom_agg"           -> sql(cs => bloomAgg(cs(0), long(cs(1)), long(cs(2)))),
+    "bloom_might_contain" -> sql(cs => bloomMightContain(cs(0), cs(1))),
+    "mg_topk"             -> sql(cs => mgTopk(cs(0), int(cs(1)))),
+    "combo3_gen"          -> sql(cs => combo3Gen(cs.head)),
+    "shingle_gen"         -> sql(cs => shingleGen(cs(0), int(cs(1)))),
+    "token_ngrams"        -> sql(cs =>
+      if (cs.length > 2) tokenNgrams(cs(0), int(cs(1)), lit(cs(2)).asInstanceOf[Boolean])
+      else tokenNgrams(cs(0), int(cs(1)))),
+    "rolling_min"         -> sql(cs => rollingMin(cs(0), int(cs(1)))),
+    "unigram_segment"     -> sql(cs => unigramSegment(cs.head)),
+    "wordpiece_segment"   -> sql(cs => wordpieceSegment(cs.head)),
+    "cdc_boundaries"      -> sql(cs => cdcBoundaries(cs(0), int(cs(1)))),
+    "frame_energies"      -> sql(cs => frameEnergies(cs(0), int(cs(1)))),
+    "hilbert_key"         -> sql(cs => hilbertKey(cs(0), cs(1))),
+    "pii_scan"            -> sql(cs => piiScan(cs.head)),
+    "gopher_scan"         -> sql(cs => gopherScan(cs.head)),
+    "letter_counts"       -> sql(cs => letterCounts(cs.head)))
 }

@@ -1,8 +1,8 @@
 package graft.operators
 
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** Deduplication operators for a training-data pipeline: exact,
   * normalized-exact, n-gram Jaccard, MinHash+LSH, SimHash.
@@ -184,18 +184,15 @@ object Dedup {
     * form it replaces re-ran an inlined tokenizer per element once
     * InferFiltersFromGenerate pushed a `size(…) > 0` filter below the
     * consuming explode — see TextAnalysis.grams for the measurement. */
-  private def shingles(ts: Column, n: Int = 3): Column = {
-    graft.functions.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
-    array_distinct(call_function("token_ngrams", ts, lit(n)))
-  }
+  private def shingles(ts: Column, n: Int = 3): Column =
+    array_distinct(tokenNgrams(ts, n))
 
   /** MinHash signature: k = 16 permutation-minima over shingle hashes —
     * the native MinHashSig expression (one pass, one md5 per shingle,
     * no per-shingle array allocation; see functions.MinHashSig and its
     * equivalence test against the higher-order-function fold). */
   private def minhashSig(sh: Column): Column =
-    call_function("minhash_sig16", sh)
+    minhashSig16(sh)
 
   /** MinHash + LSH banding: 4 bands × 4 rows. Same band slice ⇒
     * candidate pair; candidates are verified with exact shingle-Jaccard.
@@ -221,7 +218,6 @@ object Dedup {
     * exact binary; the exact Jaccard divide and the decile floor are
     * the same IEEE ops in both engines. */
   def minhashErrorProfile(s: SparkSession, docs: DataFrame): DataFrame = {
-    GraftFunctions.register(s)
     val shDocs = stagedShingles(s, docs)
     val sigs = shDocs.select(col("doc_id"), minhashSig(col("sh")).as("sig"))
       .repartition(col("doc_id"))
@@ -309,8 +305,7 @@ object Dedup {
     * micro-batch runs the identical expressions, so stream and batch
     * bucket identically by construction. (No staging here — a
     * streaming plan cannot read per-call scratch parquet.) */
-  def bandSignatureRows(s: SparkSession, docs: DataFrame): DataFrame = {
-    GraftFunctions.register(s)
+  def bandSignatureRows(docs: DataFrame): DataFrame = {
     bandKeys(shingled(docs)
       .select(col("doc_id"), minhashSig(col("sh")).as("sig")),
       col("doc_id"), col("sig"))
@@ -345,7 +340,6 @@ object Dedup {
     * only at their output boundary. */
   private def candidateJaccardRaw(s: SparkSession,
                                   docs: DataFrame): DataFrame = {
-    GraftFunctions.register(s)
     val shDocs = stagedShingles(s, docs)
     val sigs = shDocs
       .select(col("doc_id"), minhashSig(col("sh")).as("sig"))
@@ -589,7 +583,7 @@ object Dedup {
     * shuffle the full history ledger every night; instead the history is
     * collapsed once into a broadcast bloom filter (Spark's own
     * runtime-join-filter expressions, exposed via
-    * [[graft.functions.GraftFunctions]]). Blooms have no false
+    * [[graft.functions.Kernels]]). Blooms have no false
     * negatives, so batch rows the filter rejects are *definitively* new
     * and never touch a shuffle; only the might-contain survivors (true
     * duplicates + the ~fpp sliver of false positives) proceed to the
@@ -600,26 +594,20 @@ object Dedup {
     * (here 8M bits ≈ 1 MB broadcast for ~1M items at fpp≈2%; at real
     * scale size from table stats, or band by digest prefix into a
     * bloom per partition). */
-  def incremental(s: SparkSession, history: DataFrame,
-                  batch: DataFrame): DataFrame = {
-    GraftFunctions.register(s)
+  def incremental(history: DataFrame, batch: DataFrame): DataFrame = {
     // might_contain requires its bloom as a constant or scalar
     // subquery (the same contract Spark's injected runtime join
     // filters use) — the subquery runs once and ships to executors
     // as a literal, so the batch side stays a narrow scan.
-    history.select(xxhash64(col("text")).as("h64"),
-        md5(col("text")).as("h_digest"))
-      .createOrReplaceTempView("graft_dedup_history")
+    val hist = history.select(xxhash64(col("text")).as("h64"),
+      md5(col("text")).as("h_digest"))
+    val bloom = hist.select(bloomAgg(col("h64"), 1000000L, 8000000L)).scalar()
     val tagged = batch
-      .withColumn("maybe_dup", expr(
-        """bloom_might_contain(
-             (SELECT bloom_agg(h64, 1000000L, 8000000L)
-              FROM graft_dedup_history),
-             xxhash64(text))"""))
+      .withColumn("maybe_dup", bloomMightContain(bloom, xxhash64(col("text"))))
       .select(col("doc_id"), col("text"), col("maybe_dup"))
     val definitelyNew = tagged.filter(!col("maybe_dup"))
     val survivors = tagged.filter(col("maybe_dup"))
-      .join(s.table("graft_dedup_history").select(col("h_digest")).distinct(),
+      .join(hist.select(col("h_digest")).distinct(),
         md5(col("text")) === col("h_digest"), "left_anti")
     definitelyNew.unionByName(survivors)
       .select(col("doc_id"), md5(col("text")).as("content_hash"))
@@ -644,7 +632,6 @@ object Dedup {
     * per micro-batch via foreachBatch. */
   def nearDupCross(s: SparkSession, history: DataFrame, batch: DataFrame,
                    threshold: Double = 0.5): DataFrame = {
-    GraftFunctions.register(s)
     // resultOnce owns the snapshot → build → materialize →
     // finally-unpersist cycle: the side checkpoints no longer
     // accumulate across calls, file-backed (history, batch) pairs
@@ -705,7 +692,6 @@ object Dedup {
   def nearDupCrossIndexed(s: SparkSession, history: DataFrame,
                           batch: DataFrame, dir: String,
                           threshold: Double = 0.5): DataFrame = {
-    GraftFunctions.register(s)
     // the staging key must identify the HISTORY INPUT, not just dir:
     // a caller passing a different history frame for the same corpus
     // must not be served the previously staged index (the plan's
@@ -742,10 +728,9 @@ object Dedup {
     * ±1 (weighted by token frequency via repetition), sign of the vote
     * vector becomes the fingerprint bit — via the native SimHash60
     * expression (one pass, one vote buffer per row). */
-  def simhash(s: SparkSession, docs: DataFrame): DataFrame = {
-    GraftFunctions.register(s)
+  def simhash(docs: DataFrame): DataFrame = {
     docs.select(col("doc_id"),
-      call_function("simhash60", toks(col("text"))).as("simhash"))
+      simhash60(toks(col("text"))).as("simhash"))
   }
 
   /** SimHash near-dup pairs: band the 60-bit fingerprint into 4×15-bit
@@ -757,7 +742,7 @@ object Dedup {
     // sides, and each reference re-ran tokenize+simhash60 over the
     // corpus (2 scans; the fingerprint is 16 bytes/row — the guide-§8
     // lightweight proxy, computed once and joined twice)
-    val sh = simhash(s, docs).localCheckpoint(true)
+    val sh = simhash(docs).localCheckpoint(true)
     val banded = sh.select(col("doc_id"), col("simhash"),
         posexplode(transform(sequence(lit(0), lit(3)),
           b => call_function("shiftright", col("simhash"), b * 15)
@@ -824,13 +809,11 @@ object Dedup {
     * and [[spanStrip]] — their accounting/rewrite correspondence only
     * holds while both key spans identically. */
   private def spanHashes(tk: Column, n: Int): Column = {
-    graft.functions.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
     // native gram pass + per-element md5 on the lambda-bound gram
     // (never a recomputed child — see TextAnalysis.grams); both
     // callers guard size(tk) >= n so the whole-short fallback gram is
     // unreachable
-    transform(call_function("token_ngrams", tk, lit(n)), g => md5(g))
+    transform(tokenNgrams(tk, n), g => md5(g))
   }
 
   def dupSpans(docs: DataFrame, n: Int = 8): DataFrame = {

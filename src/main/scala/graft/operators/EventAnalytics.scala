@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** Event-stream analytics: ordered funnels, cohort retention, and
   * time-series gap filling — the OLAP layer a training-data pipeline's
@@ -1466,7 +1467,6 @@ object EventAnalytics {
     * rollup, one 1-row pivot — nothing after the first shuffle scales
     * with the corpus. */
   def diffInDiff(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.events(s, dir)
     val cents = round(col("value") * 100).cast("long")
     val perUser = e.groupBy(col("user_id"))
@@ -1475,7 +1475,7 @@ object EventAnalytics {
           dayofmonth(col("ts")) <= 15, cents).otherwise(0L)).as("pre"),
         sum(when(col("event_type") === "purchase" &&
           dayofmonth(col("ts")) > 15, cents).otherwise(0L)).as("post"))
-      .withColumn("treat", pmod(call_function("md5_base60",
+      .withColumn("treat", pmod(md5Base60(
         concat(lit("did:"), col("user_id"))), lit(2L)))
     val cells = perUser.groupBy(col("treat"))
       .agg(count(lit(1)).as("n"), sum(col("pre")).as("spre"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** Dev sweep for geo8's grid knob (r14 verdict item 6): for each cell
   * size, the candidate-volume ledger ([[Spatial.polygonGridProfile]] —
@@ -25,9 +26,8 @@ object GeoGridSweep {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
     // the default the face would self-select on this corpus
-    def h(salt: String) = pmod(call_function("md5_base60",
+    def h(salt: String) = pmod(md5Base60(
       concat(lit(salt), col("s_suppkey").cast("string"))),
       lit(3000001L))
     val row = graft.Tables.supplier(spark, sfDir)

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** Graph signals over the document corpus — the web-graph layer of a
   * crawl-curation pipeline. PageRank is the classic link-quality prior
@@ -421,7 +422,6 @@ object Graphs {
   def randomWalks(s: SparkSession, dir: String, seedMod: Int = 97,
                   walkLen: Int = 8, nWalks: Int = 2): DataFrame =
     staged(s, dir, "walks", s"${seedMod}_${walkLen}_$nWalks") { finalPath =>
-      graft.functions.GraftFunctions.register(s)
       val sc = s.sparkContext
       val preexisting = sc.getPersistentRDDs.keySet
       try {
@@ -444,7 +444,7 @@ object Graphs {
           col("node"))
         for (t <- 1 to walkLen) {
           cur = cur.join(ranked, col("node") === col("src"))
-            .filter(col("rk") === pmod(call_function("md5_base60",
+            .filter(col("rk") === pmod(md5Base60(
               concat_ws(":", col("walk_id"), lit(t.toLong), col("node"))),
               col("outdeg")) + 1L)
             .select(col("walk_id"), col("dst").as("node"))
@@ -846,7 +846,6 @@ object Graphs {
     * stable: peeling is monotone, so count equality IS fixpoint. */
   def kcore(s: SparkSession, dir: String, k: Int = 4,
             rounds: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val sc = s.sparkContext
     val preexisting = sc.getPersistentRDDs.keySet
     // md5 degrees/neighbors drawn in RANK space and mapped to real ids
@@ -857,10 +856,10 @@ object Graphs {
       ranked
         .select(col("doc_id"), col("n_docs"),
           explode(sequence(lit(0L),
-            pmod(call_function("md5_base60",
+            pmod(md5Base60(
               concat(lit("kc:"), col("doc_id"))), lit(5L)))).as("j"))
         .select(col("doc_id").as("src"),
-          pmod(call_function("md5_base60",
+          pmod(md5Base60(
             concat(lit("kc:"), col("doc_id"), lit(":"), col("j"))),
             col("n_docs")).as("dst_rnk"))
         .join(rankToId(ranked), "dst_rnk")
@@ -939,7 +938,6 @@ object Graphs {
     * degree-apex ordering [[triangles]] uses applies verbatim. */
   def ktruss(s: SparkSession, dir: String, k: Int = 4,
              rounds: Int = 6): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val sc = s.sparkContext
     val preexisting = sc.getPersistentRDDs.keySet
     // hub-concentrated draws land in the first ⌈N/8⌉ RANKS, mapped to
@@ -950,10 +948,10 @@ object Graphs {
       ranked
         .select(col("doc_id"), col("n_docs"),
           explode(sequence(lit(0L),
-            lit(2L) + pmod(call_function("md5_base60",
+            lit(2L) + pmod(md5Base60(
               concat(lit("kt:"), col("doc_id"))), lit(6L)))).as("j"))
         .select(col("doc_id").as("src"),
-          pmod(call_function("md5_base60",
+          pmod(md5Base60(
             concat(lit("kt:"), col("doc_id"), lit(":"), col("j"))),
             greatest(expr("n_docs DIV 8"), lit(1L))).as("dst_rnk"))
         .join(rankToId(ranked), "dst_rnk")
@@ -1189,7 +1187,6 @@ object Graphs {
     * synchronous barriers with microseconds on the driver. */
   def mst(s: SparkSession, dir: String, rounds: Int = 16,
           localThreshold: Long = 100000L): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val sc = s.sparkContext
     val preexisting = sc.getPersistentRDDs.keySet
     // md5 coins draw the OUT-NEIGHBOR IN RANK SPACE (the r14 rewire,
@@ -1204,10 +1201,10 @@ object Graphs {
       ranked
         .select(col("doc_id"), col("n_docs"),
           explode(sequence(lit(0L),
-            pmod(call_function("md5_base60",
+            pmod(md5Base60(
               concat(lit("mst:"), col("doc_id"))), lit(4L)))).as("j"))
         .select(col("doc_id").as("src"),
-          pmod(call_function("md5_base60",
+          pmod(md5Base60(
             concat(lit("mst:"), col("doc_id"), lit(":"), col("j"))),
             col("n_docs")).as("dst_rnk"))
         .join(rankToId(ranked), "dst_rnk")
@@ -1219,7 +1216,7 @@ object Graphs {
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
       .select(col("a"), col("b"),
-        (lit(1L) + pmod(call_function("md5_base60",
+        (lit(1L) + pmod(md5Base60(
           concat(lit("mw:"), col("a"), lit(":"), col("b"))),
           lit(1000000L))).as("w"))
       .select(col("a"), col("b"), col("w"),
@@ -1380,7 +1377,6 @@ object Graphs {
     * frame by join, no collect anywhere. */
   def diameter(s: SparkSession, dir: String, maxDepth: Int = 16)
       : DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val sc = s.sparkContext
     val preexisting = sc.getPersistentRDDs.keySet
     // same "kc:" fixture as kcore, drawn in RANK space (r14 rewire).
@@ -1390,10 +1386,10 @@ object Graphs {
       ranked
         .select(col("doc_id"), col("n_docs"),
           explode(sequence(lit(0L),
-            pmod(call_function("md5_base60",
+            pmod(md5Base60(
               concat(lit("kc:"), col("doc_id"))), lit(5L)))).as("j"))
         .select(col("doc_id").as("src"),
-          pmod(call_function("md5_base60",
+          pmod(md5Base60(
             concat(lit("kc:"), col("doc_id"), lit(":"), col("j"))),
             col("n_docs")).as("dst_rnk"))
         .join(rankToId(ranked), "dst_rnk")
@@ -1487,7 +1483,6 @@ object Graphs {
   /** The capped md5 digraph shared by [[scc]] and [[condense]]. */
   private def sccEdges(s: SparkSession, dir: String, cap: Int)
       : DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // the cap selects the `cap` LOWEST-RANKED docs and draws dsts in
     // rank space [0, cap) (r14 rewire — rnk == doc_id on contiguous
     // corpora); md5 keys still hash the REAL ids. EAGER (rank pass) —
@@ -1496,10 +1491,10 @@ object Graphs {
     ranked.filter(col("rnk") < cap)
       .select(col("doc_id"),
         explode(sequence(lit(0L),
-          pmod(call_function("md5_base60",
+          pmod(md5Base60(
             concat(lit("scc:"), col("doc_id"))), lit(2L)))).as("j"))
       .select(col("doc_id").as("src"),
-        pmod(call_function("md5_base60",
+        pmod(md5Base60(
           concat(lit("scc:"), col("doc_id"), lit(":"), col("j"))),
           lit(cap.toLong)).as("dst_rnk"))
       .join(rankToId(ranked), "dst_rnk")

@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** Multimodal-column plumbing: media as opaque `binary` columns with a
   * typed metadata struct, plus a decode/feature-extract stage.
@@ -287,13 +288,12 @@ object Multimodal {
     * All-integer arithmetic. */
   def shotBounds(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val w = Window.partitionBy(col("doc_id")).orderBy(col("frame_idx"))
     decodeFeatures(s, dir).filter(col("doc_id") < 20)
       .select(col("doc_id"),
         explode(sequence(lit(0L), col("n_frames") - 1)).as("frame_idx"))
       .withColumn("luma",
-        pmod(call_function("md5_base60",
+        pmod(md5Base60(
           concat(col("doc_id").cast("string"), lit("#"),
             col("frame_idx").cast("string"))), lit(1000000L)))
       .withColumn("prev", lag(col("luma"), 1).over(w))
@@ -330,9 +330,8 @@ object Multimodal {
     * modality. */
   def phashPairs(s: SparkSession, dir: String,
                  maxHamming: Int = 6): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     def luma(i: Int) =
-      pmod(call_function("md5_base60",
+      pmod(md5Base60(
         concat(expr("doc_id div 7").cast("string"), lit(s"#$i"))) +
         when(lit(i % 9) === col("doc_id") % 7, lit(3L)).otherwise(lit(0L)),
         lit(256L))
@@ -390,7 +389,6 @@ object Multimodal {
   def mm9Silence(s: SparkSession, dir: String, flen: Int = 64)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val d = Tables.documents(s, dir)
     val asset = d.select(col("doc_id"),
       wavBytes(
@@ -407,7 +405,7 @@ object Multimodal {
           .as("nf"))
       .filter(col("nf") > 0)
       .select(col("doc_id"), col("byte_rate"),
-        posexplode(call_function("frame_energies", col("px"), lit(flen))))
+        posexplode(frameEnergies(col("px"), flen)))
       .select(col("doc_id"), col("byte_rate"),
         col("pos").cast("long").as("fidx"), col("col").as("energy"))
     val wd = Window.partitionBy(col("doc_id"))

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** Sequence packing and chunking — the two layout transforms between a
   * cleaned corpus and a training/retrieval system:
@@ -145,8 +146,7 @@ object Packing {
     * digest; zero shuffles, zero RNG state, whole row-pipeline. */
   def fimTransform(s: SparkSession, dir: String,
                    ratePct: Int = 50): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    def h(tag: String): Column = call_function("md5_base60",
+    def h(tag: String): Column = md5Base60(
       concat(lit(tag), col("doc_id").cast("string")))
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), TextAnalysis.tokens(lower(col("text"))).as("tk"))
@@ -230,7 +230,6 @@ object Packing {
     * feeds repartitionByRange for the physical layout. */
   def hilbertBlocks(s: SparkSession, dir: String,
                     blockBits: Int = 6): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val li = Tables.lineitem(s, dir)
     val keys = li.select(col("l_orderkey").as("x"), col("l_partkey").as("y"))
     val maxes = keys.agg(max(col("x")).as("x_max"), max(col("y")).as("y_max"))
@@ -239,7 +238,7 @@ object Packing {
     keys.crossJoin(broadcast(maxes))
       .select(quant(col("x"), col("x_max")).as("x"),
         quant(col("y"), col("y_max")).as("y"))
-      .withColumn("hd", call_function("hilbert_key", col("x"), col("y")))
+      .withColumn("hd", hilbertKey(col("x"), col("y")))
       .groupBy(shiftright(col("hd"), 32 - blockBits).as("h_block"))
       .agg(count(lit(1)).as("n_rows"),
         min(col("x")).as("x_min"), max(col("x")).as("x_max"),
@@ -297,13 +296,12 @@ object Packing {
     * (and what the insertion-stability spec drives with synthetic
     * edits). */
   def cdcChunksOf(docs: DataFrame, mod: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val n = length(col("text"))
     // native one-pass window scan (walks char offsets once, hashes
     // each 8-char window's byte slice in place) — bit-equal to the
     // HOF filter `pmod(hash60(substr(i-7, 8)), mod) = 0` it replaced,
     // which allocated a substring + interpreted lambda per POSITION
-    val boundaries = call_function("cdc_boundaries", col("text"), lit(mod))
+    val boundaries = cdcBoundaries(col("text"), mod)
     docs
       .select(col("doc_id"), col("text"),
         array_union(boundaries, array(n)).as("ends"))

@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** The full training-data preprocessing pipeline, fused: quality
   * filter → PII redaction → exact dedup → stratified sample →
@@ -32,7 +33,7 @@ object Preprocess {
     val t = col("text")
     // one projection computes every per-document signal; the PII
     // counts + scrub digest come from ONE fused native scan
-    val pii = TextAnalysis.piiScan(s, t)
+    val pii = piiScan(t)
     val enriched = Fixtures.withPii(Tables.documents(s, dir)).select(
       col("doc_id"), col("lang"),
       TextAnalysis.gopherKeep(t).as("keep"),
@@ -86,7 +87,6 @@ object Preprocess {
     * rollup. All counts exact longs; tokens_kept is the Σ token count
     * of the final set — the number a token-budget plan consumes. */
   def ccnetFunnel(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = col("text")
     val enriched = Tables.documents(s, dir).select(
         col("doc_id"), col("lang"),

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** Privacy-governance audits over the events table — the release
   * gate a training-data pipeline runs before user-derived data leaves
@@ -231,7 +232,6 @@ object Privacy {
     * the candidate sets shuffles after the first aggregation. */
   def dpMedian(s: SparkSession, dir: String,
                epsilonMicros: Long = 500000L): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     graft.plans.GraftStrategies.register(s) // per-type argmax rank filter
     val eps = epsilonMicros.toDouble / 1e6
     val perUser = Tables.events(s, dir)
@@ -242,7 +242,7 @@ object Privacy {
     val wCum = Window.partitionBy(col("event_type")).orderBy(col("c"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wType = Window.partitionBy(col("event_type"))
-    val u = (pmod(call_function("md5_base60",
+    val u = (pmod(md5Base60(
         concat_ws("", lit("dpm:"), col("event_type"), lit(":"),
           col("c"))), lit(1000000L))
       .cast("double") + lit(0.5)) / lit(1000000.0)
@@ -270,10 +270,9 @@ object Privacy {
   def dpCounts(s: SparkSession, dir: String,
                epsilonMicros: Long = 500000L): DataFrame = {
     val b = 1e6 / epsilonMicros.toDouble // Laplace scale 1/ε
-    val u = (pmod(call_function("md5_base60",
+    val u = (pmod(md5Base60(
         concat_ws("", lit("dp:"), col("event_type"))), lit(1000000L))
       .cast("double") + lit(0.5)) / lit(1000000.0)
-    graft.functions.GraftFunctions.register(s)
     Tables.events(s, dir)
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("n_users"))
@@ -320,14 +319,13 @@ object Privacy {
     * shuffles. */
   def dpTopK(s: SparkSession, dir: String, k: Int = 10,
              epsilonMicros: Long = 1000000L): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val eps = epsilonMicros.toDouble / 1e6
     val dfs = Tables.documents(s, dir)
       .select(col("doc_id"),
         explode(TextAnalysis.tokens(col("text"))).as("token"))
       .distinct()
       .groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val u = (pmod(call_function("md5_base60",
+    val u = (pmod(md5Base60(
         concat(lit("dpt:"), col("token"))), lit(1000000L))
       .cast("double") + lit(0.5)) / lit(1000000.0)
     dfs
@@ -364,7 +362,6 @@ object Privacy {
     * k-types grid via a broadcast type frame, one (type) aggregation
     * — map-side combinable end to end. */
   def randResponse(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.events(s, dir)
     val users = e.select(col("user_id")).distinct()
     val types = broadcast(e.select(col("event_type")).distinct())
@@ -375,7 +372,7 @@ object Privacy {
       .select(col("user_id"), col("event_type"),
         coalesce(col("b"), lit(0L)).as("b"))
       .withColumn("flip",
-        when(pmod(call_function("md5_base60",
+        when(pmod(md5Base60(
           concat_ws("", lit("rr:"), col("event_type"), lit(":"),
             col("user_id"))), lit(4L)) === 3L, 1L).otherwise(0L))
       .withColumn("r",

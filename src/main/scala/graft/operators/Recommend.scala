@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** Co-occurrence mining over order baskets — the counting kernel under
   * association rules, item-item collaborative filtering and
@@ -207,9 +208,8 @@ object Recommend {
   }
 
   private def alsRatings(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     def qInit(comp: String): Column =
-      (pmod(call_function("md5_base60",
+      (pmod(md5Base60(
         concat_ws("", lit(s"alsq$comp:"), col("l_partkey"))),
         lit(2001L)) - lit(1000L))
     Tables.lineitem(s, dir)
@@ -472,10 +472,8 @@ object Recommend {
     // and materialized the full C(b,3) struct array per basket before
     // exploding it; the Generator streams identical (b1, b2, b3) rows
     // (i<j<k over the sorted set, <3 brands emits nothing)
-    graft.functions.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
     val triples = baskets
-      .select(call_function("combo3_gen", col("brs"))
+      .select(combo3Gen(col("brs"))
         .as(Seq("b1", "b2", "b3")))
       .groupBy(col("b1"), col("b2"), col("b3"))
       .agg(count(lit(1)).as("n_abc"))

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
 
 /** Relational core: aggregation, joins, windows, grouping sets, set ops,
@@ -1128,7 +1129,7 @@ object Relational {
     // P[Poisson(1) <= k] for k = 0..5, 10dp literals — the contract
     val cdf = Seq(0.3678794412, 0.7357588824, 0.9196986030,
       0.9810118431, 0.9963401532, 0.9994058152)
-    val u = Sampling.hash60(concat_ws(":", col("o_orderkey"), col("r"))) /
+    val u = md5Base60(concat_ws(":", col("o_orderkey"), col("r"))) /
       lit(1152921504606846976.0) // 2^60 — exact binary fraction
     val w = cdf.map(t => when(u >= t, 1L).otherwise(0L)).reduce(_ + _)
     Tables.orders(s, dir)
@@ -1224,7 +1225,7 @@ object Relational {
     }
     val fact = s.read.parquet(base)
     val dim = Tables.documents(s, dir).select(col("lang")).distinct()
-      .withColumn("tier", pmod(Sampling.hash60(col("lang")), lit(2)))
+      .withColumn("tier", pmod(md5Base60(col("lang")), lit(2)))
     fact.join(broadcast(dim.filter(col("tier") === 0)), Seq("lang"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
@@ -2217,7 +2218,6 @@ object Relational {
     * one IEEE expression rounded to micro-cents. */
   def stat31Permutation(s: SparkSession, dir: String,
                         nPerm: Int = 100): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val o = Tables.orders(s, dir).select(
       col("o_orderkey").as("okey"),
       round(col("o_totalprice") * 100).cast("long").as("cents"),
@@ -2237,7 +2237,7 @@ object Relational {
     val perm = o
       .select(col("okey"), col("cents"),
         explode(sequence(lit(0), lit(nPerm - 1))).as("b"))
-      .withColumn("lbl", pmod(call_function("md5_base60",
+      .withColumn("lbl", pmod(md5Base60(
         concat_ws("", lit("perm:"), col("b"), lit(":"), col("okey"))),
         lit(2L)))
       .groupBy(col("b"))
@@ -2280,7 +2280,6 @@ object Relational {
   def stat32BhFdr(s: SparkSession, dir: String, nPerm: Int = 100,
                   alphaMicros: Long = 50000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.events(s, dir).select(
       col("event_id").as("eid"), col("event_type"),
       round(col("value") * 100).cast("long").as("cents"),
@@ -2299,7 +2298,7 @@ object Relational {
     val perm = e
       .select(col("eid"), col("event_type"), col("cents"),
         explode(sequence(lit(0), lit(nPerm - 1))).as("b"))
-      .withColumn("lbl", pmod(call_function("md5_base60",
+      .withColumn("lbl", pmod(md5Base60(
         concat_ws("", lit("bhf:"), col("b"), lit(":"), col("eid"))),
         lit(2L)))
       .groupBy(col("event_type"), col("b"))
@@ -2567,8 +2566,7 @@ object Relational {
   /** The synthesized change log of [[inc2CdcCollapse]], exposed for
     * the streaming parity spec: (key, seq, op, price) rows. */
   def cdcLog(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    def h(tag: String): Column = pmod(call_function("md5_base60",
+    def h(tag: String): Column = pmod(md5Base60(
       concat(lit(s"cdc:$tag:"), col("o_orderkey"))), lit(1000000L))
     val base = Tables.orders(s, dir).select(col("o_orderkey").as("key"),
       round(col("o_totalprice") * 100).cast("long").as("p0"),

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** Hybrid retrieval — the fusion layer that turns the engine's sparse
   * (BM25, TextAnalysis.bm25) and dense (cosine ANN, Similarity) arms
@@ -192,7 +193,6 @@ object Retrieval {
                     seed: Seq[String] = Seq("spark", "query", "filter"),
                     fbK: Int = 10, expand: Int = 5, k: Int = 10,
                     buckets: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // The RM3 expansion MODEL (the ≤`expand` expanded terms) is a pure
     // function of (corpus, seed, fbK, expand, buckets) — staged once
     // per fingerprint (r14), so warm calls skip the whole feedback
@@ -218,7 +218,7 @@ object Retrieval {
     Staging.buildOnce(docBase) {
       s.read.parquet(s"$base/postings")
         .select(col("doc_id"), col("term"), col("tf"), col("dl"))
-        .withColumn("db", pmod(call_function("md5_base60",
+        .withColumn("db", pmod(md5Base60(
           col("doc_id").cast("string")), lit(buckets.toLong)))
         .write.mode("overwrite").partitionBy("db")
         .parquet(s"$docBase/postings")

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** Sampling operators for a training-data pipeline.
   *
@@ -29,20 +30,12 @@ object Sampling {
     * The hash is the native codegen'd md5_base60 expression (digest
     * bytes → long; no hex-string round-trip per row). */
   def bucket100(key: Column): Column =
-    pmod(hash60(key.cast("string")), lit(100))
-
-  /** Native md5-60 as a Column (registers the function on the active
-    * session — idempotent; pure-Column helpers have no session handle). */
-  private[graft] def hash60(key: Column): Column = {
-    graft.functions.GraftFunctions.register(SparkSession.active)
-    call_function("md5_base60", key)
-  }
+    pmod(md5Base60(key.cast("string")), lit(100))
 
   /** Stratified sample of `docs` by `lang`: keep `rates(lang)` percent
     * of each stratum (`default` percent for unlisted strata). */
   def stratifiedByLang(docs: DataFrame, rates: Map[String, Int],
                        default: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val rate = rates.foldLeft(lit(default)) { case (acc, (lang, pct)) =>
       when(col("lang") === lang, lit(pct)).otherwise(acc)
     }
@@ -105,9 +98,8 @@ object Sampling {
     * cross the shuffle, no sort buffers — at 100 TB the sample, not the
     * corpus, is what moves. */
   def topNPerStratum(s: SparkSession, docs: DataFrame, n: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     graft.plans.GraftStrategies.register(s)
-    val h = hash60(col("doc_id").cast("string"))
+    val h = md5Base60(col("doc_id").cast("string"))
     docs
       .withColumn("h", h)
       .withColumn("rn", row_number().over(Window.partitionBy(col("lang"))
@@ -130,7 +122,7 @@ object Sampling {
     docs.select(col("doc_id"))
       .select(col("doc_id"), explode(array(
         (0 until epochs).map(e => lit(e.toLong)): _*)).as("epoch"))
-      .withColumn("order_key", hash60(concat(col("epoch").cast("string"),
+      .withColumn("order_key", md5Base60(concat(col("epoch").cast("string"),
         lit(":"), col("doc_id").cast("string"))))
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("epoch"))
@@ -156,13 +148,12 @@ object Sampling {
     * deterministic: no RNG state anywhere. */
   def curriculumOrder(s: SparkSession, docs: DataFrame,
                       stages: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val ranked = Ranking.withGlobalRank(
       docs.select(col("doc_id"), col("n_chars")), "rn", "n",
       Seq(col("n_chars").asc, col("doc_id").asc))
       .withColumn("stage", Ranking.ntileOfRank(col("rn"), col("n"), stages))
       .withColumn("shuffle_key",
-        hash60(concat(lit("cur:"), col("doc_id").cast("string"))))
+        md5Base60(concat(lit("cur:"), col("doc_id").cast("string"))))
     Ranking.withGlobalRank(ranked, "position", "n2",
       Seq(col("stage").asc, col("shuffle_key").asc, col("doc_id").asc))
       .select(col("doc_id"), col("n_chars"), col("stage"),
@@ -179,10 +170,9 @@ object Sampling {
     * pre-count pass.
     */
   def weightedSample(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // 60 bits of md5 / 2^60: an exact binary fraction — bit-identical
     // in any engine that parses the same hex
-    val u = hash60(col("doc_id").cast("string"))
+    val u = md5Base60(col("doc_id").cast("string"))
       .cast("double") / lit(1152921504606846976.0) // 2^60
     val w = least(lit(1.0), col("n_chars") / lit(400.0))
     docs.select(col("doc_id"), col("lang"),
@@ -199,7 +189,7 @@ object Sampling {
     * is a perfectly balanced dataset, reproducible on any engine.
     */
   def balancedSample(s: SparkSession, docs: DataFrame): DataFrame = {
-    val h = hash60(col("doc_id").cast("string"))
+    val h = md5Base60(col("doc_id").cast("string"))
     val caps = docs.groupBy(col("lang")).count()
       .withColumn("cap", min(col("count")).over(Window.partitionBy()))
       .select(col("lang"), col("cap"))
@@ -224,10 +214,9 @@ object Sampling {
     * scale. The percentage samplers above can't promise an exact count
     * (binomial spread); eval sets and benchmarks often must have one. */
   def exactKSample(docs: DataFrame, k: Int = 100): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"), col("lang"),
-        hash60(col("doc_id").cast("string")).as("h"))
+        md5Base60(col("doc_id").cast("string")).as("h"))
       .orderBy(col("h").asc, col("doc_id").asc)
       .limit(k)
   }
@@ -282,8 +271,7 @@ object Sampling {
     * map over doc-count rows plus one TakeOrderedAndProject — the
     * sampler adds zero shuffles to the weigher. */
   def gumbelTopK(s: SparkSession, dir: String, k: Int = 50): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val u = (pmod(call_function("md5_base60",
+    val u = (pmod(md5Base60(
         concat_ws("", lit("gum:"), col("doc_id"))), lit(1000000L))
       .cast("double") + lit(0.5)) / lit(1000000.0)
     TextAnalysis.dsirWeights(s, dir)
@@ -318,7 +306,6 @@ object Sampling {
     * combinable end to end. */
   def horvitzThompson(s: SparkSession, dir: String,
                       targetPermille: Int = 50): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("n_chars"))
     val stats = broadcast(d.agg(count(lit(1)).as("n_pop"),
@@ -331,7 +318,7 @@ object Sampling {
         round(lit(1e6) * col("n_target").cast("double") *
           col("n_chars").cast("double") /
           col("true_total").cast("double")).cast("long")))
-      .filter(pmod(call_function("md5_base60",
+      .filter(pmod(md5Base60(
         concat(lit("ht:"), col("doc_id"))), lit(1000000L)) < col("pm"))
       .select(col("n_pop"), col("true_total"),
         round(lit(1e6) * col("n_chars").cast("double") /
@@ -371,7 +358,6 @@ object Sampling {
     * sub-k corpora must special-case it upstream. */
   def prioritySample(s: SparkSession, dir: String,
                      k: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("n_chars").as("w"))
     val stats = broadcast(d.agg(count(lit(1)).as("n_pop"),
@@ -379,7 +365,7 @@ object Sampling {
     val top = d
       .select(col("doc_id"), col("w"),
         (col("w").cast("double") * lit(1152921504606846976L) /
-          (call_function("md5_base60",
+          (md5Base60(
             concat(lit("ps:"), col("doc_id"))) + 1L).cast("double"))
           .as("q"))
       .orderBy(col("q").desc, col("doc_id")).limit(k + 1)

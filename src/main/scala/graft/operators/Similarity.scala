@@ -1,9 +1,9 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
   * array<float>, label).
@@ -27,11 +27,9 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Cosine via graft's native codegen'd expression (one fused loop —
-    * see functions.CosineSimilarity); requires GraftFunctions.register
-    * on the session, which every operator entry point does. */
+    * see functions.CosineSimilarity) over double-cast vectors. */
   def cosine(a: Column, b: Column): Column =
-    call_function("cosine_sim",
-      a.cast("array<double>"), b.cast("array<double>"))
+    cosineSim(a.cast("array<double>"), b.cast("array<double>"))
 
   /** The query row: a fixed corpus vector (vec_id = 0) so results are
     * reproducible without external input. */
@@ -44,7 +42,6 @@ object Similarity {
     * no global sort). Ordering is on the rounded score with vec_id
     * tiebreak, pinned for the oracle. */
   def annBruteForce(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
     e.crossJoin(broadcast(queryVec(s, dir)))
       .select(col("vec_id"), col("label"),
@@ -74,7 +71,7 @@ object Similarity {
     * the same side of the > 0 boundary (bit-equivalence vs the HOF form
     * pinned in FunctionsSpec). */
   private def sigBits(v: Column, bits: Int): Column =
-    call_function("plane_sig", v.cast("array<double>"), planeLits(bits))
+    planeSig(v.cast("array<double>"), planeLits(bits))
 
   /** Band values: the `bands` integers formed by consecutive w-bit
     * slices of the bit array (big-endian within the slice). */
@@ -96,7 +93,6 @@ object Similarity {
   def annLsh(s: SparkSession, dir: String, k: Int = 10,
              bits: Int = 16, bands: Int = 4,
              probeBands: Int = Int.MaxValue): DataFrame = {
-    GraftFunctions.register(s)
     val w = bits / bands
     val corpus = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("embedding"),
@@ -138,40 +134,21 @@ object Similarity {
   def annLshIndexed(s: SparkSession, dir: String, k: Int = 10,
                     bits: Int = 16, bands: Int = 4,
                     probeBands: Int = Int.MaxValue): DataFrame = {
-    GraftFunctions.register(s)
-    val w = bits / bands
-    // v1 = plane-seed/band-arithmetic version — bump on semantic change
-    val base = Staging.base("lsh_index_v1", dir, s"b${bits}x$bands",
-      "embeddings")
-    Staging.buildOnce(base) {
-      Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), col("embedding"),
-          posexplode(bandVals(sigBits(col("embedding"), bits), bands, w)))
-        .withColumnsRenamed(Map("pos" -> "band", "col" -> "bval"))
-        .write.mode("overwrite").partitionBy("band", "bval")
-        .parquet(s"$base/bands")
-    }
-    // the query's band values, collected driver-side (4 ints — a
-    // model-sized collect) so the index read is a static OR-of-equalities
-    // over BOTH partition columns. probeBands < bands probes only the
-    // first b bands — the same knob annLsh exposes (lshBandCurve sweeps
-    // it against THIS reader since r14); a dropped band just removes
-    // its partition directories from the static filter.
-    val qBands = queryVec(s, dir)
-      .select(posexplode(bandVals(sigBits(col("q"), bits), bands, w)))
-      .collect().map(r => (r.getInt(0), r.getInt(1)))
-      .filter(_._1 < math.min(probeBands, bands))
-    annLshProbe(s, dir, s.read.parquet(s"$base/bands"), qBands, k)
+    // probeBands < bands probes only the first b bands — the knob
+    // lshBandCurve sweeps; a dropped band removes its partition
+    // directories from the static filter
+    val (qBands, idx) = lshIndexParts(s, dir, bits, bands)
+    annLshProbe(s, dir, idx, qBands.filter(_._1 < math.min(probeBands, bands)), k)
   }
 
   /** The staged band index + collected query band values — the two
-    * one-time pieces [[annLshIndexed]] derives per call, exposed so a
+    * one-time pieces [[annLshIndexed]] derives per call, shared so a
     * multi-depth sweep ([[lshBandCurve]]) pays the collect job and the
     * partitioned-directory listing once instead of once per depth. */
   private def lshIndexParts(s: SparkSession, dir: String, bits: Int = 16,
                             bands: Int = 4): (Array[(Int, Int)], DataFrame) = {
-    GraftFunctions.register(s)
     val w = bits / bands
+    // v1 = plane-seed/band-arithmetic version — bump on semantic change
     val base = Staging.base("lsh_index_v1", dir, s"b${bits}x$bands",
       "embeddings")
     Staging.buildOnce(base) {
@@ -224,7 +201,6 @@ object Similarity {
     * recall(multiprobe) ≥ recall(lsh). */
   def annLshMultiprobe(s: SparkSession, dir: String, k: Int = 10,
                        bits: Int = 16, bands: Int = 4): DataFrame = {
-    GraftFunctions.register(s)
     val w = bits / bands
     val corpus = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("embedding"),
@@ -293,7 +269,6 @@ object Similarity {
   private def lshIncrQuery(s: SparkSession, dir: String, k: Int,
                            bits: Int, bands: Int,
                            gens: String => Seq[String]): DataFrame = {
-    GraftFunctions.register(s)
     val w = bits / bands
     val e = Tables.embeddings(s, dir)
     val splitAt = e.agg(max(col("vec_id"))).head().getLong(0) / 2
@@ -346,9 +321,7 @@ object Similarity {
     * deterministic: the higher vec_id of any pair ≥ threshold goes, so
     * the kept set is reproducible on any engine (DuckDB oracle replays
     * it literally). */
-  def semDedup(s: SparkSession, embs: DataFrame,
-               threshold: Double = 0.995): DataFrame = {
-    GraftFunctions.register(s)
+  def semDedup(embs: DataFrame, threshold: Double = 0.995): DataFrame = {
     val e = embs.select(col("vec_id"), col("label"),
       col("embedding").cast("array<double>").as("v"))
     val a = e.select(col("label"), col("vec_id").as("vec_a"), col("v").as("va"))
@@ -364,7 +337,6 @@ object Similarity {
 
   def embNearDup(s: SparkSession, dir: String,
                  threshold: Double = 0.3): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir).filter(col("vec_id") < 60)
     val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("eb"))
@@ -390,7 +362,6 @@ object Similarity {
     * engines agree on the exact candidate set. */
   def nearDupLsh(s: SparkSession, dir: String, threshold: Double = 0.4,
                  bits: Int = 16, bands: Int = 4): DataFrame = {
-    GraftFunctions.register(s)
     val w = bits / bands
     val e = Tables.embeddings(s, dir)
     val sigs = e.select(col("vec_id"),
@@ -460,7 +431,6 @@ object Similarity {
 
   def annIvf(s: SparkSession, dir: String, k: Int = 10,
              nprobe: Int = 3, sharedCents: Option[Column] = None): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     // K model rows, not data; callers running several IVF-family methods
     // (annRecall) pass the collected model in so it builds once
@@ -497,7 +467,6 @@ object Similarity {
     */
   def annIvfIndexed(s: SparkSession, dir: String, k: Int = 10,
                     nprobe: Int = 3): DataFrame = {
-    GraftFunctions.register(s)
     // the index path is keyed by path AND a (size, mtime) fingerprint
     // of the source parquet: regenerate the dataset and the old index
     // is simply a different (ignored) directory — a stale index can
@@ -601,7 +570,6 @@ object Similarity {
   private def ivfIncrQuery(s: SparkSession, dir: String, k: Int,
                            nprobe: Int,
                            gens: String => Seq[String]): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val splitAt = e.agg(max(col("vec_id"))).head().getLong(0) / 2
     val base = Staging.base("ivf_incr_v2", dir, s"s$splitAt", "embeddings")
@@ -662,7 +630,6 @@ object Similarity {
     * shortlist. */
   def annScalarQuant(s: SparkSession, dir: String, k: Int = 10,
                      shortlist: Int = 50): DataFrame = {
-    GraftFunctions.register(s)
     val q8 = (v: Column) => transform(v.cast("array<double>"),
       x => greatest(lit(-127L), least(lit(127L), round(x * 127).cast("long"))))
     val e = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
@@ -710,7 +677,6 @@ object Similarity {
 
   def annBinaryQuant(s: SparkSession, dir: String, k: Int = 10,
                      shortlist: Int = 50): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("embedding"),
         bqHalf(col("embedding"), 0).as("c_lo"),
@@ -740,7 +706,6 @@ object Similarity {
     * (same codes, same tie-breaks — shared oracle, Round9Spec pin). */
   def annBinaryQuantIndexed(s: SparkSession, dir: String, k: Int = 10,
                             shortlist: Int = 50): DataFrame = {
-    GraftFunctions.register(s)
     val base = Staging.base("bq_index_v1", dir, "", "embeddings")
     Staging.buildOnce(base) {
       Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
@@ -786,7 +751,6 @@ object Similarity {
     * bit-for-bit). */
   def annPq(s: SparkSession, dir: String, k: Int = 10, m: Int = 8,
             dsub: Int = 8, ksub: Int = 16, shortlist: Int = 50): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     // codebook: subspace slices of corpus vectors 1..ksub, 6dp-rounded
     // (a K-row model collect, like annIvf's quantizer — never data)
@@ -801,7 +765,7 @@ object Similarity {
       }, "j", "c")
     def subv(v: Column, mi: Int): Column = slice(v, mi * dsub + 1, dsub)
     def dist(a: Column, b: Column): Column =
-      round(call_function("l2_sq", a, b), 6)
+      round(l2Sq(a, b), 6)
     // encode: per subspace, the nearest codeword id (tie → lower id).
     // The subspace slices are MATERIALIZED as a per-row column first
     // (r16): a lambda body is re-evaluated per array element, so
@@ -894,7 +858,7 @@ object Similarity {
     private def subv(v: Column, mi: Int): Column =
       slice(v, mi * dsub + 1, dsub)
     private def dist(a: Column, b: Column): Column =
-      round(call_function("l2_sq", a, b), 6)
+      round(l2Sq(a, b), 6)
     /** The residual's subspace slices as ONE per-row column — a lambda
       * body re-evaluates per element, so inlining the residual into
       * [[codes]] re-ran the zip_with residual + slice once per codeword
@@ -932,7 +896,6 @@ object Similarity {
                m: Int = 8, dsub: Int = 8, ksub: Int = 16,
                shortlist: Int = 50,
                sharedCents: Option[Column] = None): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val cents = sharedCents.getOrElse(centLiteral(quantizer(e).collect()))
     val kit = pqKit(e, cents, m, dsub, ksub)
@@ -982,7 +945,6 @@ object Similarity {
   def annIvfPqIndexed(s: SparkSession, dir: String, k: Int = 10,
                       nprobe: Int = 3, m: Int = 8, dsub: Int = 8,
                       ksub: Int = 16, shortlist: Int = 50): DataFrame = {
-    GraftFunctions.register(s)
     // v2 = quantizer/codebook/encode version — bump on semantic change
     // (v2: the codebook is persisted beside the model, so queries read
     // a ksub-row file instead of scanning the corpus for it)
@@ -1056,7 +1018,6 @@ object Similarity {
     */
   def kmeansLloyd(s: SparkSession, dir: String, k: Int = 8,
                   iters: Int = 2): DataFrame = {
-    GraftFunctions.register(s)
     // cache (inside the staged build only): the corpus feeds iters+1
     // TRAINING jobs (init collect, one assignment+update collect per
     // round) — without it each round re-reads and re-casts the
@@ -1072,7 +1033,7 @@ object Similarity {
     // folds left-to-right in double
     def dists(model: Seq[(Int, Seq[Double])])(v: Column): Column =
       transform(ModelLit.cells(model, "cell", "c"), c =>
-        struct(round(call_function("l2_sq", v, c.getField("c")), 6)
+        struct(round(l2Sq(v, c.getField("c")), 6)
           .as("dist"), c.getField("cell").as("cell")))
     // order-independent mean: sum exact integer micros (6dp quantized),
     // divide once — float summation order differs between engines (and
@@ -1160,13 +1121,12 @@ object Similarity {
     * assignment pass + a k-row aggregation with exact integer-micro
     * cost sums. */
   def kmeansppInit(s: SparkSession, dir: String, k: Int = 6): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     e.cache()
     def gumbel(round: Int): Column =
       org.apache.spark.sql.functions.round(-log(-log(
-        (pmod(call_function("md5_base60",
+        (pmod(md5Base60(
           concat_ws("", lit(s"kpp:$round:"), col("vec_id"))),
           lit(1000000L)).cast("double") + lit(0.5)) / lit(1000000.0))), 6)
     var model = Seq.empty[(Long, Seq[Double])]
@@ -1182,7 +1142,7 @@ object Similarity {
       for (j <- 1 until k) {
         val cents = ModelLit.mat(model.map(_._2))
         val d2min = array_min(transform(cents, c =>
-          round(call_function("l2_sq", col("v"), c), 6)))
+          round(l2Sq(col("v"), c), 6)))
         model = model :+ pick(
           round(log(d2min + lit(1e-6)), 6) + gumbel(j))
       }
@@ -1192,7 +1152,7 @@ object Similarity {
       model.zipWithIndex.map { case ((_, c), i) => (i.toLong, c) },
       "cell", "c")
     val assign = array_min(transform(cents, c =>
-      struct(round(call_function("l2_sq", col("v"), c.getField("c")), 6)
+      struct(round(l2Sq(col("v"), c.getField("c")), 6)
         .as("dist"), c.getField("cell").as("cell"))))
     val centerIds = model.zipWithIndex.map { case ((id, _), i) =>
       when(col("center_idx") === i.toLong, lit(id)) }
@@ -1257,11 +1217,10 @@ object Similarity {
     * is bit-identical. */
   def randomProjection(s: SparkSession, dir: String,
                        outDim: Int = 16): DataFrame = {
-    GraftFunctions.register(s)
     val scale = 1.0d / math.sqrt(outDim.toDouble)
     val signs = s.range(outDim).select(col("id").cast("int").as("j"))
       .select(col("j"), transform(sequence(lit(0), lit(63)), i =>
-        when(call_function("md5_base60",
+        when(md5Base60(
           concat(lit("rp_"), col("j"), lit("_"), i)) % 2 === 0, lit(1.0d))
           .otherwise(lit(-1.0d))).as("sgn"))
     Tables.embeddings(s, dir)
@@ -1455,7 +1414,6 @@ object Similarity {
     * oracle replays the identical 8 selection rounds in chained CTEs. */
   def mmrSelect(s: SparkSession, dir: String, kSel: Int = 8,
                 shortlist: Int = 40): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val short = e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(
@@ -1522,7 +1480,6 @@ object Similarity {
     * before ranking, vec_id breaks ties; k odd ⇒ no vote tie. */
   def knnClassify(s: SparkSession, dir: String, nQueries: Int = 32,
                   k: Int = 5): DataFrame = {
-    GraftFunctions.register(s)
     // the top-k rank filter below only compiles through the heap exec
     // when the strategy is on THIS session — in-battery a sibling face
     // had always registered it, standalone the face silently fell back
@@ -1567,7 +1524,6 @@ object Similarity {
     * row_number per anchor — the pinned-ordering convention. */
   def hardNegatives(s: SparkSession, dir: String, k: Int = 5,
                     qMod: Int = 83, qCap: Int = 830): DataFrame = {
-    GraftFunctions.register(s)
     graft.plans.GraftStrategies.register(s) // heap exec for the rank filter
     import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(s, dir)

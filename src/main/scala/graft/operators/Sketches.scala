@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** Count-min sketch over the token stream — the fixed-memory frequency
   * summary that complements the engine's other sketches (HLL distinct
@@ -37,7 +38,7 @@ object Sketches {
   private def cells(token: Column): Column = explode(array(
     (0 until Depth).map { i =>
       struct(lit(i.toLong).as("r"),
-        pmod(Sampling.hash60(concat(lit(s"cms${i}_"), token)),
+        pmod(md5Base60(concat(lit(s"cms${i}_"), token)),
           lit(Width.toLong)).as("b"))
     }: _*))
 

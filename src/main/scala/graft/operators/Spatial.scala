@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** Spatial operators — the grid-cell bucketed candidate-join family.
   *
@@ -43,14 +44,13 @@ object Spatial {
   val DomainMicros: Long = 100000000L
 
   private def coord(salt: String): Column =
-    pmod(call_function("md5_base60",
+    pmod(md5Base60(
       concat(lit(salt), col("c_custkey").cast("string"))),
       lit(DomainMicros))
 
   /** Deterministic point cloud: one (id, x, y) per customer, micro-unit
     * integer coordinates hashed from the salted key. */
   def points(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.customer(s, dir)
       .select(col("c_custkey").as("id"),
         coord("x:").as("x"), coord("y:").as("y"))
@@ -269,7 +269,6 @@ object Spatial {
     * the pruning decision and the distributed predicate. */
   def knnJoinIndexed(s: SparkSession, dir: String, k: Int = 5,
                      g: Long = 2000000L): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // ceil, not floor: coords reach DomainMicros-1, so with a g that
     // does not divide the domain a floor'd axis count would collide
     // cell ids across rows (cx reaches floor((Domain-1)/g) inclusive)
@@ -482,9 +481,8 @@ object Spatial {
     * cells are ordinary hot keys (AQE skew-join). */
   def polygonContains(s: SparkSession, dir: String,
                       gridMicros: Long = 0L): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     def h(salt: String, m: Long): Column =
-      pmod(call_function("md5_base60",
+      pmod(md5Base60(
         concat(lit(salt), col("s_suppkey").cast("string"))), lit(m))
     val pol = Tables.supplier(s, dir).select(
         col("s_suppkey").as("pid"),
@@ -531,7 +529,7 @@ object Spatial {
     // at sf1). Same division-free BIGINT arithmetic, same edge order.
     pts.join(polCells, "cell")
       .filter(abs(px - cxc) <= r && abs(py - cyc) <= r)
-      .filter(call_function("octagon_contains", px, py, cxc, cyc, r))
+      .filter(octagonContains(px, py, cxc, cyc, r))
       .groupBy(col("pid"))
       .agg(count(lit(1)).as("n_inside"), sum(col("id")).as("sum_ids"))
   }
@@ -567,9 +565,8 @@ object Spatial {
     * the same frames the face joins. */
   def polygonGridProfile(s: SparkSession, dir: String,
                          gridMicros: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     def h(salt: String, m: Long): Column =
-      pmod(call_function("md5_base60",
+      pmod(md5Base60(
         concat(lit(salt), col("s_suppkey").cast("string"))), lit(m))
     val pol = Tables.supplier(s, dir).select(
         col("s_suppkey").as("pid"),
@@ -580,7 +577,7 @@ object Spatial {
     val cand = pts.join(polCells, "cell")
     val bbox = cand.filter(abs(col("x") - col("cx")) <= col("r") &&
       abs(col("y") - col("cy")) <= col("r"))
-    val trueMatches = bbox.filter(call_function("octagon_contains",
+    val trueMatches = bbox.filter(octagonContains(
       col("x"), col("y"), col("cx"), col("cy"), col("r")))
     import s.implicits._
     Seq((gridMicros, polCells.count(), cand.count(), bbox.count(),

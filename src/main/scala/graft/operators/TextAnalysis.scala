@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** Text-analysis operators for a training-data pipeline: language ID,
   * quality scoring, token counting, document fingerprinting. All pure
@@ -141,29 +142,15 @@ object TextAnalysis {
       UrlRe, "<URL>"), EmailRe, "<EMAIL>"), Ipv4Re, "<IP>"),
       PhoneRe, "<PHONE>")
 
-  /** The whole PII battery (4 counts on the original text + the
-    * precedence-ordered scrub) as ONE struct column via the native
-    * `pii_scan` kernel ([[graft.functions.PiiImpl.scan]]) —
-    * match-for-match equal to the stacked [[piiCount]]/[[redact]]
-    * regex exprs it replaces (bit-equality pinned in FunctionsSpec,
-    * which keeps the regex forms as the executable reference). The
-    * regex battery re-ran a backtracking state machine per pattern per
-    * row — the slowest per-row path in the engine and the streaming
-    * preprocess bottleneck; the kernel is 8 allocation-light ASCII
-    * scans. */
-  def piiScan(s: SparkSession, t: Column): Column = {
-    graft.functions.GraftFunctions.register(s)
-    call_function("pii_scan", t)
-  }
-
   /** PII redaction: count and scrub URLs, emails, IPv4s and phone
     * numbers; counts are taken on the original text. A pure narrow
-    * projection — one fused native scan ([[piiScan]]) inside
+    * projection — one fused native `pii_scan` pass
+    * ([[graft.functions.PiiImpl.scan]]) inside
     * whole-stage codegen, no shuffle, linear scale-out. The redacted
     * text is emitted as an md5 digest so the full transform is
     * hash-checkable without shipping the body. */
   def piiRedact(docs: DataFrame): DataFrame = {
-    val p = piiScan(docs.sparkSession, col("text"))
+    val p = piiScan(col("text"))
     docs.select(col("doc_id"),
       p.getField("n_urls").as("n_urls"),
       p.getField("n_emails").as("n_emails"),
@@ -172,25 +159,11 @@ object TextAnalysis {
       md5(p.getField("redacted").cast("binary")).as("redacted_hash"))
   }
 
-  /** The Gopher battery's integer sufficient statistics as ONE struct
-    * column via the native `gopher_scan` kernel
-    * ([[graft.functions.GopherImpl.scan]]) — exact twin of the
-    * interpreted-HOF/5×split stack it replaces (bit-equality pinned in
-    * FunctionsSpec). Only integers cross the kernel boundary; every
-    * float ratio and HALF_UP rounding stays in the same Catalyst
-    * expressions as before. */
-  def gopherStats(s: SparkSession, t: Column): Column = {
-    graft.functions.GraftFunctions.register(s)
-    call_function("gopher_scan", t)
-  }
-
   /** The fused Gopher keep decision as one column expression (same
     * rounded comparisons as [[gopherFilter]]'s flags) — for pipelines
-    * that gate on quality without materializing the per-rule report.
-    * Callers must have registered graft functions ([[gopherStats]]
-    * does it when given the session). */
+    * that gate on quality without materializing the per-rule report. */
   def gopherKeep(t: Column): Column = {
-    val g = call_function("gopher_scan", t)
+    val g = gopherScan(t)
     val nWords = g.getField("n_words")
     val meanLen = round(g.getField("sum_len")
       .cast("double") / nWords, 4)
@@ -206,10 +179,11 @@ object TextAnalysis {
     * stopword presence — each emitted as its own flag plus the combined
     * keep decision, so downstream can both filter and report per-rule
     * rejection rates. One narrow projection; the integer stats come
-    * from one native `gopher_scan` pass ([[gopherStats]]) and the
+    * from one native `gopher_scan` pass
+    * ([[graft.functions.GopherImpl.scan]]) and the
     * ratio/rounding arithmetic runs in codegen. */
   def gopherFilter(docs: DataFrame): DataFrame = {
-    val g = gopherStats(docs.sparkSession, col("text"))
+    val g = gopherScan(col("text"))
     val nWords = g.getField("n_words")
     val meanLen = g.getField("sum_len").cast("double") / nWords
     val alphaFrac = g.getField("n_alpha").cast("double") / nWords
@@ -275,8 +249,7 @@ object TextAnalysis {
     * measured 11.6s → 1.5s at sf0.1). A native expression evaluates
     * its child exactly once wherever Catalyst moves it. */
   private[operators] def grams(tk: Column, n: Int, distinct: Boolean): Column = {
-    graft.functions.GraftFunctions.register(SparkSession.active)
-    val g = call_function("token_ngrams", tk, lit(n))
+    val g = tokenNgrams(tk, n)
     if (distinct) array_distinct(g) else g
   }
 
@@ -790,7 +763,6 @@ object TextAnalysis {
     * formula, micro-quantized sum), so both share one oracle. */
   def bm25Indexed(s: SparkSession, dir: String, terms: Seq[String],
                   k: Int = 10, buckets: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // the bucket count is part of the cache key: an index partitioned
     // mod B is only valid for queries hashing mod the same B
     val base = Staging.base("bm25_index_v1", dir, s"b$buckets", "documents")
@@ -803,7 +775,7 @@ object TextAnalysis {
         .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
         .join(dl, "doc_id")
         .withColumn("tb",
-          pmod(call_function("md5_base60", col("term")), lit(buckets.toLong)))
+          pmod(md5Base60(col("term")), lit(buckets.toLong)))
         .write.mode("overwrite").partitionBy("tb").parquet(s"$base/postings")
       dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("total"))
         .coalesce(1).write.mode("overwrite").parquet(s"$base/stats")
@@ -921,7 +893,6 @@ object TextAnalysis {
   private def bm25IncrQuery(s: SparkSession, dir: String,
                             terms: Seq[String], k: Int, buckets: Int,
                             gens: String => Seq[String]): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val d = Tables.documents(s, dir)
     val splitAt = d.agg(max(col("doc_id"))).head().getLong(0) / 2
     val base = Staging.base("bm25_incr_v1", dir, s"b${buckets}s$splitAt",
@@ -951,7 +922,7 @@ object TextAnalysis {
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
       .join(dl, "doc_id")
       .withColumn("tb",
-        pmod(call_function("md5_base60", col("term")),
+        pmod(md5Base60(col("term")),
           lit(buckets.toLong)))
       .write.mode("overwrite").partitionBy("tb")
       .parquet(s"$path/postings")
@@ -965,7 +936,6 @@ object TextAnalysis {
   private[graft] def bm25QueryGens(s: SparkSession, roots: Seq[String],
                                    terms: Seq[String], k: Int,
                                    buckets: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // merged corpus stats: per-generation one-row models sum exactly
     val statRows = roots.map(g => s.read.parquet(s"$g/stats").collect().head)
     val n = statRows.map(_.getAs[Long]("n")).sum
@@ -1077,10 +1047,9 @@ object TextAnalysis {
     * flags (found / bound_ok), mirroring the stat2 HLL discipline. */
   def heavyHitters(s: SparkSession, dir: String,
                    capacity: Int = 30): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val d = Tables.documents(s, dir)
     val toks = d.select(explode(tokens(lower(col("text")))).as("tok"))
-    val sketch = toks.agg(expr(s"mg_topk(tok, $capacity)").as("sk"))
+    val sketch = toks.agg(mgTopk(col("tok"), capacity).as("sk"))
     val nTotal = d.select(sum(size(tokens(lower(col("text")))).cast("long"))
       .as("n"))
     val bound = col("n").cast("double") / (capacity + 1)
@@ -1399,14 +1368,9 @@ object TextAnalysis {
     * (doc_id < 40) keeps the oracle face small; positional duplicates
     * are preserved (set semantics are the caller's distinct).
     */
-  def shingleRows(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    docs.filter(col("doc_id") < 40)
-      .select(col("doc_id"), tokens(lower(col("text"))).as("tk"))
-      .createOrReplaceTempView("graft_shingle_src")
-    s.sql("""SELECT doc_id, shingle FROM graft_shingle_src
-             LATERAL VIEW shingle_gen(tk, 3) t AS shingle""")
-  }
+  def shingleRows(docs: DataFrame): DataFrame =
+    docs.filter(col("doc_id") < 40).select(col("doc_id"),
+      shingleGen(tokens(lower(col("text"))), 3).as("shingle"))
 
   /** Character-entropy quality signal (gibberish / mojibake / binary-
     * spill detector): Shannon entropy over the 26-letter distribution
@@ -1423,11 +1387,9 @@ object TextAnalysis {
     // replaces ran 26 regex passes + 52 lower() evaluations per row —
     // bit-equal by construction (each removed char is one char of the
     // lowercased string), LetterCountsImpl documents the proof
-    graft.functions.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
     docs
       .select(col("doc_id"),
-        call_function("letter_counts", col("text")).as("cnt"))
+        letterCounts(col("text")).as("cnt"))
       .select(col("doc_id"), col("cnt"),
         aggregate(col("cnt"), lit(0L), (a, x) => a + x).as("n_letters"))
       .filter(col("n_letters") > 0)
@@ -1509,12 +1471,10 @@ object TextAnalysis {
     * replays them bit-for-bit.
     */
   def winnow(docs: DataFrame, n: Int = 4, w: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // native md5-60 (digest bytes → long, codegen'd): the composed
     // conv(substring(md5)) chain materialized a hex string PER SHINGLE
-    // and was the round-4 bench tail (7.6s)
-    val hash60 = (s: Column) => Sampling.hash60(s)
-    // gram construction and window-min selection are both native one-
+    // and was the round-4 bench tail (7.6s).
+    // Gram construction and window-min selection are both native one-
     // pass kernels (token_ngrams, rolling_min): the HOF forms went
     // quadratic once InferFiltersFromGenerate's size(…)>0 filter
     // inlined the tokenizer/hash arrays into their lambdas; the only
@@ -1524,10 +1484,10 @@ object TextAnalysis {
       .select(col("doc_id"), tokens(lower(col("text"))).as("tk"))
       .filter(size(col("tk")) >= n + w - 1)
       .select(col("doc_id"),
-        transform(grams(col("tk"), n, distinct = false), g => hash60(g))
+        transform(grams(col("tk"), n, distinct = false), g => md5Base60(g))
           .as("hs"))
       .select(col("doc_id"),
-        explode(array_distinct(call_function("rolling_min", col("hs"), lit(w))))
+        explode(array_distinct(rollingMin(col("hs"), w)))
           .as("fingerprint"))
   }
 
@@ -1893,12 +1853,10 @@ object TextAnalysis {
     * on an ingest timestamp instead of doc_id — identical plan.
     * All-integer counting; one divide per doc, micro-rounded. */
   def ngramNovelty(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val gramsDf = Tables.documents(s, dir)
       .select(col("doc_id"), tokens(lower(col("text"))).as("toks"))
       .select(col("doc_id"),
-        array_distinct(call_function("token_ngrams",
-          col("toks"), lit(3), lit(false))).as("grams"))
+        array_distinct(tokenNgrams(col("toks"), 3, false)).as("grams"))
       .select(col("doc_id"), explode(col("grams")).as("gram"))
     // Per-doc totals and per-doc first-seen counts are BOTH doc-keyed
     // aggregates, so the final join is doc-sized — the gram-level

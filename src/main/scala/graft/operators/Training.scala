@@ -1,9 +1,9 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** Distributed model training steps. The pattern that matters at
   * 100 TB: the DATA never moves — each optimization step is one narrow
@@ -120,15 +120,14 @@ object Training {
     * drop, matching sparse-vector semantics. */
   def featureHash(s: SparkSession, dir: String,
                   buckets: Int = 64): DataFrame = {
-    GraftFunctions.register(s)
     val toks = filter(split(lower(col("text")), "\\s+"),
       t => length(t) > lit(0))
     Tables.documents(s, dir)
       .select(col("doc_id"), explode(toks).as("tok"))
       .select(col("doc_id"),
-        (call_function("md5_base60", concat(lit("fh_"), col("tok")))
+        (md5Base60(concat(lit("fh_"), col("tok")))
           % buckets).as("bucket"),
-        when(call_function("md5_base60", concat(lit("fs_"), col("tok")))
+        when(md5Base60(concat(lit("fs_"), col("tok")))
           % 2 === 0, 1L).otherwise(-1L).as("sgn"))
       .groupBy(col("doc_id"), col("bucket"))
       .agg(sum(col("sgn")).as("weight"))
@@ -388,7 +387,6 @@ object Training {
     * distinct-word frame; the rollup is a 1-row broadcast. */
   def tok12BpeDropout(s: SparkSession, dir: String, merges: Int = 10,
                       pTenths: Int = 3): DataFrame = {
-    GraftFunctions.register(s)
     val (rules, vocab) = bpeRun(s, dir, merges)((r, v) => (r, v))
     val seg0 = concat(lit(" "),
       regexp_replace(col("word"), "(.)", "$1 "))
@@ -399,7 +397,7 @@ object Training {
       once(once(once(c)))
     }
     def coin(it: Int): Column =
-      pmod(call_function("md5_base60",
+      pmod(md5Base60(
         concat(lit(s"bd1_$it:"), col("word"))), lit(10L)) <
         lit(pTenths.toLong)
     val base = rules.foldLeft(seg0) { case (c, (_, pair, merged, _)) =>
@@ -902,12 +900,11 @@ object Training {
   def ml24CvStump(s: SparkSession, dir: String,
                   nFolds: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(s)
     val o = Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_totalprice"),
         when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L)
           .as("label"),
-        pmod(call_function("md5_base60",
+        pmod(md5Base60(
           concat(lit("cv:"), col("o_orderkey"))), lit(nFolds.toLong))
           .as("fold"))
     val lc = Tables.lineitem(s, dir)
@@ -1332,7 +1329,6 @@ object Training {
     * the text_tokens plan with a smarter per-row kernel. */
   def tok10WordPiece(s: SparkSession, dir: String, topK: Int = 10)
       : DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // segment DISTINCT words, multiplicities ride along — the word
     // domain is vocabulary-bounded while the corpus is not, so the
     // per-word kernel runs |vocab| times, never |corpus|
@@ -1342,7 +1338,7 @@ object Training {
       .filter(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("m"))
     val toks = words.select(col("m"),
-        split(call_function("wordpiece_segment", col("word")), " ")
+        split(wordpieceSegment(col("word")), " ")
           .as("toks"))
       .select(col("m"), size(col("toks")).cast("long").as("n_tok"),
         col("toks"))
@@ -1394,7 +1390,6 @@ object Training {
     * piece rollup, broadcast totals; the corpus is scanned once. */
   def tok11Unigram(s: SparkSession, dir: String, topK: Int = 10)
       : DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val words = Tables.documents(s, dir)
       .select(explode(split(regexp_replace(lower(col("text")),
         "[^a-z]+", " "), " ")).as("word"))
@@ -1407,7 +1402,7 @@ object Training {
         .otherwise(ugTriMicros)
     val toks = words
       .select(col("m"),
-        split(call_function("unigram_segment", col("word")), " ")
+        split(unigramSegment(col("word")), " ")
           .as("toks"))
       .select(col("m"),
         aggregate(col("toks"), lit(0L), (acc, t) => acc + pieceScore(t))

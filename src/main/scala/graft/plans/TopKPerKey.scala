@@ -33,8 +33,8 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * per-key survivors cross the shuffle — at 100 TB the removed
   * per-partition sorts are the dominant cost of the rank-filter idiom.
   *
-  * Registered per-session via [[GraftStrategies.register]] (the same
-  * opt-in pattern as GraftFunctions); user queries keep their
+  * Injected by [[graft.GraftExtensions]], or added to a built session
+  * by [[GraftStrategies.register]]; user queries keep their
   * declarative `row_number` form and silently plan through the custom
   * operator.
   *
@@ -283,11 +283,13 @@ case class TopKPerKeyExec(partitionExprs: Seq[Expression],
     copy(child = c)
 }
 
-/** Session opt-in, mirroring GraftFunctions.register. */
+/** Session opt-in for sessions built without [[graft.GraftExtensions]]:
+  * adds the strategy unless the planner already has it. */
 object GraftStrategies {
   def register(spark: SparkSession): Unit = {
-    val em = spark.sessionState.experimentalMethods
-    if (!em.extraStrategies.contains(TopKPerKeyStrategy))
-      em.extraStrategies = em.extraStrategies :+ TopKPerKeyStrategy
+    val st = spark.sessionState
+    if (!st.planner.strategies.contains(TopKPerKeyStrategy))
+      st.experimentalMethods.extraStrategies =
+        st.experimentalMethods.extraStrategies :+ TopKPerKeyStrategy
   }
 }

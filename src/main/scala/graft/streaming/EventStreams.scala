@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 import org.apache.spark.sql.streaming.{ListState, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types._
@@ -156,14 +157,13 @@ object EventStreams {
     * operators. Works identically over a batch frame (the test's
     * parity oracle). */
   def preprocessStream(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     import graft.operators.{Sampling, TextAnalysis}
     val t = col("text")
     // the PII counts + scrub digest come from ONE fused native scan
     // (pii_scan) — the stacked per-pattern regex battery this replaces
     // was the streaming hot path's bottleneck (1.4-2k docs/s vs the
     // 10k+ events/s of the stateful faces)
-    val pii = TextAnalysis.piiScan(docs.sparkSession, t)
+    val pii = piiScan(t)
     docs.select(col("doc_id"), col("lang"),
       TextAnalysis.gopherKeep(t).as("keep"),
       md5(pii.getField("redacted").cast("binary")).as("redacted_hash"),
@@ -187,11 +187,9 @@ object EventStreams {
     * execute inside a streaming micro-batch plan. False positives cost
     * only a join probe; false negatives cannot happen, so output is
     * exactly the never-seen set. */
-  def dedupDocStream(s: SparkSession, history: DataFrame,
-                     docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
+  def dedupDocStream(history: DataFrame, docs: DataFrame): DataFrame = {
     val bloomBytes = history
-      .agg(expr("bloom_agg(xxhash64(text), 1000000L, 8000000L)"))
+      .agg(bloomAgg(xxhash64(col("text")), 1000000L, 8000000L))
       .collect().head.getAs[Array[Byte]](0)
     val digests = history.select(md5(col("text")).as("h_digest")).distinct()
     // cold start: BloomFilterAggregate over an EMPTY history returns
@@ -205,8 +203,7 @@ object EventStreams {
           "left_anti")
       else {
         val tagged = docs.withColumn("maybe_dup",
-          call_function("bloom_might_contain", lit(bloomBytes),
-            xxhash64(col("text"))))
+          bloomMightContain(lit(bloomBytes), xxhash64(col("text"))))
         tagged.filter(!col("maybe_dup"))
           .unionByName(tagged.filter(col("maybe_dup"))
             .join(broadcast(digests), md5(col("text")) === col("h_digest"),
@@ -381,7 +378,7 @@ object EventStreams {
                     minAgree: Int = 12,
                     capPerBucket: Int = 4096): Dataset[NearDupHit] = {
     import s.implicits._
-    graft.operators.Dedup.bandSignatureRows(s, docs)
+    graft.operators.Dedup.bandSignatureRows(docs)
       .select(concat_ws(":", col("band"), col("band_key"))
         .as("band_bucket"), col("doc_id"), col("sig"))
       .as[BandRow]
@@ -411,7 +408,6 @@ object EventStreams {
       .outputMode("append")
       .option("checkpointLocation", s"$base/_checkpoint")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.functions.GraftFunctions.register(s)
         val gen = new java.io.File(s"$base/gen_$id")
         if (!new java.io.File(gen, "_done").exists()) {
           graft.operators.TextAnalysis.bm25BuildGen(batch.toDF(),

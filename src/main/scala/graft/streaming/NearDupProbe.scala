@@ -63,9 +63,8 @@ object NearDupProbe {
 
     // 1. stateless head as a batch job (count forces full evaluation);
     // three runs — first includes codegen+JIT, min is the steady rate
-    graft.functions.GraftFunctions.register(spark)
     val headSecs = (1 to 3).map(_ => time(() =>
-      graft.operators.Dedup.bandSignatureRows(spark, docs.toDF()).count()))
+      graft.operators.Dedup.bandSignatureRows(docs.toDF()).count()))
     val headSec = headSecs.min
 
     var faceN = 0

@@ -208,7 +208,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("dedup incremental: bloom gate is a scalar subquery, batch scan stays narrow") {
-    val df = Dedup.incremental(spark, Tables.documents(spark, sf),
+    val df = Dedup.incremental(Tables.documents(spark, sf),
       Fixtures.crawlBatch(Tables.documents(spark, sf)))
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("bloom_might_contain") || p.contains("Subquery"),

@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** The native expressions must be bit-identical to the composed-builtin
   * forms they replace (same fold order, same hash, same pmod semantics)
@@ -18,31 +19,29 @@ class FunctionsSpec extends SparkSpec {
     conv(substring(md5(t.cast("binary")), 1, 15), 16, 10).cast("long")
 
   test("md5_base60 == conv(substring(md5)) chain, bit for bit") {
-    GraftFunctions.register(spark)
     val d = Tables.documents(spark, sf)
     // per-token (the winnow/minhash shape) AND whole-doc (the sampling
     // coin shape); native vs composed must agree on every value
     val both = d.select(
       explode(transform(toks(col("text")),
-        t => struct(call_function("md5_base60", t).as("native"),
+        t => struct(md5Base60(t).as("native"),
           md5Hash60(t).as("hof")))).as("p"))
       .select(col("p.native"), col("p.hof"))
       .union(d.select(
-        call_function("md5_base60", col("doc_id").cast("string")).as("native"),
+        md5Base60(col("doc_id").cast("string")).as("native"),
         md5Hash60(col("doc_id").cast("string")).as("hof")))
     assert(both.filter(col("native") =!= col("hof")).count() === 0)
     assert(both.filter(col("native") < 0).count() === 0) // top-60-bit range
   }
 
   test("cosine_sim == zip_with/aggregate fold, bit for bit") {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, sf).limit(100)
     def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
         lit(0.0), (acc, x) => acc + x)
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("q"))
     val both = e.crossJoin(q).select(
-      call_function("cosine_sim", col("embedding").cast("array<double>"),
+      cosineSim(col("embedding").cast("array<double>"),
         col("q").cast("array<double>")).as("native"),
       (dot(col("embedding"), col("q")) /
         (sqrt(dot(col("embedding"), col("embedding"))) *
@@ -51,11 +50,10 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("l2_sq == zip_with/aggregate fold, bit for bit") {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, sf).limit(100)
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("q"))
     val both = e.crossJoin(q).select(
-      call_function("l2_sq", col("embedding").cast("array<double>"),
+      l2Sq(col("embedding").cast("array<double>"),
         col("q").cast("array<double>")).as("native"),
       aggregate(zip_with(col("embedding").cast("array<double>"),
           col("q").cast("array<double>"), (x, y) => (x - y) * (x - y)),
@@ -64,7 +62,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("plane_sig == per-plane HOF fold, bit for bit") {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, sf).limit(100)
     val planes = graft.operators.Similarity.planeValues(16)
     val planeLits = array(planes.map(p => array(p.map(lit): _*)): _*)
@@ -73,14 +70,13 @@ class FunctionsSpec extends SparkSpec {
           (x, pl) => x.cast("double") * pl),
         lit(0.0), (acc, x) => acc + x) > 0, 1).otherwise(0))
     val both = e.select(
-      call_function("plane_sig", col("embedding").cast("array<double>"),
+      planeSig(col("embedding").cast("array<double>"),
         planeLits).as("native"),
       hofBits.as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() === 0)
   }
 
   test("simhash60 == per-token vote fold, bit for bit") {
-    GraftFunctions.register(spark)
     val d = Tables.documents(spark, sf).limit(100)
     val votes = aggregate(
       transform(toks(col("text")), t => md5Hash60(t)),
@@ -96,13 +92,12 @@ class FunctionsSpec extends SparkSpec {
           .otherwise(0L)),
       lit(0L), (acc, x) => acc.bitwiseOR(x))
     val both = d.select(
-      call_function("simhash60", toks(col("text"))).as("native"),
+      simhash60(toks(col("text"))).as("native"),
       hofSig.as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() === 0)
   }
 
   test("minhash_sig16 == universal-hash fold, element for element") {
-    GraftFunctions.register(spark)
     import graft.functions.MinHashSig.{P, FOLD, aParam, bParam}
     val params = array((1 to 16).map(i =>
       struct(lit(aParam(i)).as("a"), lit(bParam(i)).as("b"))): _*)
@@ -116,17 +111,16 @@ class FunctionsSpec extends SparkSpec {
           least(m, pmod(h * p.getField("a") + p.getField("b"), lit(P))))
       })
     val both = d.select(
-      call_function("minhash_sig16", col("sh")).as("native"),
+      minhashSig16(col("sh")).as("native"),
       hofSig.cast("array<bigint>").as("hof"))
     assert(both.filter(to_json(col("native")) =!= to_json(col("hof"))).count() === 0)
   }
 
   test("simhash60 / minhash_sig16 survive whole-stage codegen (doGenCode path)") {
-    GraftFunctions.register(spark)
     val d = Tables.documents(spark, sf).limit(50)
       .select(col("doc_id"),
-        call_function("simhash60", toks(col("text"))).as("sh"),
-        call_function("minhash_sig16",
+        simhash60(toks(col("text"))).as("sh"),
+        minhashSig16(
           array_distinct(toks(col("text")))).as("sig"))
     val rows = d.collect()
     assert(rows.length === 50)
@@ -137,11 +131,10 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("cosine_sim survives whole-stage codegen (doGenCode path)") {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, sf).limit(10)
     val df = e.crossJoin(
         e.filter(col("vec_id") === 0).select(col("embedding").as("q")))
-      .select(call_function("cosine_sim",
+      .select(cosineSim(
         col("embedding").cast("array<double>"),
         col("q").cast("array<double>")).as("c"))
     df.collect()
@@ -150,17 +143,16 @@ class FunctionsSpec extends SparkSpec {
     assert(p.contains("*(") || p.contains("WholeStageCodegen"), p)
     // self-similarity sanity on the full corpus
     val self = Tables.embeddings(spark, sf).select(
-      call_function("cosine_sim", col("embedding").cast("array<double>"),
+      cosineSim(col("embedding").cast("array<double>"),
         col("embedding").cast("array<double>")).as("c"))
     assert(self.filter(abs(col("c") - 1.0) > 1e-12).count() === 0)
   }
 
   test("mg_topk: capacity above cardinality recovers exact counts") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val data = Seq.tabulate(3000)(i => s"k${i % 17}").toDF("s")
       .repartition(7) // force partial sketches + merges
-    val m = data.agg(expr("mg_topk(s, 64)")).collect()
+    val m = data.agg(mgTopk(col("s"), 64)).collect()
       .head.getAs[Map[String, Long]](0)
     val exact = data.groupBy("s").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -168,7 +160,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("mg_topk: heavy hitter survives adversarial tail under eviction") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // one item at 30%, a 1000-distinct uniform tail; capacity 10 ⇒
     // constant evictions, yet freq > n/11 guarantees survival with
@@ -176,7 +167,7 @@ class FunctionsSpec extends SparkSpec {
     val rows = Seq.fill(3000)("hot") ++ Seq.tabulate(7000)(i => s"t${i % 1000}")
     for (parts <- Seq(1, 5, 13)) {
       val m = rows.toDF("s").repartition(parts)
-        .agg(expr("mg_topk(s, 10)")).collect()
+        .agg(mgTopk(col("s"), 10)).collect()
         .head.getAs[Map[String, Long]](0)
       val est = m.getOrElse("hot", 0L)
       assert(est > 0L, s"heavy hitter evicted at parts=$parts")
@@ -186,7 +177,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("wordpiece_segment == greedy HOF struct fold, bit for bit") {
-    GraftFunctions.register(spark)
     import graft.operators.Training.{wpBi, wpTri}
     // the interpreted fold tok10 ran before its native kernel — kept
     // here verbatim as the executable spec of the greedy algorithm
@@ -216,24 +206,23 @@ class FunctionsSpec extends SparkSpec {
             concat(tk, sub(i, 1), lit(" ")).as("tk")))
       })
     val both = words.select(
-      call_function("wordpiece_segment", col("word")).as("native"),
+      wordpieceSegment(col("word")).as("native"),
       trim(fold.getField("tk")).as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() === 0)
     assert(both.count() > 0)
   }
 
   test("cdc_boundaries == HOF window-hash filter, element for element") {
-    GraftFunctions.register(spark)
     val mod = 64
     val n = length(col("text"))
     val hof =
       when(n >= 8,
         filter(sequence(lit(8), n), i =>
-          pmod(call_function("md5_base60",
+          pmod(md5Base60(
             col("text").substr(i - 7, lit(8))), lit(mod)) === 0))
         .otherwise(array().cast("array<int>"))
     val both = Tables.documents(spark, sf).select(
-      call_function("cdc_boundaries", col("text"), lit(mod)).as("native"),
+      cdcBoundaries(col("text"), mod).as("native"),
       hof.as("hof"))
     assert(both.filter(to_json(col("native")) =!= to_json(col("hof")))
       .count() === 0)
@@ -242,7 +231,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("frame_energies == nested transform/aggregate fold, bit for bit") {
-    GraftFunctions.register(spark)
     val flen = 64
     val d = Tables.documents(spark, sf)
       .select(col("text").as("px"),
@@ -257,7 +245,7 @@ class FunctionsSpec extends SparkSpec {
             .cast("long") - 32L)),
         lit(0L), (acc, x) => acc + x))
     val both = d.select(
-      call_function("frame_energies", col("px"), lit(flen)).as("native"),
+      frameEnergies(col("px"), flen).as("native"),
       hof.as("hof"))
     assert(both.filter(to_json(col("native")) =!= to_json(col("hof")))
       .count() === 0)
@@ -266,7 +254,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("pii_scan == stacked regex battery, match for match " +
     "(adversarial strings + PII-augmented corpus)") {
-    GraftFunctions.register(spark)
     import graft.operators.TextAnalysis._
     import spark.implicits._
     // every backtracking / boundary edge the hand scanners resolve:
@@ -290,7 +277,7 @@ class FunctionsSpec extends SparkSpec {
     val corpus = graft.operators.Fixtures
       .withPii(Tables.documents(spark, sf)).select(col("text"))
     val t = col("text")
-    val p = call_function("pii_scan", t)
+    val p = piiScan(t)
     val both = adversarial.unionByName(corpus).select(
       p.getField("n_urls").as("ku"), piiCount(t, UrlRe).as("ru"),
       p.getField("n_emails").as("ke"), piiCount(t, EmailRe).as("re"),
@@ -308,7 +295,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("gopher_scan == HOF/split stat battery, value for value") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     def occ(c: org.apache.spark.sql.Column, w: String) =
       (size(split(c, s" $w ")) - 1).cast("long")
@@ -320,7 +306,7 @@ class FunctionsSpec extends SparkSpec {
       "word " * 60                         // a passing-length doc
     ).toDF("text")
     val t = col("text")
-    val g = call_function("gopher_scan", t)
+    val g = gopherScan(t)
     val toksC = filter(split(t, "\\s+"), x => length(x) > 0)
     val both = adversarial
       .unionByName(Tables.documents(spark, sf).select(t))

@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** token_ngrams / rolling_min must be bit-identical to the
   * higher-order-function forms they replaced (same join separator, same
@@ -21,12 +22,11 @@ class NGramSpec extends SparkSpec {
       .otherwise(array(concat_ws(" ", tk)))
 
   test("token_ngrams == transform/slice HOF, whole-short mode, n=2..4") {
-    GraftFunctions.register(spark)
     val d = Tables.documents(spark, sf)
       .select(col("doc_id"), toks(col("text")).as("tk"))
     for (n <- 2 to 4) {
       val bad = d.select(
-        call_function("token_ngrams", col("tk"), lit(n)).as("native"),
+        tokenNgrams(col("tk"), n).as("native"),
         hofGrams(col("tk"), n).as("hof"))
         .filter(not(col("native") === col("hof")))
       assert(bad.count() === 0, s"n=$n")
@@ -34,12 +34,11 @@ class NGramSpec extends SparkSpec {
   }
 
   test("token_ngrams empty-array mode matches the novelty when-guard") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val d = Seq("a b c d", "a b", "", "one").toDF("text")
       .select(toks(col("text")).as("tk"))
     val bad = d.select(
-      call_function("token_ngrams", col("tk"), lit(3), lit(false)).as("native"),
+      tokenNgrams(col("tk"), 3, false).as("native"),
       when(size(col("tk")) >= 3,
         transform(sequence(lit(1), size(col("tk")) - 2),
           i => concat_ws(" ", element_at(col("tk"), i),
@@ -50,25 +49,23 @@ class NGramSpec extends SparkSpec {
   }
 
   test("token_ngrams whole-short edge cases: short doc and empty doc") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val out = Seq("a b", "").toDF("text")
-      .select(call_function("token_ngrams", toks(col("text")), lit(3)).as("g"))
+      .select(tokenNgrams(toks(col("text")), 3).as("g"))
       .collect().map(_.getSeq[String](0))
     assert(out(0) === Seq("a b")) // whole-doc fallback gram
     assert(out(1) === Seq(""))    // mirrors array(concat_ws(" ", []))
   }
 
   test("rolling_min == array_min(slice) HOF over hash arrays") {
-    GraftFunctions.register(spark)
     val w = 4
     val hs = Tables.documents(spark, sf)
       .select(toks(col("text")).as("tk"))
       .filter(size(col("tk")) >= w)
       .select(transform(col("tk"),
-        t => call_function("md5_base60", t)).as("hs"))
+        t => md5Base60(t)).as("hs"))
     val bad = hs.select(
-      call_function("rolling_min", col("hs"), lit(w)).as("native"),
+      rollingMin(col("hs"), w).as("native"),
       transform(sequence(lit(0), size(col("hs")) - w),
         i => array_min(slice(col("hs"), i + 1, lit(w)))).as("hof"))
       .filter(not(col("native") === col("hof")))
@@ -76,10 +73,9 @@ class NGramSpec extends SparkSpec {
   }
 
   test("token_ngrams survives whole-stage codegen (doGenCode path)") {
-    GraftFunctions.register(spark)
     val d = Tables.documents(spark, sf)
       .select(toks(col("text")).as("tk"))
-      .select(explode(call_function("token_ngrams", col("tk"), lit(3))).as("g"))
+      .select(explode(tokenNgrams(col("tk"), 3)).as("g"))
     val plan = d.queryExecution.executedPlan.toString
     // `*(n)` prefixes mark whole-stage-codegen'd operators in toString;
     // the Generate over token_ngrams must carry one. Equally important:

@@ -137,8 +137,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash is deterministic across runs") {
-    val a = Dedup.simhash(spark, mutants).orderBy("doc_id").limit(5).collect()
-    val b = Dedup.simhash(spark, mutants).orderBy("doc_id").limit(5).collect()
+    val a = Dedup.simhash(mutants).orderBy("doc_id").limit(5).collect()
+    val b = Dedup.simhash(mutants).orderBy("doc_id").limit(5).collect()
     assert(a.map(_.toSeq).toSeq === b.map(_.toSeq).toSeq)
   }
 

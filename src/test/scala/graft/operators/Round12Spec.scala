@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** Round-12 pins: the as-of family's forward/nearest tie rules against
   * a driver replay, the scalable exact rank's equivalence to the
@@ -171,9 +172,8 @@ class Round12Spec extends SparkSpec {
     // the octagon must genuinely prune bbox corners: total contained
     // count is strictly below the bbox candidate count (area ratio
     // π-ish < 1), or the ray-cast is vacuous
-    graft.functions.GraftFunctions.register(spark)
     def coin(salt: String, m: Long) =
-      pmod(call_function("md5_base60",
+      pmod(md5Base60(
         concat(lit(salt), col("s_suppkey").cast("string"))), lit(m))
     val pol = graft.Tables.supplier(spark, sf).select(
       coin("gpx:", Spatial.DomainMicros).as("cx"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels._
 
 /** Round-13 pins: the hard-negative miner's physical plan (the one
   * TopKPerKey-shaped face that had no plan assertion), and the
@@ -67,7 +68,6 @@ class Round13Spec extends SparkSpec {
     // the join condition); this pin re-derives that retired form and
     // holds the kernel to it on a dense probe grid around one octagon
     import org.apache.spark.sql.Column
-    graft.functions.GraftFunctions.register(spark)
     val (cx0, cy0, r0) = (50000000L, 50000000L, 2345678L)
     val pts = spark.range(0, 10000).toDF("i")
       .select((lit(cx0 - 3000000L) + (col("i") % 100) * 60000L).as("x"),
@@ -90,7 +90,7 @@ class Round13Spec extends SparkSpec {
     }
     val cmp = pts.select(
       (pmod(crossings.reduce(_ + _), lit(2L)) === 1L).as("legacy"),
-      call_function("octagon_contains", px, py, cxc, cyc, r).as("kernel"))
+      octagonContains(px, py, cxc, cyc, r).as("kernel"))
     assert(cmp.filter(col("legacy") =!= col("kernel")).count() === 0L)
     val inside = cmp.filter(col("kernel")).count()
     assert(inside > 0 && inside < 10000, s"vacuous probe grid: $inside")
@@ -118,7 +118,7 @@ class Round13Spec extends SparkSpec {
     // shares, so fixture growth that erodes it fails loudly instead of
     // silently losing recall.
     val docs = graft.Tables.documents(spark, sf)
-    val maxBucket = Dedup.bandSignatureRows(spark, docs)
+    val maxBucket = Dedup.bandSignatureRows(docs)
       .groupBy(col("band"), col("band_key"))
       .agg(count(lit(1)).as("n"))
       .agg(max(col("n"))).collect()(0).getLong(0)

@@ -39,7 +39,7 @@ class Round4lSpec extends SparkSpec {
   test("shingle_gen: generator output == HOF shingle form, plan has Generate") {
     import org.apache.spark.sql.functions.{expr => sexpr}
     val docs = Tables.documents(spark, sf)
-    val gen = TextAnalysis.shingleRows(spark, docs)
+    val gen = TextAnalysis.shingleRows(docs)
     val p = gen.queryExecution.executedPlan.toString
     assert(p.contains("Generate"), s"custom generator must plan a Generate:\n$p")
     // reference: the array-materializing HOF form + explode

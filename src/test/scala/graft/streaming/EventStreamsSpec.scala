@@ -606,7 +606,7 @@ class EventStreamsSpec extends SparkSpec {
     val mem = MemoryStream[Long]
     val streamDf = mem.toDF().withColumnRenamed("value", "doc_id")
       .join(docs, "doc_id")
-    val q = EventStreams.dedupDocStream(spark, history, streamDf)
+    val q = EventStreams.dedupDocStream(history, streamDf)
       .writeStream.outputMode("append").format("memory")
       .queryName("bloom_dedup_test").start()
     try {
@@ -632,7 +632,7 @@ class EventStreamsSpec extends SparkSpec {
     val mem = MemoryStream[Long]
     val streamDf = mem.toDF().withColumnRenamed("value", "doc_id")
       .join(docs, "doc_id")
-    val q = EventStreams.dedupDocStream(spark, history, streamDf)
+    val q = EventStreams.dedupDocStream(history, streamDf)
       .writeStream.outputMode("append").format("memory")
       .queryName("bloom_cold_test").start()
     try {
@@ -890,7 +890,7 @@ class EventStreamsSpec extends SparkSpec {
         r.getAs[Long]("band"), r.getAs[Long]("agree16"))).sorted.toSeq
     // driver replay: the SAME band rows from the batch kernel, grouped
     // by bucket, pairs in doc_id order with agreement >= 12
-    val bandRows = graft.operators.Dedup.bandSignatureRows(spark,
+    val bandRows = graft.operators.Dedup.bandSignatureRows(
         feed.toDF("doc_id", "text")).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Seq[Long]]("sig"),
         r.getAs[Int]("band").toLong, r.getAs[String]("band_key")))
