@@ -6,14 +6,16 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.GraftFunctions
 
 /** SparkSessionExtensions entry point: makes graft's native expressions
-  * (every name in [[GraftFunctions.builders]]), the TopKPerKey planner
-  * strategy and the NativeKernelRule available in any session via
+  * (every name in [[GraftFunctions.builders]]) and the TopKPerKey
+  * planner strategy available in any session whose builder is given
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)   // or
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
+  * .withExtensions(new GraftExtensions)   // or
+  * .config("spark.sql.extensions", "graft.GraftExtensions")
   * }}}
+  *
+  * [[Graft.session]] builds every graft session this way, so each one
+  * has the strategy from the start and no operator installs it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -24,7 +26,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder))
     }
     e.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
-    // declarative HOF vector folds → native codegen'd kernels
-    e.injectOptimizerRule(_ => graft.plans.NativeKernelRule)
   }
 }

@@ -1,26 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch diagnostic: break a query's warm time into construction
   * (model collects + analysis) vs optimization vs execution. */
 object Phases {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SHJ_THRESHOLD", "0"))
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("PREFER_SMJ", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("PARALLELISM_FIRST", "true"))
-      .getOrCreate()
+    val spark = Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: materialize an N× scale-up of a testdata directory as N
@@ -50,12 +50,7 @@ object ScaleUp {
     val Array(src, dest, factorStr) = args.take(3)
     val factor = factorStr.toInt
     require(factor <= 26, "alphabetic replica salt supports factor <= 26")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(dest).mkdirs()
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")

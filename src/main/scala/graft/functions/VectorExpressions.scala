@@ -17,7 +17,8 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
   * per the charter's preference order a custom Expression is the right
   * tool for this hot scalar. Summation is the same left-to-right fold,
   * so results are bit-identical to the HOF form (FunctionsSpec pins
-  * this).
+  * this). Nothing rewrites the HOF form into this node: callers build
+  * it through [[Kernels.cosineSim]] (or `cosine_sim` in SQL).
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -83,7 +84,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
   * to DuckDB's sequential `list_reduce`. The HOF form runs interpreted
   * (higher-order functions are CodegenFallback) — measured ~7s of the
   * sf0.1 k-means spent in interpreted lambda dispatch that this
-  * expression removes. */
+  * expression removes. Built through [[Kernels.l2Sq]] (or `l2_sq`). */
 case class L2Squared(left: Expression, right: Expression)
     extends BinaryExpression {
 

@@ -839,10 +839,6 @@ object EventAnalytics {
     * share ONE hash partitioning on user_id — a single shuffle of
     * (user, date) pairs, bounded by users × days, not events. */
   def streaks(s: SparkSession, dir: String): DataFrame = {
-    // the per-user longest-streak argmax is a Filter(rk=1) rank filter:
-    // register the heap-exec strategy here so the standalone plan
-    // matches the in-battery one (the knnClassify lesson, SURVEY §22.2)
-    graft.plans.GraftStrategies.register(s)
     val w = Window.partitionBy(col("user_id")).orderBy(col("d"))
     val islands = Tables.events(s, dir)
       .select(col("user_id"), to_date(col("ts")).as("d")).distinct()

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.Kernels._
 
@@ -20,11 +19,7 @@ object GeoGridSweep {
     val gs = args.lift(1).map(_.split(",").map(_.trim.toLong).toSeq)
       .getOrElse(Seq(250000L, 500000L, 1000000L, 2000000L, 4000000L,
         8000000L))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
     // the default the face would self-select on this corpus
     def h(salt: String) = pmod(md5Base60(

@@ -40,10 +40,6 @@ object Privacy {
     * 1 + total 2dp-rounded spend-cents) bucketing total `value` into
     * order-of-magnitude tiers. */
   private[operators] def profiles(s: SparkSession, dir: String): DataFrame = {
-    // the modal-type argmax below is a Filter(rn=1)-over-Window shape:
-    // register the heap-exec strategy HERE so the standalone plan
-    // matches the in-battery one (the knnClassify lesson, SURVEY §22.2)
-    graft.plans.GraftStrategies.register(s)
     val e = Tables.events(s, dir)
     // spend-cents clamp at 0: a refund-heavy user must land in tier 0,
     // not diverge (Spark log10 of a negative is NULL, DuckDB throws)
@@ -232,7 +228,6 @@ object Privacy {
     * the candidate sets shuffles after the first aggregation. */
   def dpMedian(s: SparkSession, dir: String,
                epsilonMicros: Long = 500000L): DataFrame = {
-    graft.plans.GraftStrategies.register(s) // per-type argmax rank filter
     val eps = epsilonMicros.toDouble / 1e6
     val perUser = Tables.events(s, dir)
       .groupBy(col("event_type"), col("user_id"))

@@ -175,16 +175,6 @@ object Relational {
         dec(col("o_totalprice")).cast("double").as("top_price"))
   }
 
-  /** w1 again, planned through graft's custom physical operator: with
-    * [[graft.plans.GraftStrategies]] registered, the UNCHANGED
-    * declarative row_number+filter form plans as TopKPerKeyExec — one
-    * heap pass per partition instead of Exchange→Sort→Window→Filter.
-    * Shares w1's oracle. */
-  def w1cTopOrderStrategy(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftStrategies.register(s)
-    w1TopOrderPerCustomer(s, dir)
-  }
-
   /** The SAME top-order-per-customer result as w1, as an aggregation:
     * max_by over an ordering struct partial-aggregates map-side, so only
     * one (key, best) candidate per partition crosses the exchange — vs

@@ -93,12 +93,10 @@ object Sampling {
     * in md5-hash order — a deterministic reservoir (uniform because the
     * hash is, stable across runs and engines because nothing is
     * seeded from a JVM RNG). The rank filter is the TopKPerKey logical
-    * shape, so with the strategy registered it plans as the sort-free
-    * two-phase heap top-k: ≤n rows per stratum per input partition
+    * shape, so it plans as the sort-free two-phase heap top-k: ≤n rows per stratum per input partition
     * cross the shuffle, no sort buffers — at 100 TB the sample, not the
     * corpus, is what moves. */
-  def topNPerStratum(s: SparkSession, docs: DataFrame, n: Int): DataFrame = {
-    graft.plans.GraftStrategies.register(s)
+  def topNPerStratum(docs: DataFrame, n: Int): DataFrame = {
     val h = md5Base60(col("doc_id").cast("string"))
     docs
       .withColumn("h", h)
@@ -116,9 +114,8 @@ object Sampling {
     * order; the rank filter is the TopKPerKey shape (no global sort —
     * ≤topN rows per epoch per partition cross the shuffle).
     */
-  def epochOrder(s: SparkSession, docs: DataFrame, epochs: Int = 2,
+  def epochOrder(docs: DataFrame, epochs: Int = 2,
                  topN: Int = 50): DataFrame = {
-    graft.plans.GraftStrategies.register(s)
     docs.select(col("doc_id"))
       .select(col("doc_id"), explode(array(
         (0 until epochs).map(e => lit(e.toLong)): _*)).as("epoch"))

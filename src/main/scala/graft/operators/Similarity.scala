@@ -1480,11 +1480,6 @@ object Similarity {
     * before ranking, vec_id breaks ties; k odd ⇒ no vote tie. */
   def knnClassify(s: SparkSession, dir: String, nQueries: Int = 32,
                   k: Int = 5): DataFrame = {
-    // the top-k rank filter below only compiles through the heap exec
-    // when the strategy is on THIS session — in-battery a sibling face
-    // had always registered it, standalone the face silently fell back
-    // to WindowGroupLimit + two sorts (caught by Round13Spec's pin)
-    graft.plans.GraftStrategies.register(s)
     import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(s, dir)
     val q = broadcast(e.filter(col("vec_id") < nQueries)
@@ -1524,7 +1519,6 @@ object Similarity {
     * row_number per anchor — the pinned-ordering convention. */
   def hardNegatives(s: SparkSession, dir: String, k: Int = 5,
                     qMod: Int = 83, qCap: Int = 830): DataFrame = {
-    graft.plans.GraftStrategies.register(s) // heap exec for the rank filter
     import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(s, dir)
     val anchors = e.filter(col("vec_id") % qMod === 1 &&

@@ -46,7 +46,7 @@ private[operators] object Lineage {
       df.schema)
 }
 
-private[operators] object Staging {
+private[graft] object Staging {
 
   /** Lowercase-hex MD5 of a string, truncated to 16 chars — the staged
     * artifact fingerprint base (a real digest: no XOR-cancellation
@@ -127,7 +127,7 @@ private[operators] object Staging {
     q
   }
 
-  private def reapOnExit(path: String): Unit = reapHookInstalled.add(path)
+  private[graft] def reapOnExit(path: String): Unit = reapHookInstalled.add(path)
 
   /** [[materialized]] with cross-call reuse for PURELY FILE-BACKED
     * inputs (the ccWithRounds convention), owning the whole

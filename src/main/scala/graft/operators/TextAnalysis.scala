@@ -583,7 +583,6 @@ object TextAnalysis {
     * expression; ranks fully tie-broken. */
   def keyness(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.GraftStrategies.register(s)
     val cells = Tables.documents(s, dir)
       .select(col("source"), explode(tokens(lower(col("text")))).as("tok"))
       .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("a"))
@@ -1132,14 +1131,13 @@ object TextAnalysis {
 
   /** Top-k 3-gram shingles per language: explode → count → per-key
     * rank-filter. The rank filter is the exact logical shape
-    * [[graft.plans.TopKPerKeyStrategy]] rewrites, so with the strategy
-    * registered this plans as the sort-free two-phase heap top-k; the
+    * [[graft.plans.TopKPerKeyStrategy]] rewrites, so this plans as the
+    * sort-free two-phase heap top-k; the
     * explode/count stage is a standard map-side-combined aggregation.
     * Corpus-level n-gram statistics are the workhorse of quality
     * filtering and contamination checks in training-data pipelines. */
   def topNgramsPerLang(s: SparkSession, dir: String, n: Int = 3,
                        k: Int = 5): DataFrame = {
-    graft.plans.GraftStrategies.register(s)
     val d = Tables.documents(s, dir)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("lang"))
@@ -1887,14 +1885,13 @@ object TextAnalysis {
     *
     * Scale shape: the tf aggregation is the only data-sized shuffle;
     * the df table is vocabulary-sized and broadcasts (the unigram-model
-    * shape). The rank filter is the TopKPerKey pattern, so with
-    * GraftStrategies registered it plans through the custom heap exec:
+    * shape). The rank filter is the TopKPerKey pattern, so it plans
+    * through the custom heap exec:
     * ≤5 survivors per lang per partition cross the final shuffle, no
     * sorts. Determinism: integer counts, micro-nat quantization,
     * lexicographic tie-break. */
   def tfidfLabels(s: SparkSession, dir: String, topN: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.GraftStrategies.register(s)
     val d = Tables.documents(s, dir)
     val toks = d.select(col("doc_id"), col("lang"),
       explode(tokens(lower(col("text")))).as("tok"))

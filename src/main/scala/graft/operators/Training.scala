@@ -234,7 +234,6 @@ object Training {
   def negativeSampling(s: SparkSession, dir: String,
                        k: Int = 100): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.GraftStrategies.register(s)
     val w = Window.partitionBy(lit(1))
       .orderBy(col("c").desc, col("tok").asc)
     val all = Window.partitionBy(lit(1))

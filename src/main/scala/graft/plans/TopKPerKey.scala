@@ -5,7 +5,6 @@ import java.util.{Comparator, PriorityQueue => JPriorityQueue}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter,
@@ -33,10 +32,10 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * per-key survivors cross the shuffle — at 100 TB the removed
   * per-partition sorts are the dominant cost of the rank-filter idiom.
   *
-  * Injected by [[graft.GraftExtensions]], or added to a built session
-  * by [[GraftStrategies.register]]; user queries keep their
-  * declarative `row_number` form and silently plan through the custom
-  * operator.
+  * Injected by [[graft.GraftExtensions]] into every [[graft.Graft.session]],
+  * or added to a session the caller built by [[graft.Graft.attach]];
+  * operators never install it. Queries keep their declarative
+  * `row_number` form and silently plan through the custom operator.
   *
   * Memory bound: the partial phase holds at most
   * `spark.graft.topk.partialMaxKeys` (default 4M) key heaps; when the
@@ -281,15 +280,4 @@ case class TopKPerKeyExec(partitionExprs: Seq[Expression],
 
   override protected def withNewChildInternal(c: SparkPlan): TopKPerKeyExec =
     copy(child = c)
-}
-
-/** Session opt-in for sessions built without [[graft.GraftExtensions]]:
-  * adds the strategy unless the planner already has it. */
-object GraftStrategies {
-  def register(spark: SparkSession): Unit = {
-    val st = spark.sessionState
-    if (!st.planner.strategies.contains(TopKPerKeyStrategy))
-      st.experimentalMethods.extraStrategies =
-        st.experimentalMethods.extraStrategies :+ TopKPerKeyStrategy
-  }
 }

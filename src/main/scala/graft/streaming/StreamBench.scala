@@ -32,11 +32,7 @@ object StreamBench {
 
   /** Dev driver: run the streaming faces alone against a testdata dir. */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
     println("{" +
       run(spark, args.headOption.getOrElse("/root/testdata/sf0.001")) + "}")

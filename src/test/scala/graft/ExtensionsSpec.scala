@@ -8,51 +8,31 @@ import graft.functions.GraftFunctions
 import graft.functions.Kernels._
 
 /** The SQL deployment paths: a session built with GraftExtensions gets
-  * the native functions, the TopKPerKey strategy and the optimizer
-  * rule at build; `Graft.attach` adds whatever a built session lacks. */
+  * the native functions and the TopKPerKey strategy at build;
+  * `Graft.attach` adds whatever a session the caller built lacks. */
 class ExtensionsSpec extends SparkSpec {
 
-  /** A session built with GraftExtensions, sharing the test context;
-    * the shared session stays the active and default one. */
-  private lazy val ext: SparkSession = {
-    val base = spark // materialize the shared session/context first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    finally {
-      SparkSession.clearActiveSession()
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
-  }
+  /** A session built with GraftExtensions alone, sharing the test
+    * context. */
+  private lazy val ext: SparkSession = SparkSpec.isolated(new GraftExtensions)
 
   private def registered(s: SparkSession) = GraftFunctions.builders.map {
     case (name, _) =>
       s.sessionState.functionRegistry.lookupFunction(FunctionIdentifier(name))
   }
 
-  /** One batch name per occurrence of the rule, so a rule added twice
-    * to one batch shows twice. */
-  private def ruleBatches(s: SparkSession): Seq[String] =
-    s.sessionState.optimizer.batches.flatMap(b =>
-      b.rules.filter(_ == plans.NativeKernelRule).map(_ => b.name))
-
-  test("Graft.attach wires functions, strategy, and optimizer rule into an existing session") {
-    val s = spark.newSession() // the shared session keeps no attached pieces
+  test("Graft.attach wires functions and strategy into an existing session") {
+    val s = SparkSpec.isolated() // graft-free, so attach has work to do
+    assert(registered(s).forall(_.isEmpty))
     Graft.attach(s)
     Graft.attach(s) // idempotent
     assert(registered(s).forall(_.isDefined))
     assert(s.sql("SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c")
       .collect().head.getDouble(0) === 1.0)
     val st = s.sessionState
-    assert(st.experimentalMethods.extraStrategies.contains(plans.TopKPerKeyStrategy))
+    assert(st.experimentalMethods.extraStrategies
+      .count(_ == plans.TopKPerKeyStrategy) === 1)
     assert(st.planner.strategies.count(_ == plans.TopKPerKeyStrategy) === 1)
-    assert(st.experimentalMethods.extraOptimizations
-      .count(_ == plans.NativeKernelRule) === 1)
-    assert(ruleBatches(s) === Seq("User Provided Optimizers"))
   }
 
   test("GraftExtensions injects functions and the top-k strategy at build") {
@@ -64,8 +44,10 @@ class ExtensionsSpec extends SparkSpec {
       "attach re-registered an injected function")
     assert(ext.sessionState.planner.strategies
       .count(_ == plans.TopKPerKeyStrategy) === 1)
-    assert(ruleBatches(ext) === Seq("Operator Optimization before Inferring Filters",
-      "Operator Optimization after Inferring Filters"))
+    // the factory session every suite shares is built the same way
+    assert(spark.sessionState.planner.strategies
+      .count(_ == plans.TopKPerKeyStrategy) === 1)
+    assert(spark.sessionState.experimentalMethods.extraStrategies.isEmpty)
     // native expression resolves in plain SQL, no attach needed
     val d = ext.sql(
       "SELECT l2_sq(array(0.0d, 2.0d), array(0.0d, 0.0d)) AS d")
@@ -90,35 +72,6 @@ class ExtensionsSpec extends SparkSpec {
     assert(df.queryExecution.executedPlan.toString.contains("TopKPerKey"),
       df.queryExecution.executedPlan.toString)
     assert(df.count() > 0)
-    // the optimizer rule rewrites declarative HOF vector folds into
-    // the native kernels — plan shows the native names, results are
-    // bit-equal (the kernels fold in the same order)
-    val emb = ext.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val q = emb.filter(col("vec_id") === 0).select(col("v").as("q"))
-    def dot(a: Column, b: Column) =
-      aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-    val hof = emb.crossJoin(q).select(col("vec_id"),
-      aggregate(zip_with(col("v"), col("q"), (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x).as("l2"),
-      (dot(col("v"), col("q")) /
-        (sqrt(dot(col("v"), col("v"))) * sqrt(dot(col("q"), col("q")))))
-        .as("cos"))
-    val p = hof.queryExecution.optimizedPlan.toString
-    assert(p.contains("l2_sq"), s"L2 fold not rewritten:\n$p")
-    assert(p.contains("cosine_sim"), s"cosine fold not rewritten:\n$p")
-    assert(!p.toLowerCase.contains("aggregate(zip_with"),
-      s"HOF fold survived the rewrite:\n$p")
-    // and the rewritten query returns the same values as the
-    // explicitly-native form
-    val viaRule = hof.orderBy("vec_id").collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    val native = emb.crossJoin(q).select(col("vec_id"),
-      l2Sq(col("v"), col("q")).as("l2"),
-      cosineSim(col("v"), col("q")).as("cos"))
-      .orderBy("vec_id").collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    assert(viaRule.sameElements(native))
   }
 
   test("every SQL function name and its typed constructor give the same column") {

@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
 class PartitionedSinkSpec extends SparkSpec {
 
   test("partitionBy sink + partition-pruned scan") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-partsink").toString
+    val tmp = SparkSpec.tempDir("graft-partsink")
     val events = Tables.events(spark, sf)
     events.write.partitionBy("event_type").mode("overwrite").parquet(tmp)
 

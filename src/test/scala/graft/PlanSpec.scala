@@ -74,7 +74,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("w1c: custom strategy plans Filter(rn=1)+Window as TopKPerKeyExec, no sort") {
-    val df = Relational.w1cTopOrderStrategy(spark, sf)
+    val df = Relational.w1TopOrderPerCustomer(spark, sf)
     val p = plan(df)
     // two heap phases (map-side partial + post-exchange final) ...
     assert(p.contains("TopKPerKey (partial)"), s"no map-side phase:\n$p")
@@ -97,11 +97,14 @@ class PlanSpec extends SparkSpec {
     val conf = graft.plans.TopKPerKeyStrategy.PartialMaxKeysConf
     spark.conf.set(conf, "2")
     try {
-      val tiny = Relational.w1cTopOrderStrategy(spark, sf)
+      val tiny = Relational.w1TopOrderPerCustomer(spark, sf)
       assert(plan(tiny).contains("TopKPerKey (partial)"))
       val got = tiny.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
-      val want = Relational.w1TopOrderPerCustomer(spark, sf).collect()
+      // the reference is plain Spark's Window plan, not the heap exec
+      val ref = Relational.w1TopOrderPerCustomer(SparkSpec.isolated(), sf)
+      assert(!plan(ref).contains("TopKPerKey"), plan(ref))
+      val want = ref.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
       assert(got.sameElements(want))
       // the 2-key budget must also have driven the FINAL phase to its
@@ -149,8 +152,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("samp2: deterministic reservoir plans through TopKPerKeyExec, no sort") {
-    val p = plan(Sampling.topNPerStratum(spark,
-      Tables.documents(spark, sf), 5))
+    val p = plan(Sampling.topNPerStratum(Tables.documents(spark, sf), 5))
     assert(p.contains("TopKPerKey (partial)"), p)
     assert(!p.contains("Sort "), s"reservoir must not sort the corpus:\n$p")
   }

@@ -16,7 +16,7 @@ class TableProbeSpec extends SparkSpec {
   test("a broken table reports a _probe_ problem without throwing") {
     // fixture-shaped dir: real tables symlink-copied, one table replaced
     // by a corrupt file that fails the parquet footer read
-    val tmp = java.nio.file.Files.createTempDirectory("graft-probe").toFile
+    val tmp = SparkSpec.tempDir("graft-probe")
     val names = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
     names.foreach { t =>
@@ -27,7 +27,7 @@ class TableProbeSpec extends SparkSpec {
     java.nio.file.Files.write(
       new java.io.File(tmp, "nation.parquet").toPath,
       "not a parquet file".getBytes)
-    val problems = TableProbe.printAndCheck(spark, tmp.toString)
+    val problems = TableProbe.printAndCheck(spark, tmp)
     assert(problems.keySet === Set("_probe_nation"), problems.toString)
     assert(problems("_probe_nation").contains("TESTDATA DRIFT"))
   }
@@ -36,13 +36,13 @@ class TableProbeSpec extends SparkSpec {
     // write a fixture-shaped events table whose ts is raw BIGINT nanos —
     // the loader's LongType branch must rebuild the exact instants the
     // current-generation load produces
-    val tmp = java.nio.file.Files.createTempDirectory("graft-nanos").toFile
+    val tmp = SparkSpec.tempDir("graft-nanos")
     val current = Tables.events(spark, sf)
     current
       .withColumn("ts", (unix_micros(col("ts")) * 1000L).cast("long"))
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$tmp/events.parquet")
-    val legacy = Tables.events(spark, tmp.toString)
+    val legacy = Tables.events(spark, tmp)
     assert(legacy.schema("ts").dataType ===
       org.apache.spark.sql.types.TimestampType)
     val a = current.select("event_id", "ts").collect()

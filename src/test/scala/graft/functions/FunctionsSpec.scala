@@ -18,6 +18,13 @@ class FunctionsSpec extends SparkSpec {
   private def md5Hash60(t: org.apache.spark.sql.Column) =
     conv(substring(md5(t.cast("binary")), 1, 15), 16, 10).cast("long")
 
+  /** The reference side of a kernel pin must reach execution as the
+    * declarative fold, or the pin compares the kernel with itself. */
+  private def assertHofKept(df: org.apache.spark.sql.DataFrame): Unit = {
+    val p = df.queryExecution.optimizedPlan.toString.toLowerCase
+    assert(p.contains("aggregate(zip_with"), s"HOF fold rewritten:\n$p")
+  }
+
   test("md5_base60 == conv(substring(md5)) chain, bit for bit") {
     val d = Tables.documents(spark, sf)
     // per-token (the winnow/minhash shape) AND whole-doc (the sampling
@@ -46,6 +53,7 @@ class FunctionsSpec extends SparkSpec {
       (dot(col("embedding"), col("q")) /
         (sqrt(dot(col("embedding"), col("embedding"))) *
           sqrt(dot(col("q"), col("q"))))).as("hof"))
+    assertHofKept(both)
     assert(both.filter(col("native") =!= col("hof")).count() === 0)
   }
 
@@ -58,6 +66,7 @@ class FunctionsSpec extends SparkSpec {
       aggregate(zip_with(col("embedding").cast("array<double>"),
           col("q").cast("array<double>"), (x, y) => (x - y) * (x - y)),
         lit(0.0), (acc, x) => acc + x).as("hof"))
+    assertHofKept(both)
     assert(both.filter(col("native") =!= col("hof")).count() === 0)
   }
 

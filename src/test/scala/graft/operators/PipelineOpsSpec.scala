@@ -307,7 +307,7 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("topNPerStratum takes exactly min(n, stratum size) per stratum") {
     val docs = Tables.documents(spark, sf)
-    val sizes = Sampling.topNPerStratum(spark, docs, 7)
+    val sizes = Sampling.topNPerStratum(docs, 7)
       .groupBy("lang").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val totals = docs.groupBy("lang").count().collect()

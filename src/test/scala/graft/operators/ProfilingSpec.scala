@@ -46,8 +46,7 @@ class ProfilingSpec extends SparkSpec {
           .otherwise(col("lang")))
       .withColumn("text",
         when(col("doc_id") === 2, lit("")).otherwise(col("text")))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_prof_spec").toString
+    val dir = SparkSpec.tempDir("graft_prof_spec")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val dirty = Profiling.expectations(spark, dir).collect()
       .map(r => r.getString(0) -> r.getLong(2)).toMap

@@ -96,15 +96,26 @@ class Round13Spec extends SparkSpec {
     assert(inside > 0 && inside < 10000, s"vacuous probe grid: $inside")
   }
 
-  test("rank-filter faces plan through the heap exec STANDALONE " +
-    "(strategy registered at the face, not inherited from siblings)") {
-    // the knnClassify lesson generalized: every Filter(rn<=k)-shaped
-    // face must register TopKPerKeyStrategy itself, or a standalone
-    // caller silently gets the WindowGroupLimit + sorts fallback
+  test("rank-filter faces plan through the heap exec on the factory session") {
     val p1 = plan(EventAnalytics.streaks(spark, sf))
     val p2 = plan(Privacy.dpMedian(spark, sf))
+    val p3 = plan(Similarity.knnClassify(spark, sf))
     assert(p1.contains("TopKPerKey (final)"), s"streaks argmax:\n$p1")
     assert(p2.contains("TopKPerKey (final)"), s"dpMedian argmax:\n$p2")
+    assert(p3.contains("TopKPerKey (final)"), s"knnClassify top-k:\n$p3")
+  }
+
+  test("operators leave the caller's session alone") {
+    // the planner strategy comes with the session (Graft.session or
+    // Graft.attach); an operator must not install it in a session it
+    // was handed
+    val s = graft.SparkSpec.isolated()
+    val before = s.sessionState.experimentalMethods.extraStrategies
+    Seq(EventAnalytics.streaks(s, sf), Privacy.dpMedian(s, sf),
+      Similarity.knnClassify(s, sf)).foreach(_.queryExecution.executedPlan)
+    assert(s.sessionState.experimentalMethods.extraStrategies === before)
+    assert(!s.sessionState.planner.strategies
+      .contains(graft.plans.TopKPerKeyStrategy))
   }
 
   test("nearDupStream horizon: gate-scale band buckets sit far below " +

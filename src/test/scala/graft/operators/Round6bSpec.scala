@@ -234,12 +234,12 @@ class Round6bSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(p1.contains("TopKPerKey (final)"),
       s"tfidf rank filter must use the custom heap exec:\n$p1")
-    val p2 = Sampling.epochOrder(spark, graft.Tables.documents(spark, sf))
+    val p2 = Sampling.epochOrder(graft.Tables.documents(spark, sf))
       .queryExecution.executedPlan.toString
     assert(p2.contains("TopKPerKey (final)"),
       s"epoch order must use the custom heap exec:\n$p2")
     // epoch orders replay from the md5 bridge and differ across epochs
-    val rows = Sampling.epochOrder(spark, graft.Tables.documents(spark, sf))
+    val rows = Sampling.epochOrder(graft.Tables.documents(spark, sf))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val byEpoch = rows.groupBy(_._1).view
       .mapValues(_.sortBy(_._2).map(_._3).toSeq).toMap

@@ -80,7 +80,7 @@ class OsmShapeSpec extends SparkSpec {
   }
 
   test("ND-JSON round-trip (reshape_data :565-584)") {
-    val out = java.nio.file.Files.createTempDirectory("graft-json").toString
+    val out = SparkSpec.tempDir("graft-json")
     val shaped = OsmEngine.reshapeToJson(spark, fixture("example.osm"), out)
     val back = spark.read.json(out)
     assert(back.count() === shaped.count())

@@ -72,11 +72,11 @@ class EventStreamsSpec extends SparkSpec {
     // File source over the project's OWN nanos parquet (copied verbatim
     // into a landing dir — the file source wants a directory) —
     // readEventStream handles the TIMESTAMP(NANOS) conversion itself.
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream")
+    val tmp = SparkSpec.tempDir("graft-stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
-      tmp.resolve("events.parquet"))
-    val stream = EventStreams.readEventStream(spark, tmp.toString)
+      java.nio.file.Paths.get(tmp, "events.parquet"))
+    val stream = EventStreams.readEventStream(spark, tmp)
     val q = EventStreams.hourlyTypeCounts(stream)
       .writeStream.outputMode("append").format("memory")
       .queryName("wm_test").trigger(Trigger.AvailableNow()).start()
@@ -394,8 +394,7 @@ class EventStreamsSpec extends SparkSpec {
           100).cast("long").as("cents"))
       .as[EventStreams.PurchaseEvent].collect()
     assert(purchases.length >= 3)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_rfm_restart_").toString
+    val ckpt = SparkSpec.tempDir("graft_rfm_restart_")
     // foreachBatch appends to a driver-side buffer that OUTLIVES the
     // query incarnations (a memory-sink table would be truncated by the
     // restart); a replayed batch may append duplicates — exactly what
@@ -461,8 +460,7 @@ class EventStreamsSpec extends SparkSpec {
       .select(col("event_type"), col("ts"))
       .as[EventStreams.TypedTick].collect().sortBy(_.ts.getTime)
     assert(ticks.length >= 3)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_win_restart_").toString
+    val ckpt = SparkSpec.tempDir("graft_win_restart_")
     val seen = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
     val batchIds = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -648,8 +646,7 @@ class EventStreamsSpec extends SparkSpec {
   test("idempotent sink: committed batch directories are never rewritten") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-sink").toString
+    val base = SparkSpec.tempDir("graft-sink")
     val mem = MemoryStream[Long]
     val q = EventStreams.idempotentSink(
       mem.toDF().withColumnRenamed("value", "doc_id"), base)
@@ -760,8 +757,7 @@ class EventStreamsSpec extends SparkSpec {
     val crawl = graft.operators.Fixtures.crawlBatch(history)
     val rows = crawl.collect()
       .map(r => (r.getLong(0), r.getString(1)))
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_neardup_stream").toString
+    val base = SparkSpec.tempDir("graft_neardup_stream")
     val mem = MemoryStream[(Long, String)]
     val streamDf = mem.toDF()
       .select(col("_1").as("doc_id"), col("_2").as("text"))
@@ -791,8 +787,7 @@ class EventStreamsSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val rows = docs.select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_bm25_stream").toString
+    val base = SparkSpec.tempDir("graft_bm25_stream")
     val mem = MemoryStream[(Long, String)]
     val streamDf = mem.toDF()
       .select(col("_1").as("doc_id"), col("_2").as("text"))
