@@ -4,7 +4,6 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.Kernels._
 
 /** Hybrid retrieval — the fusion layer that turns the engine's sparse
   * (BM25, TextAnalysis.bm25) and dense (cosine ANN, Similarity) arms
@@ -191,10 +190,13 @@ object Retrieval {
     * candidate-term buckets) partitions read, zero corpus scans. */
   def prfRm3Indexed(s: SparkSession, dir: String,
                     seed: Seq[String] = Seq("spark", "query", "filter"),
-                    fbK: Int = 10, expand: Int = 5, k: Int = 10,
-                    buckets: Int = 64): DataFrame = {
+                    fbK: Int = 10, expand: Int = 5, k: Int = 10)
+      : DataFrame = {
+    // term buckets of the BM25 index every phase reads (the staged
+    // keys name it); the doc-bucketed sidecar uses the same count
+    val buckets = 64
     // The RM3 expansion MODEL (the ≤`expand` expanded terms) is a pure
-    // function of (corpus, seed, fbK, expand, buckets) — staged once
+    // function of (corpus, seed, fbK, expand) — staged once
     // per fingerprint (r14), so warm calls skip the whole feedback
     // probe (seed retrieval + doc-bucket read + df read + stats read,
     // four driver round-trips) and pay only the expanded retrieval,
@@ -205,10 +207,9 @@ object Retrieval {
     Staging.buildOnce(mBase) {
     // runs the seed retrieval AND (first call per fingerprint) builds
     // the term-bucketed postings index
-    val fbIds = TextAnalysis.bm25Indexed(s, dir, seed, fbK)
+    val fbIds = TextAnalysis.bm25Indexed(s, dir, seed, fbK, buckets)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSeq // ≤fbK
-    val base = Staging.base("bm25_index_v1", dir, s"b$buckets",
-      "documents")
+    val root = TextAnalysis.bm25IndexRoot(s, dir, buckets)
     // doc-bucketed sidecar of the SAME postings rows (built once per
     // fingerprint FROM the term-bucketed index — no re-tokenization):
     // the feedback-doc probe is doc-major, so without it the probe
@@ -216,17 +217,13 @@ object Retrieval {
     val docBase = Staging.base("rm3_docpost_v1", dir, s"b$buckets",
       "documents")
     Staging.buildOnce(docBase) {
-      s.read.parquet(s"$base/postings")
-        .select(col("doc_id"), col("term"), col("tf"), col("dl"))
-        .withColumn("db", pmod(md5Base60(
-          col("doc_id").cast("string")), lit(buckets.toLong)))
+      TextAnalysis.bm25Postings(s, root)
+        .withColumn("db", TextAnalysis.bucketOf(
+          col("doc_id").cast("string"), buckets))
         .write.mode("overwrite").partitionBy("db")
         .parquet(s"$docBase/postings")
     }
-    val dbs = fbIds.map(id => math.floorMod(
-      graft.functions.Md5Base.hash60(
-        org.apache.spark.unsafe.types.UTF8String.fromString(id.toString)),
-      buckets.toLong)).distinct
+    val dbs = TextAnalysis.bucketIds(fbIds.map(_.toString), buckets)
     // feedback docs' term distributions: a ≤fbK-bucket pruned read;
     // relevance weights collect to the driver (bounded by the feedback
     // docs' combined vocabulary — fbK × doc length, model-sized)
@@ -241,16 +238,10 @@ object Retrieval {
     // the main index (candidate terms are known driver-side now), df =
     // postings rows per term (postings are distinct (doc, term) pairs)
     val cand = relw.keySet.toSeq.sorted
-    val tbs = cand.map(t => math.floorMod(
-      graft.functions.Md5Base.hash60(
-        org.apache.spark.unsafe.types.UTF8String.fromString(t)),
-      buckets.toLong)).distinct
-    val dfMap = s.read.parquet(s"$base/postings")
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(cand: _*))
+    val dfMap = TextAnalysis.indexedPostings(s, Seq(root), cand, buckets)
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val n = s.read.parquet(s"$base/stats").collect().head
-      .getAs[Long]("n")
+    val n = TextAnalysis.bm25Stats(s, Seq(root))._1
     // model-sized driver finish, HALF_UP at the same two rounding
     // boundaries the distributed face quantizes at (6dp idf, 0dp
     // weight) — bit-equal by construction, Round10Spec pins it
@@ -273,7 +264,7 @@ object Retrieval {
     }
     val expTerms = s.read.parquet(s"$mBase/terms")
       .orderBy(col("ord")).collect().map(_.getString(0)).toSeq
-    TextAnalysis.bm25Indexed(s, dir, seed ++ expTerms, k)
+    TextAnalysis.bm25Indexed(s, dir, seed ++ expTerms, k, buckets)
   }
 
   /** `ret8_multi_rrf_indexed` — three-arm reciprocal-rank fusion

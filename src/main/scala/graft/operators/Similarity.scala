@@ -37,17 +37,28 @@ object Similarity {
     Tables.embeddings(s, dir).filter(col("vec_id") === 0)
       .select(col("embedding").as("q"))
 
+  /** The exact re-rank tail every ANN face ends in: 6dp cosine of
+    * `embedding` against the query `q`, top-k on (cos_sim desc, vec_id
+    * asc) — the pinned ordering the oracles replay. `extra` columns ride
+    * between vec_id and cos_sim; `dedup` collapses a vector matched in
+    * several LSH bands (its score is a per-vector constant, so distinct
+    * runs on the narrow (id, score) rows). */
+  private def rerank(df: DataFrame, k: Int, extra: Seq[Column] = Nil,
+                     dedup: Boolean = false): DataFrame = {
+    val scored = df.select(((col("vec_id") +: extra) :+
+      round(cosine(col("embedding"), col("q")), 6).as("cos_sim")): _*)
+    (if (dedup) scored.distinct() else scored)
+      .orderBy(col("cos_sim").desc, col("vec_id").asc)
+      .limit(k)
+  }
+
   /** Brute-force cosine top-k: broadcast the query, one scan, per-row
     * cosine, TakeOrderedAndProject for the top-k (per-partition heaps —
     * no global sort). Ordering is on the rounded score with vec_id
     * tiebreak, pinned for the oracle. */
   def annBruteForce(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
     val e = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-    e.crossJoin(broadcast(queryVec(s, dir)))
-      .select(col("vec_id"), col("label"),
-        round(cosine(col("embedding"), col("q")), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      .limit(k)
+    rerank(e.crossJoin(broadcast(queryVec(s, dir))), k, Seq(col("label")))
   }
 
   /** Deterministic Rademacher hyperplanes (Charikar-style SimHash for
@@ -80,6 +91,14 @@ object Similarity {
       b => aggregate(slice(bitsArr, b * w + 1, lit(w)), lit(0),
         (acc, x) => acc * 2 + x))
 
+  /** The banded-signature projection of the LSH family: `keep` plus one
+    * (band, bval) row per band of `v`'s `bits`-bit signature. */
+  private def withBands(df: DataFrame, keep: Seq[Column], v: Column,
+                        bits: Int, bands: Int): DataFrame =
+    df.select(keep :+
+        posexplode(bandVals(sigBits(v, bits), bands, bits / bands)): _*)
+      .withColumnsRenamed(Map("pos" -> "band", "col" -> "bval"))
+
   /** LSH-bucketed ANN with banded multi-probe: 16-bit hyperplane
     * signature split into 4 bands × 4 bits; a corpus vector is a
     * candidate if ANY of its 4 band values matches the query's — so
@@ -93,26 +112,14 @@ object Similarity {
   def annLsh(s: SparkSession, dir: String, k: Int = 10,
              bits: Int = 16, bands: Int = 4,
              probeBands: Int = Int.MaxValue): DataFrame = {
-    val w = bits / bands
-    val corpus = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"),
-        posexplode(bandVals(sigBits(col("embedding"), bits), bands, w)))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "bval"))
+    val corpus = withBands(Tables.embeddings(s, dir).filter(col("vec_id") =!= 0),
+      Seq(col("vec_id"), col("embedding")), col("embedding"), bits, bands)
     // probeBands < bands probes only the first b bands — the knob
     // [[lshBandCurve]] sweeps (fewer probed buckets = cheaper query,
     // lower recall); default probes all bands
-    val q = queryVec(s, dir)
-      .select(col("q"), posexplode(bandVals(sigBits(col("q"), bits), bands, w)))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "bval"))
+    val q = withBands(queryVec(s, dir), Seq(col("q")), col("q"), bits, bands)
       .filter(col("band") < math.min(probeBands, bands))
-    corpus.join(broadcast(q), Seq("band", "bval"))
-      .select(col("vec_id"),
-        round(cosine(col("embedding"), col("q")), 6).as("cos_sim"))
-      // a vector can match in several bands; scores are per-vector
-      // constants so distinct collapses the duplicates on narrow rows
-      .distinct()
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      .limit(k)
+    rerank(corpus.join(broadcast(q), Seq("band", "bval")), k, dedup = true)
   }
 
   /** LSH with a PERSISTED banded-signature index — the [[annIvfIndexed]]
@@ -130,7 +137,11 @@ object Similarity {
     * corpus per query (annLsh) and an O(matched buckets) read: the
     * banded signature table IS the partition layout, built once and
     * amortized across the query session — exactly the FAISS-style
-    * "index build then probe" split annIvfIndexed/bm25Indexed use. */
+    * "index build then probe" split annIvfIndexed/bm25Indexed use.
+    *
+    * The one-generation case of the LSH index kernel: [[lshBuildGen]]
+    * over the whole corpus, probed by [[lshProbeGens]] — the same pair
+    * [[annLshIncremental]] runs over base and delta generations. */
   def annLshIndexed(s: SparkSession, dir: String, k: Int = 10,
                     bits: Int = 16, bands: Int = 4,
                     probeBands: Int = Int.MaxValue): DataFrame = {
@@ -138,7 +149,8 @@ object Similarity {
     // lshBandCurve sweeps; a dropped band removes its partition
     // directories from the static filter
     val (qBands, idx) = lshIndexParts(s, dir, bits, bands)
-    annLshProbe(s, dir, idx, qBands.filter(_._1 < math.min(probeBands, bands)), k)
+    lshProbeGens(s, dir, Seq(idx),
+      qBands.filter(_._1 < math.min(probeBands, bands)), k)
   }
 
   /** The staged band index + collected query band values — the two
@@ -147,44 +159,44 @@ object Similarity {
     * partitioned-directory listing once instead of once per depth. */
   private def lshIndexParts(s: SparkSession, dir: String, bits: Int = 16,
                             bands: Int = 4): (Array[(Int, Int)], DataFrame) = {
-    val w = bits / bands
     // v1 = plane-seed/band-arithmetic version — bump on semantic change
     val base = Staging.base("lsh_index_v1", dir, s"b${bits}x$bands",
       "embeddings")
     Staging.buildOnce(base) {
-      Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), col("embedding"),
-          posexplode(bandVals(sigBits(col("embedding"), bits), bands, w)))
-        .withColumnsRenamed(Map("pos" -> "band", "col" -> "bval"))
-        .write.mode("overwrite").partitionBy("band", "bval")
-        .parquet(s"$base/bands")
+      lshBuildGen(Tables.embeddings(s, dir), base, bits, bands)
     }
-    val qBands = queryVec(s, dir)
-      .select(posexplode(bandVals(sigBits(col("q"), bits), bands, w)))
-      .collect().map(r => (r.getInt(0), r.getInt(1)))
-    (qBands, s.read.parquet(s"$base/bands"))
+    (lshQueryBands(s, dir, bits, bands), s.read.parquet(s"$base/bands"))
   }
 
-  /** The probe/score/dedup/top-k tail of [[annLshIndexed]] over an
-    * already-listed index frame and already-collected band values —
-    * bit-identical to the one-shot form by construction (same static
-    * filter, same cosine, same distinct + tie-broken top-k). */
-  private def annLshProbe(s: SparkSession, dir: String, bandsDf: DataFrame,
-                          qBands: Array[(Int, Int)],
-                          k: Int = 10): DataFrame = {
+  /** Build one LSH index GENERATION at `path`: the rows' (band, bval,
+    * embedding) table, partitioned by (band, bval). */
+  private def lshBuildGen(rows: DataFrame, path: String, bits: Int,
+                          bands: Int): Unit =
+    withBands(rows.filter(col("vec_id") =!= 0),
+      Seq(col("vec_id"), col("embedding")), col("embedding"), bits, bands)
+      .write.mode("overwrite").partitionBy("band", "bval")
+      .parquet(s"$path/bands")
+
+  /** The query's (band, bval) pairs, collected driver-side so every
+    * generation read plans a STATIC partition filter. */
+  private def lshQueryBands(s: SparkSession, dir: String, bits: Int,
+                            bands: Int): Array[(Int, Int)] =
+    withBands(queryVec(s, dir), Nil, col("q"), bits, bands)
+      .collect().map(r => (r.getInt(0), r.getInt(1)))
+
+  /** Probe already-listed generation frames with collected query band
+    * values: each generation is its own (band, bval)-partitioned root,
+    * so the statically-pruned scans union (the LSM read shape) before
+    * the shared exact re-rank, deduped across bands. */
+  private def lshProbeGens(s: SparkSession, dir: String,
+                           gens: Seq[DataFrame], qBands: Array[(Int, Int)],
+                           k: Int): DataFrame = {
     val probe = qBands.map { case (b, v) =>
       col("band") === b && col("bval") === v
     }.reduce(_ || _)
-    bandsDf
-      .filter(probe)
-      .crossJoin(broadcast(queryVec(s, dir)))
-      .select(col("vec_id"),
-        round(cosine(col("embedding"), col("q")), 6).as("cos_sim"))
-      // same dedup as annLsh: a vector matching in several bands scores
-      // identically, so distinct on the narrow (id, score) pair
-      .distinct()
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      .limit(k)
+    rerank(gens.map(_.filter(probe).select(col("vec_id"), col("embedding")))
+      .reduce(_ unionByName _)
+      .crossJoin(broadcast(queryVec(s, dir))), k, dedup = true)
   }
 
   /** Multi-probe LSH — more recall from the SAME index: besides each
@@ -201,24 +213,14 @@ object Similarity {
     * recall(multiprobe) ≥ recall(lsh). */
   def annLshMultiprobe(s: SparkSession, dir: String, k: Int = 10,
                        bits: Int = 16, bands: Int = 4): DataFrame = {
-    val w = bits / bands
-    val corpus = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"),
-        posexplode(bandVals(sigBits(col("embedding"), bits), bands, w)))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "bval"))
-    val perturbs = (0 until w).map(j => col("bval").bitwiseXOR(lit(1 << j)))
-    val q = queryVec(s, dir)
-      .select(col("q"),
-        posexplode(bandVals(sigBits(col("q"), bits), bands, w)))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "bval"))
+    val corpus = withBands(Tables.embeddings(s, dir).filter(col("vec_id") =!= 0),
+      Seq(col("vec_id"), col("embedding")), col("embedding"), bits, bands)
+    val perturbs = (0 until bits / bands)
+      .map(j => col("bval").bitwiseXOR(lit(1 << j)))
+    val q = withBands(queryVec(s, dir), Seq(col("q")), col("q"), bits, bands)
       .select(col("q"), col("band"),
         explode(array(col("bval") +: perturbs: _*)).as("bval"))
-    corpus.join(broadcast(q), Seq("band", "bval"))
-      .select(col("vec_id"),
-        round(cosine(col("embedding"), col("q")), 6).as("cos_sim"))
-      .distinct()
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      .limit(k)
+    rerank(corpus.join(broadcast(q), Seq("band", "bval")), k, dedup = true)
   }
 
   /** INCREMENTAL maintenance of the persisted LSH signature index —
@@ -240,8 +242,7 @@ object Similarity {
     * only; per query, an O(matched buckets × generations) read. */
   def annLshIncremental(s: SparkSession, dir: String, k: Int = 10,
                         bits: Int = 16, bands: Int = 4): DataFrame =
-    lshIncrQuery(s, dir, k, bits, bands,
-      base => Seq(s"$base/bands", s"$base/delta/bands"))
+    lshIncrQuery(s, dir, k, bits, bands, base => Seq(base, s"$base/delta"))
 
   /** COMPACTION of the incremental LSH signature index — the LSH face
     * of [[annIvfCompacted]]: base + delta band generations rewrite
@@ -253,58 +254,45 @@ object Similarity {
   def annLshCompacted(s: SparkSession, dir: String, k: Int = 10,
                       bits: Int = 16, bands: Int = 4): DataFrame =
     lshIncrQuery(s, dir, k, bits, bands, { base =>
-      Staging.buildOnce(s"$base/compact") {
-        Seq(s"$base/bands", s"$base/delta/bands")
-          .map(p => s.read.parquet(p).select(col("vec_id"),
-            col("embedding"), col("band"), col("bval")))
-          .reduce(_ unionByName _)
-          .write.mode("overwrite").partitionBy("band", "bval")
-          .parquet(s"$base/compact/bands")
-      }
-      Seq(s"$base/compact/bands")
+      compactGens(s, Seq(base, s"$base/delta"), s"$base/compact", "bands",
+        "band", "bval")
+      Seq(s"$base/compact")
     })
 
-  /** Shared staging + query kernel of the incremental-LSH faces —
-    * `gens` picks the generation roots the query unions. */
+  /** Rewrite the generations' `sub` tables ONCE into one generation at
+    * `out`, partitioned by `parts` — compaction co-locates rows, never
+    * recomputes them, and the out dir is its own overwrite-mode root
+    * (crash-idempotent like every generation build). */
+  private def compactGens(s: SparkSession, roots: Seq[String], out: String,
+                          sub: String, parts: String*): Unit =
+    Staging.buildOnce(out) {
+      roots.map(g => s.read.parquet(s"$g/$sub")
+          .select((Seq("vec_id", "embedding") ++ parts).map(col): _*))
+        .reduce(_ unionByName _)
+        .write.mode("overwrite").partitionBy(parts: _*)
+        .parquet(s"$out/$sub")
+    }
+
+  /** Shared staging + query kernel of the incremental-LSH faces: base
+    * and delta generations land exactly once through [[lshBuildGen]];
+    * `gens` picks the generation roots [[lshProbeGens]] unions. */
   private def lshIncrQuery(s: SparkSession, dir: String, k: Int,
                            bits: Int, bands: Int,
                            gens: String => Seq[String]): DataFrame = {
-    val w = bits / bands
     val e = Tables.embeddings(s, dir)
     val splitAt = e.agg(max(col("vec_id"))).head().getLong(0) / 2
     val base = Staging.base("lsh_incr_v1", dir, s"b${bits}x${bands}s$splitAt",
       "embeddings")
-    def buildGen(rows: DataFrame, path: String): Unit =
-      rows.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), col("embedding"),
-          posexplode(bandVals(sigBits(col("embedding"), bits), bands, w)))
-        .withColumnsRenamed(Map("pos" -> "band", "col" -> "bval"))
-        .write.mode("overwrite").partitionBy("band", "bval")
-        .parquet(s"$path/bands")
     Staging.buildOnce(base) {
-      buildGen(e.filter(col("vec_id") <= splitAt), base)
+      lshBuildGen(e.filter(col("vec_id") <= splitAt), base, bits, bands)
     }
     Staging.buildOnce(s"$base/delta") {
-      buildGen(e.filter(col("vec_id") > splitAt), s"$base/delta")
+      lshBuildGen(e.filter(col("vec_id") > splitAt), s"$base/delta", bits,
+        bands)
     }
-    val qBands = queryVec(s, dir)
-      .select(posexplode(bandVals(sigBits(col("q"), bits), bands, w)))
-      .collect().map(r => (r.getInt(0), r.getInt(1)))
-    val probe = qBands.map { case (b, v) =>
-      col("band") === b && col("bval") === v
-    }.reduce(_ || _)
-    // each generation is its own (band, bval)-partitioned root —
-    // statically-pruned scans unioned, exactly the LSM read shape
-    gens(base).map { p =>
-      s.read.parquet(p).filter(probe)
-        .select(col("vec_id"), col("embedding"))
-    }.reduce(_ unionByName _)
-      .crossJoin(broadcast(queryVec(s, dir)))
-      .select(col("vec_id"),
-        round(cosine(col("embedding"), col("q")), 6).as("cos_sim"))
-      .distinct()
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      .limit(k)
+    val qBands = lshQueryBands(s, dir, bits, bands)
+    lshProbeGens(s, dir, gens(base).map(g => s.read.parquet(s"$g/bands")),
+      qBands, k)
   }
 
   /** Embedding near-duplicate pairs on a bounded slice: all-pairs cosine
@@ -362,11 +350,8 @@ object Similarity {
     * engines agree on the exact candidate set. */
   def nearDupLsh(s: SparkSession, dir: String, threshold: Double = 0.4,
                  bits: Int = 16, bands: Int = 4): DataFrame = {
-    val w = bits / bands
     val e = Tables.embeddings(s, dir)
-    val sigs = e.select(col("vec_id"),
-        posexplode(bandVals(sigBits(col("embedding"), bits), bands, w)))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "bval"))
+    val sigs = withBands(e, Seq(col("vec_id")), col("embedding"), bits, bands)
     val cand = sigs.select(col("vec_id").as("vec_a"), col("band"), col("bval"))
       .join(sigs.select(col("vec_id").as("vec_b"), col("band"), col("bval")),
         Seq("band", "bval"))
@@ -417,8 +402,7 @@ object Similarity {
       "cell", "centroid")
 
   /** Quantizer literal for a corpus (slice) — the collected model as a
-    * shippable Column; spec/harness access to the private
-    * quantizer+centLiteral pair. */
+    * shippable Column (a K-row model collect, never data). */
   private[graft] def centsOf(e: DataFrame): Column =
     centLiteral(quantizer(e).collect())
 
@@ -429,27 +413,42 @@ object Similarity {
       struct(round(lit(1.0) - cosine(v, c.getField("centroid")), 6).as("dist"),
         c.getField("cell").as("cell")))
 
+  /** Nearest-cell assignment under a centroid-literal model. */
+  private def cellOf(cents: Column)(v: Column): Column =
+    array_min(distsTo(cents)(v)).getField("cell")
+
+  /** The query's `nprobe` nearest cells as (q, cell) rows — the probe
+    * pick of the whole IVF family (a single-row subtree). */
+  private def probeCells(s: SparkSession, dir: String, cents: Column,
+                         nprobe: Int): DataFrame =
+    queryVec(s, dir)
+      .select(col("q"), posexplode(array_sort(distsTo(cents)(col("q")))))
+      .filter(col("pos") < nprobe)
+      .select(col("q"), col("col").getField("cell").as("cell"))
+
+  /** [[probeCells]]' ids collected driver-side (model-sized), so an
+    * index read plans a STATIC IN-filter on the partition column. */
+  private def probeCellIds(s: SparkSession, dir: String, cents: Column,
+                           nprobe: Int): Seq[Int] =
+    probeCells(s, dir, cents, nprobe).select(col("cell"))
+      .collect().map(_.getInt(0)).toIndexedSeq
+
+  /** The staged K-row quantizer of an index root, as a literal. */
+  private def modelCents(s: SparkSession, base: String): Column =
+    centLiteral(
+      s.read.parquet(s"$base/model").select("cell", "centroid").collect())
+
   def annIvf(s: SparkSession, dir: String, k: Int = 10,
              nprobe: Int = 3, sharedCents: Option[Column] = None): DataFrame = {
     val e = Tables.embeddings(s, dir)
     // K model rows, not data; callers running several IVF-family methods
     // (annRecall) pass the collected model in so it builds once
-    val cents = sharedCents.getOrElse(centLiteral(quantizer(e).collect()))
-    val dists = distsTo(cents) _
-    // query probes its nprobe nearest cells (single-row subtree)
-    val probes = queryVec(s, dir)
-      .select(col("q"), posexplode(array_sort(dists(col("q")))))
-      .filter(col("pos") < nprobe)
-      .select(col("q"), col("col").getField("cell").as("cell"))
+    val cents = sharedCents.getOrElse(centsOf(e))
     // inverted file: nearest-centroid assignment as a zero-shuffle map
-    e.filter(col("vec_id") =!= 0)
+    rerank(e.filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("embedding"),
-        array_min(dists(col("embedding"))).getField("cell").as("cell"))
-      .join(broadcast(probes), "cell")
-      .select(col("vec_id"),
-        round(cosine(col("embedding"), col("q")), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      .limit(k)
+        cellOf(cents)(col("embedding")).as("cell"))
+      .join(broadcast(probeCells(s, dir, cents, nprobe)), "cell"), k)
   }
 
   /** IVF with a PERSISTED inverted file — the incremental-ANN path (the
@@ -464,46 +463,18 @@ object Similarity {
     * per-query cost from a full corpus scan into an O(probed cells)
     * read: the inverted file IS the partition layout, and the model
     * build amortizes across the whole query session.
+    *
+    * The one-generation case of the IVF index kernel: [[ivfBuildRoot]]
+    * over the whole corpus, queried by [[ivfQueryGens]] over that one
+    * root — the pair [[annIvfIndexedIncremental]] runs over base and
+    * delta generations.
     */
   def annIvfIndexed(s: SparkSession, dir: String, k: Int = 10,
                     nprobe: Int = 3): DataFrame = {
-    // the index path is keyed by path AND a (size, mtime) fingerprint
-    // of the source parquet: regenerate the dataset and the old index
-    // is simply a different (ignored) directory — a stale index can
-    // never serve a changed corpus. Concurrent FIRST queries in
-    // separate JVMs can still race the build; a deployment puts a lock
-    // (or a scheduler-owned build step) in front, same as any shared
-    // index build.
     // v1 = quantizer/algorithm version — bump on semantic change
     val base = Staging.base("ivf_index_v1", dir, "", "embeddings")
-    val marker = new java.io.File(s"$base/_built")
-    if (!marker.exists()) {
-      val e = Tables.embeddings(s, dir)
-      quantizer(e).coalesce(1).write.mode("overwrite").parquet(s"$base/model")
-      val cents = centLiteral(
-        s.read.parquet(s"$base/model").select("cell", "centroid").collect())
-      e.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), col("embedding"),
-          array_min(distsTo(cents)(col("embedding"))).getField("cell").as("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$base/cells")
-      marker.createNewFile()
-    }
-    val cents = centLiteral(
-      s.read.parquet(s"$base/model").select("cell", "centroid").collect())
-    // nprobe cell ids, collected driver-side (model-sized) so the index
-    // read is a STATIC IN-filter on the partition column
-    val probeCells = queryVec(s, dir)
-      .select(posexplode(array_sort(distsTo(cents)(col("q")))))
-      .filter(col("pos") < nprobe)
-      .select(col("col").getField("cell").as("cell"))
-      .collect().map(_.getInt(0))
-    s.read.parquet(s"$base/cells")
-      .filter(col("cell").isin(probeCells.toIndexedSeq: _*))
-      .crossJoin(broadcast(queryVec(s, dir)))
-      .select(col("vec_id"),
-        round(cosine(col("embedding"), col("q")), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      .limit(k)
+    ivfBuildRoot(s, base, Tables.embeddings(s, dir))()
+    ivfQueryGens(s, dir, base, Seq(base), k, nprobe)
   }
 
   /** INCREMENTAL maintenance of the persisted IVF index — the
@@ -531,8 +502,7 @@ object Similarity {
     * nothing. */
   def annIvfIndexedIncremental(s: SparkSession, dir: String, k: Int = 10,
                                nprobe: Int = 3): DataFrame =
-    ivfIncrQuery(s, dir, k, nprobe,
-      base => Seq(s"$base/cells", s"$base/delta/cells"))
+    ivfIncrQuery(s, dir, k, nprobe, base => Seq(base, s"$base/delta"))
 
   /** COMPACTION of the incremental IVF index — the third LSM verb
     * (build, append, [[annIvfIndexedIncremental]]; now merge): the
@@ -545,79 +515,74 @@ object Similarity {
     * 100 TB this is the background maintenance job that bounds read
     * amplification: generations accumulate per append batch, queries
     * degrade O(generations), and compaction resets that to 1 without
-    * touching the model or the live generations (the compact dir is
-    * its own overwrite-mode root — crash-idempotent like every other
-    * generation build). */
+    * touching the model or the live generations. */
   def annIvfCompacted(s: SparkSession, dir: String, k: Int = 10,
                       nprobe: Int = 3): DataFrame =
     ivfIncrQuery(s, dir, k, nprobe, { base =>
-      Staging.buildOnce(s"$base/compact") {
-        Seq(s"$base/cells", s"$base/delta/cells")
-          .map(p => s.read.parquet(p)
-            .select(col("vec_id"), col("embedding"), col("cell")))
-          .reduce(_ unionByName _)
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$base/compact/cells")
-      }
-      Seq(s"$base/compact/cells")
+      compactGens(s, Seq(base, s"$base/delta"), s"$base/compact", "cells",
+        "cell")
+      Seq(s"$base/compact")
     })
 
-  /** Shared staging + query kernel of the incremental-IVF faces: base
-    * build (quantizer + base-slice inverted file) and frozen-model
-    * delta generation land exactly once; `gens` picks which
-    * generation roots the query unions (the append face reads both,
-    * the compacted face first merges then reads one). */
+  /** Build one IVF index GENERATION at `path`: the rows' nearest-cell
+    * assignment under the frozen model `cents`, cell-partitioned. */
+  private def ivfBuildGen(cents: Column, rows: DataFrame,
+                          path: String): Unit =
+    rows.filter(col("vec_id") =!= 0)
+      .select(col("vec_id"), col("embedding"),
+        cellOf(cents)(col("embedding")).as("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
+
+  /** The ROOT generation of an IVF index, exactly once: the quantizer
+    * trained on `rows` staged as `$base/model`, then `gen` builds the
+    * rows' generation under it — [[ivfBuildGen]] by default, while
+    * [[annIvfPqIndexed]]'s generation stores PQ codes as well. `rows`
+    * is by-name: a built root never reads its source table. */
+  private def ivfBuildRoot(s: SparkSession, base: String, rows: => DataFrame)(
+      gen: (Column, DataFrame) => Unit = ivfBuildGen(_, _, base)): Unit =
+    Staging.buildOnce(base) {
+      val r = rows
+      quantizer(r).coalesce(1).write.mode("overwrite")
+        .parquet(s"$base/model")
+      gen(modelCents(s, base), r)
+    }
+
+  /** Query over IVF generation roots sharing the model of `base`: the
+    * probe cells are collected once, each generation is its own
+    * cell-partitioned root (Spark rejects nested multi-root partition
+    * discovery), and the statically-pruned scans union — exactly the
+    * LSM read shape — before the shared exact re-rank. */
+  private def ivfQueryGens(s: SparkSession, dir: String, base: String,
+                           gens: Seq[String], k: Int,
+                           nprobe: Int): DataFrame = {
+    val cells = probeCellIds(s, dir, modelCents(s, base), nprobe)
+    rerank(gens.map { g =>
+      s.read.parquet(s"$g/cells").filter(col("cell").isin(cells: _*))
+        .select(col("vec_id"), col("embedding"))
+    }.reduce(_ unionByName _).crossJoin(broadcast(queryVec(s, dir))), k)
+  }
+
+  /** Shared staging + query kernel of the incremental-IVF faces: the
+    * base-slice root ([[ivfBuildRoot]]) and the frozen-model delta
+    * generation land exactly once; `gens` picks which generation roots
+    * [[ivfQueryGens]] unions (the append face reads both, the compacted
+    * face first merges then reads one). */
   private def ivfIncrQuery(s: SparkSession, dir: String, k: Int,
                            nprobe: Int,
                            gens: String => Seq[String]): DataFrame = {
     val e = Tables.embeddings(s, dir)
     val splitAt = e.agg(max(col("vec_id"))).head().getLong(0) / 2
     val base = Staging.base("ivf_incr_v2", dir, s"s$splitAt", "embeddings")
-    def assignWith(cents: Column, rows: DataFrame): DataFrame =
-      rows.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), col("embedding"),
-          array_min(distsTo(cents)(col("embedding"))).getField("cell")
-            .as("cell"))
-    // base build: quantizer + inverted file over the base slice only
-    Staging.buildOnce(base) {
-      quantizer(e.filter(col("vec_id") <= splitAt))
-        .coalesce(1).write.mode("overwrite").parquet(s"$base/model")
-      val cents = centLiteral(
-        s.read.parquet(s"$base/model").select("cell", "centroid").collect())
-      assignWith(cents, e.filter(col("vec_id") <= splitAt))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$base/cells")
-    }
+    ivfBuildRoot(s, base, e.filter(col("vec_id") <= splitAt))()
     // delta generation, exactly once (its own marker): frozen model,
     // a SEPARATE overwrite-mode cell-partitioned directory — a crashed
     // build retries idempotently (same input ⇒ same bytes), which an
     // append into $base/cells could not guarantee
     Staging.buildOnce(s"$base/delta") {
-      val cents = centLiteral(
-        s.read.parquet(s"$base/model").select("cell", "centroid").collect())
-      assignWith(cents, e.filter(col("vec_id") > splitAt))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$base/delta/cells")
+      ivfBuildGen(modelCents(s, base), e.filter(col("vec_id") > splitAt),
+        s"$base/delta")
     }
-    val cents = centLiteral(
-      s.read.parquet(s"$base/model").select("cell", "centroid").collect())
-    val probeCells = queryVec(s, dir)
-      .select(posexplode(array_sort(distsTo(cents)(col("q")))))
-      .filter(col("pos") < nprobe)
-      .select(col("col").getField("cell").as("cell"))
-      .collect().map(_.getInt(0))
-    // each generation is its own cell-partitioned root (Spark rejects
-    // nested multi-root partition discovery) — statically-pruned
-    // scans unioned, exactly the LSM read shape
-    gens(base).map { p =>
-      s.read.parquet(p)
-        .filter(col("cell").isin(probeCells.toIndexedSeq: _*))
-        .select(col("vec_id"), col("embedding"))
-    }.reduce(_ unionByName _)
-      .crossJoin(broadcast(queryVec(s, dir)))
-      .select(col("vec_id"),
-        round(cosine(col("embedding"), col("q")), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      .limit(k)
+    ivfQueryGens(s, dir, base, gens(base), k, nprobe)
   }
 
   /** Scalar-quantized ANN: embeddings quantized to int8 (clamped round
@@ -635,16 +600,13 @@ object Similarity {
     val e = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("embedding"), q8(col("embedding")).as("v8"))
     val q = queryVec(s, dir).select(col("q"), q8(col("q")).as("qv8"))
-    e.crossJoin(broadcast(q))
+    val short = e.crossJoin(broadcast(q))
       .select(col("vec_id"), col("embedding"), col("q"),
         aggregate(zip_with(col("v8"), col("qv8"), (a, b) => a * b),
           lit(0L), (acc, x) => acc + x).as("sq_score"))
       .orderBy(col("sq_score").desc, col("vec_id").asc)
       .limit(shortlist)
-      .select(col("vec_id"),
-        round(cosine(col("embedding"), col("q")), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      .limit(k)
+    rerank(short, k)
   }
 
   /** `sim_ann_bq` — 1-bit (sign) binary-quantization ANN, the missing
@@ -683,17 +645,13 @@ object Similarity {
         bqHalf(col("embedding"), 32).as("c_hi"))
     val q = queryVec(s, dir).select(col("q"),
       bqHalf(col("q"), 0).as("q_lo"), bqHalf(col("q"), 32).as("q_hi"))
-    e.crossJoin(broadcast(q))
+    rerank(e.crossJoin(broadcast(q))
       .select(col("vec_id"), col("embedding"), col("q"),
         (bit_count(col("c_lo").bitwiseXOR(col("q_lo"))) +
           bit_count(col("c_hi").bitwiseXOR(col("q_hi"))))
           .cast("long").as("hamming"))
       .orderBy(col("hamming").asc, col("vec_id").asc)
-      .limit(shortlist)
-      .select(col("vec_id"),
-        round(cosine(col("embedding"), col("q")), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      .limit(k)
+      .limit(shortlist), k)
   }
 
   /** [[annBinaryQuant]] against a PERSISTED code table — the staged
@@ -723,13 +681,8 @@ object Similarity {
           .cast("long").as("hamming"))
       .orderBy(col("hamming").asc, col("vec_id").asc)
       .limit(shortlist)
-    short
-      .join(Tables.embeddings(s, dir), "vec_id")
-      .crossJoin(broadcast(q.select(col("q"))))
-      .select(col("vec_id"),
-        round(cosine(col("embedding"), col("q")), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      .limit(k)
+    rerank(short.join(Tables.embeddings(s, dir), "vec_id")
+      .crossJoin(broadcast(q.select(col("q")))), k)
   }
 
   /** Product-quantized ANN (IVF-PQ's compression half): the 64-dim space
@@ -754,57 +707,98 @@ object Similarity {
     val e = Tables.embeddings(s, dir)
     // codebook: subspace slices of corpus vectors 1..ksub, 6dp-rounded
     // (a K-row model collect, like annIvf's quantizer — never data)
-    val cbRows = e.filter(col("vec_id") >= 1 && col("vec_id") <= ksub)
+    val kit = new PqKit(e.filter(col("vec_id") >= 1 && col("vec_id") <= ksub)
       .select(col("vec_id"),
         transform(col("embedding").cast("array<double>"), x => round(x, 6))
           .as("v"))
-      .collect().sortBy(_.getLong(0))
-    def book(mi: Int): Column = ModelLit.cells(
-      cbRows.zipWithIndex.toIndexedSeq.map { case (r, j) =>
+      .collect().sortBy(_.getLong(0)).toIndexedSeq, m, dsub)
+    val q = queryVec(s, dir)
+      .select(col("q"), kit.dts(col("q").cast("array<double>")).as("dt"))
+    rerank(adcShortlist(e.filter(col("vec_id") =!= 0)
+      .select(col("vec_id"), col("embedding"),
+        kit.subsOf(col("embedding").cast("array<double>")).as("subs"))
+      .select(col("vec_id"), col("embedding"),
+        kit.codes(col("subs")).as("code"))
+      .crossJoin(broadcast(q)), shortlist), k, Seq(col("adc_dist")))
+  }
+
+  /** Residual against the assigned/probed cell's centroid. */
+  private def pqResid(cents: Column)(v: Column, cell: Column): Column =
+    zip_with(v.cast("array<double>"),
+      element_at(filter(cents, c => c.getField("cell") === cell), 1)
+        .getField("centroid"),
+      (x, mu) => x - mu)
+
+  /** A PQ codebook over collected (id, vector) rows — ONE definition
+    * of codebook literals, sub-slicing, encoding and ADC tables, shared
+    * by [[annPq]] (raw-vector codebook) and the IVF-PQ faces, so the
+    * persisted index's stored codes are bit-identical to the in-session
+    * computation by construction (the Dedup.stagedShingles
+    * single-kernel convention). The IVF-PQ codebook is the 6dp-rounded
+    * RESIDUALS of corpus vectors 1..ksub ([[pqCodebookDf]]), computed
+    * through the same column expressions the corpus uses and collected
+    * as a ksub-row model. */
+  private final class PqKit(cbRows: IndexedSeq[org.apache.spark.sql.Row],
+                            m: Int, dsub: Int) {
+    private def book(mi: Int): Column = ModelLit.cells(
+      cbRows.zipWithIndex.map { case (r, j) =>
         (j, r.getSeq[Double](1).slice(mi * dsub, (mi + 1) * dsub))
       }, "j", "c")
-    def subv(v: Column, mi: Int): Column = slice(v, mi * dsub + 1, dsub)
-    def dist(a: Column, b: Column): Column =
+    private def subv(v: Column, mi: Int): Column =
+      slice(v, mi * dsub + 1, dsub)
+    private def dist(a: Column, b: Column): Column =
       round(l2Sq(a, b), 6)
-    // encode: per subspace, the nearest codeword id (tie → lower id).
-    // The subspace slices are MATERIALIZED as a per-row column first
-    // (r16): a lambda body is re-evaluated per array element, so
-    // subv(cast(embedding)) inlined here re-ran the 64-float→double
-    // cast + slice once per CODEWORD (ksub × m = 128× per row); the
-    // `subs` projection pays it once per row and the lambda reads a
-    // bound column — same values, same distances, same codes.
+    /** The vector's subspace slices as ONE per-row column — a lambda
+      * body re-evaluates per element, so inlining the vector (a cast, or
+      * the IVF-PQ residual) into [[codes]] re-ran it plus the slice once
+      * per codeword (ksub × m = 128× per row); materializing the slices
+      * pays it once per row (r16). Same slices, same distances, same
+      * codes. */
     def subsOf(v: Column): Column =
       array((0 until m).map(mi => subv(v, mi)): _*)
+    /** Per subspace, the nearest codeword id (tie → lower id). */
     def codes(subs: Column): Column = array((0 until m).map { mi =>
       array_min(transform(book(mi), c =>
         struct(dist(element_at(subs, mi + 1), c.getField("c")).as("d"),
           c.getField("j").as("j")))).getField("j")
     }: _*)
-    // ADC table: query distance to every codeword of every subspace
+    /** ADC table: the vector's distance to every codeword of every
+      * subspace. */
     def dts(v: Column): Column = array((0 until m).map { mi =>
       transform(book(mi), c => dist(subv(v, mi), c.getField("c")))
     }: _*)
-    val q = queryVec(s, dir)
-      .select(col("q"), dts(col("q").cast("array<double>")).as("dt"))
-    e.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"),
-        subsOf(col("embedding").cast("array<double>")).as("subs"))
-      .select(col("vec_id"), col("embedding"),
-        codes(col("subs")).as("code"))
-      .crossJoin(broadcast(q))
-      // ADC score: 8 table lookups, summed as exact integer micros
-      .select(col("vec_id"), col("embedding"), col("q"),
+    /** Residual PQ codes of `cell`-assigned rows under `cents`. */
+    def encodeResid(cents: Column)(rows: DataFrame): DataFrame =
+      rows.withColumn("rv", pqResid(cents)(col("embedding"), col("cell")))
+        .withColumn("subs", subsOf(col("rv")))
+        .withColumn("code", codes(col("subs")))
+  }
+
+  /** The ADC shortlist of coded rows joined with their query tables:
+    * `code` scored against `dt` by m table lookups, summed as exact
+    * integer micros (the shortlist boundary cannot drift between
+    * engines), top `shortlist` on (adc_dist asc, vec_id asc). */
+  private def adcShortlist(df: DataFrame, shortlist: Int): DataFrame =
+    df.select(col("vec_id"), col("embedding"), col("q"),
         (aggregate(zip_with(col("code"), col("dt"),
           (c, t) => element_at(t, (c + 1).cast("int"))), lit(0L),
           (acc, x) => acc + round(x * 1e6).cast("long")).cast("double") / 1e6)
           .as("adc_dist"))
       .orderBy(col("adc_dist").asc, col("vec_id").asc)
       .limit(shortlist)
-      .select(col("vec_id"), col("adc_dist"),
-        round(cosine(col("embedding"), col("q")), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      .limit(k)
-  }
+
+  /** The (vec_id, 6dp residual) codebook frame — written to parquet by
+    * the indexed build, collected directly by the in-session form. */
+  private def pqCodebookDf(e: DataFrame, cents: Column,
+                           ksub: Int): DataFrame =
+    e.filter(col("vec_id") >= 1 && col("vec_id") <= ksub)
+      .select(col("vec_id"),
+        transform(
+          pqResid(cents)(col("embedding"), cellOf(cents)(col("embedding"))),
+          x => round(x, 6)).as("rv"))
+
+  private def pqKit(cbRows: DataFrame, m: Int, dsub: Int): PqKit =
+    new PqKit(cbRows.collect().sortBy(_.getLong(0)).toIndexedSeq, m, dsub)
 
   /** IVF-PQ combined ANN — the two halves ([[annIvf]]'s coarse
     * partition pruning, [[annPq]]'s compressed in-cell scoring) composed
@@ -826,108 +820,26 @@ object Similarity {
     * residuals exact double subtraction, codebook entries 6dp-rounded,
     * subspace distances 6dp-rounded, ADC summed as exact integer micros
     * — the DuckDB oracle replays every stage bit-for-bit. */
-  /** The PQ machinery shared by [[annIvfPq]] and [[annIvfPqIndexed]] —
-    * ONE definition of cell assignment, residual computation, codebook
-    * literals, encoding and ADC tables, so the persisted index's stored
-    * codes are bit-identical to the in-session computation by
-    * construction (the Dedup.stagedShingles single-kernel convention).
-    * The codebook is the 6dp-rounded RESIDUALS of corpus vectors
-    * 1..ksub, computed through the same column expressions the corpus
-    * uses and collected as a ksub-row model. */
-  /** Nearest-cell assignment under a centroid-literal model. */
-  private def pqCellOf(cents: Column)(v: Column): Column =
-    array_min(distsTo(cents)(v)).getField("cell")
-
-  /** Residual against the assigned/probed cell's centroid. */
-  private def pqResid(cents: Column)(v: Column, cell: Column): Column =
-    zip_with(v.cast("array<double>"),
-      element_at(filter(cents, c => c.getField("cell") === cell), 1)
-        .getField("centroid"),
-      (x, mu) => x - mu)
-
-  private final class PqKit(val cents: Column,
-                            cbRows: IndexedSeq[org.apache.spark.sql.Row],
-                            m: Int, dsub: Int) {
-    val dists: Column => Column = distsTo(cents)
-    def cellOf(v: Column): Column = pqCellOf(cents)(v)
-    def resid(v: Column, cell: Column): Column = pqResid(cents)(v, cell)
-    private def book(mi: Int): Column = ModelLit.cells(
-      cbRows.zipWithIndex.map { case (r, j) =>
-        (j, r.getSeq[Double](1).slice(mi * dsub, (mi + 1) * dsub))
-      }, "j", "c")
-    private def subv(v: Column, mi: Int): Column =
-      slice(v, mi * dsub + 1, dsub)
-    private def dist(a: Column, b: Column): Column =
-      round(l2Sq(a, b), 6)
-    /** The residual's subspace slices as ONE per-row column — a lambda
-      * body re-evaluates per element, so inlining the residual into
-      * [[codes]] re-ran the zip_with residual + slice once per codeword
-      * (ksub × m = 128× per row); materializing the slices pays the
-      * residual once per row. Same slices, same distances, same codes. */
-    def subsOf(rv: Column): Column =
-      array((0 until m).map(mi => subv(rv, mi)): _*)
-    def codes(subs: Column): Column = array((0 until m).map { mi =>
-      array_min(transform(book(mi), c =>
-        struct(dist(element_at(subs, mi + 1), c.getField("c")).as("d"),
-          c.getField("j").as("j")))).getField("j")
-    }: _*)
-    def dts(rv: Column): Column = array((0 until m).map { mi =>
-      transform(book(mi), c => dist(subv(rv, mi), c.getField("c")))
-    }: _*)
-  }
-
-  /** The (vec_id, 6dp residual) codebook frame — written to parquet by
-    * the indexed build, collected directly by the in-session form. */
-  private def pqCodebookDf(e: DataFrame, cents: Column,
-                           ksub: Int): DataFrame =
-    e.filter(col("vec_id") >= 1 && col("vec_id") <= ksub)
-      .select(col("vec_id"),
-        transform(
-          pqResid(cents)(col("embedding"), pqCellOf(cents)(col("embedding"))),
-          x => round(x, 6)).as("rv"))
-
-  private def pqKit(e: DataFrame, cents: Column, m: Int, dsub: Int,
-                    ksub: Int): PqKit =
-    new PqKit(cents,
-      pqCodebookDf(e, cents, ksub).collect().sortBy(_.getLong(0))
-        .toIndexedSeq, m, dsub)
-
   def annIvfPq(s: SparkSession, dir: String, k: Int = 10, nprobe: Int = 3,
                m: Int = 8, dsub: Int = 8, ksub: Int = 16,
                shortlist: Int = 50,
                sharedCents: Option[Column] = None): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    val cents = sharedCents.getOrElse(centLiteral(quantizer(e).collect()))
-    val kit = pqKit(e, cents, m, dsub, ksub)
+    val cents = sharedCents.getOrElse(centsOf(e))
+    val kit = pqKit(pqCodebookDf(e, cents, ksub), m, dsub)
     // probes: nprobe nearest cells, each carrying the query's
     // PER-CELL residual ADC table
-    val probes = queryVec(s, dir)
-      .select(col("q"), posexplode(array_sort(kit.dists(col("q")))))
-      .filter(col("pos") < nprobe)
-      .select(col("q"), col("col").getField("cell").as("cell"))
-      .withColumn("dt", kit.dts(kit.resid(col("q"), col("cell"))))
+    val probes = probeCells(s, dir, cents, nprobe)
+      .withColumn("dt", kit.dts(pqResid(cents)(col("q"), col("cell"))))
     // probe join BEFORE encoding: codes are per-row independent, so
     // only candidate (probed-cell) rows pay the 1024-mult encode — in
     // an indexed deployment codes are precomputed at build time
     // ([[annIvfPqIndexed]] IS that deployment)
-    e.filter(col("vec_id") =!= 0)
+    val coded = kit.encodeResid(cents)(e.filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("embedding"),
-        kit.cellOf(col("embedding")).as("cell"))
-      .join(broadcast(probes), "cell")
-      .withColumn("rv", kit.resid(col("embedding"), col("cell")))
-      .withColumn("subs", kit.subsOf(col("rv")))
-      .withColumn("code", kit.codes(col("subs")))
-      .select(col("vec_id"), col("embedding"), col("q"),
-        (aggregate(zip_with(col("code"), col("dt"),
-          (c, t) => element_at(t, (c + 1).cast("int"))), lit(0L),
-          (acc, x) => acc + round(x * 1e6).cast("long")).cast("double") / 1e6)
-          .as("adc_dist"))
-      .orderBy(col("adc_dist").asc, col("vec_id").asc)
-      .limit(shortlist)
-      .select(col("vec_id"), col("adc_dist"),
-        round(cosine(col("embedding"), col("q")), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      .limit(k)
+        cellOf(cents)(col("embedding")).as("cell"))
+      .join(broadcast(probes), "cell"))
+    rerank(adcShortlist(coded, shortlist), k, Seq(col("adc_dist")))
   }
 
   /** IVF-PQ with a PERSISTED index — the full FAISS deployment shape
@@ -941,7 +853,11 @@ object Similarity {
     * never per query. Shares [[PqKit]] with [[annIvfPq]], so results
     * are bit-identical and one oracle covers both. At 100 TB this is
     * the deployment architecture: per-query cost = O(probed cells)
-    * read of 8-byte codes + a shortlist-sized exact re-rank. */
+    * read of 8-byte codes + a shortlist-sized exact re-rank.
+    *
+    * The one-generation case of the IVF index kernel ([[ivfQueryGens]]'
+    * model read and probe-cell pick), its generation carrying stored
+    * codes where [[ivfBuildGen]]'s carries embeddings alone. */
   def annIvfPqIndexed(s: SparkSession, dir: String, k: Int = 10,
                       nprobe: Int = 3, m: Int = 8, dsub: Int = 8,
                       ksub: Int = 16, shortlist: Int = 50): DataFrame = {
@@ -950,56 +866,27 @@ object Similarity {
     // a ksub-row file instead of scanning the corpus for it)
     val base = Staging.base("ivfpq_index_v2", dir, s"m${m}d${dsub}k$ksub",
       "embeddings")
-    Staging.buildOnce(base) {
-      val e = Tables.embeddings(s, dir)
-      quantizer(e).coalesce(1).write.mode("overwrite")
-        .parquet(s"$base/model")
-      val cents = centLiteral(
-        s.read.parquet(s"$base/model").select("cell", "centroid").collect())
+    ivfBuildRoot(s, base, Tables.embeddings(s, dir)) { (cents, e) =>
       pqCodebookDf(e, cents, ksub).coalesce(1).write.mode("overwrite")
         .parquet(s"$base/codebook")
-      val kit = pqKit(e, cents, m, dsub, ksub)
-      e.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), col("embedding"),
-          kit.cellOf(col("embedding")).as("cell"))
-        .withColumn("rv", kit.resid(col("embedding"), col("cell")))
-        .withColumn("subs", kit.subsOf(col("rv")))
-        .withColumn("code", kit.codes(col("subs")))
+      pqKit(pqCodebookDf(e, cents, ksub), m, dsub).encodeResid(cents)(
+        e.filter(col("vec_id") =!= 0)
+          .select(col("vec_id"), col("embedding"),
+            cellOf(cents)(col("embedding")).as("cell")))
         .select("vec_id", "embedding", "code", "cell")
         .write.mode("overwrite").partitionBy("cell").parquet(s"$base/cells")
     }
-    val cents = centLiteral(
-      s.read.parquet(s"$base/model").select("cell", "centroid").collect())
+    val cents = modelCents(s, base)
     // the persisted codebook: a ksub-row model read — the query never
     // scans the corpus (the build paid the encode AND codebook cost)
-    val kit = new PqKit(cents,
-      s.read.parquet(s"$base/codebook").collect().sortBy(_.getLong(0))
-        .toIndexedSeq, m, dsub)
-    // nprobe cell ids, collected driver-side (model-sized) so the index
-    // read is a STATIC IN-filter on the partition column
-    val probeCells = queryVec(s, dir)
-      .select(posexplode(array_sort(kit.dists(col("q")))))
-      .filter(col("pos") < nprobe)
-      .select(col("col").getField("cell").as("cell"))
-      .collect().map(_.getInt(0))
+    val kit = pqKit(s.read.parquet(s"$base/codebook"), m, dsub)
+    val cells = probeCellIds(s, dir, cents, nprobe)
     val probes = queryVec(s, dir)
-      .select(col("q"),
-        explode(array(probeCells.toIndexedSeq.map(lit): _*)).as("cell"))
-      .withColumn("dt", kit.dts(kit.resid(col("q"), col("cell"))))
-    s.read.parquet(s"$base/cells")
-      .filter(col("cell").isin(probeCells.toIndexedSeq: _*))
-      .join(broadcast(probes), "cell")
-      .select(col("vec_id"), col("embedding"), col("q"),
-        (aggregate(zip_with(col("code"), col("dt"),
-          (c, t) => element_at(t, (c + 1).cast("int"))), lit(0L),
-          (acc, x) => acc + round(x * 1e6).cast("long")).cast("double") / 1e6)
-          .as("adc_dist"))
-      .orderBy(col("adc_dist").asc, col("vec_id").asc)
-      .limit(shortlist)
-      .select(col("vec_id"), col("adc_dist"),
-        round(cosine(col("embedding"), col("q")), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      .limit(k)
+      .select(col("q"), explode(array(cells.map(lit): _*)).as("cell"))
+      .withColumn("dt", kit.dts(pqResid(cents)(col("q"), col("cell"))))
+    rerank(adcShortlist(s.read.parquet(s"$base/cells")
+      .filter(col("cell").isin(cells: _*))
+      .join(broadcast(probes), "cell"), shortlist), k, Seq(col("adc_dist")))
   }
 
   /** Lloyd's k-means over the embedding corpus — the actual quantizer
@@ -1272,7 +1159,7 @@ object Similarity {
       // the IVF-family coarse quantizer is one model — collect it once
       // and hand the literal to both methods instead of re-running the
       // centroid aggregation per method
-      val cents = centLiteral(quantizer(Tables.embeddings(s, dir)).collect())
+      val cents = centsOf(Tables.embeddings(s, dir))
       Seq(
         ("bq", annBinaryQuant(s, dir)),
         ("ivf", annIvf(s, dir, sharedCents = Some(cents))),
@@ -1309,17 +1196,26 @@ object Similarity {
                      probes: Seq[Int] = 1 to 4): DataFrame = {
     import s.implicits._
     val truth = broadcast(truthStaged(s, dir))
-    val cents = centLiteral(quantizer(Tables.embeddings(s, dir)).collect())
-    val hits = probes.map { np =>
+    val cents = centsOf(Tables.embeddings(s, dir))
+    recallGrid(truth, probes.map(_.toLong).toDF("nprobe"), probes.map { np =>
       annIvf(s, dir, nprobe = np, sharedCents = Some(cents))
         .select(lit(np.toLong).as("nprobe"), col("vec_id"))
-    }.reduce(_ unionByName _)
+    })
+  }
+
+  /** The recall@10 tail of the index-tuning harnesses: each variant's
+    * (key, vec_id) shortlist joins the broadcast truth set, and the
+    * variant grid (one key column) left-joins the hit counts so a
+    * zero-recall variant still emits its row. */
+  private def recallGrid(truth: DataFrame, grid: DataFrame,
+                         shortlists: Seq[DataFrame]): DataFrame = {
+    val key = grid.columns.head
+    val hits = shortlists.reduce(_ unionByName _)
       .join(truth, "vec_id")
-      .groupBy(col("nprobe"))
+      .groupBy(col(key))
       .agg(count(lit(1)).as("h"))
-    probes.map(_.toLong).toDF("nprobe")
-      .join(hits, Seq("nprobe"), "left")
-      .select(col("nprobe"),
+    grid.join(hits, Seq(key), "left")
+      .select(col(key),
         coalesce(col("h"), lit(0L)).as("hits"),
         round(coalesce(col("h"), lit(0L)) / lit(10.0), 4)
           .as("recall_at_10"))
@@ -1344,19 +1240,10 @@ object Similarity {
     // same static band filter annLshIndexed builds from the same
     // collected values, so results stay bit-identical per depth.
     val (qBands, bandsDf) = lshIndexParts(s, dir)
-    val hits = depths.map { b =>
-      annLshProbe(s, dir, bandsDf, qBands.filter(_._1 < b))
+    recallGrid(truth, depths.map(_.toLong).toDF("n_bands"), depths.map { b =>
+      lshProbeGens(s, dir, Seq(bandsDf), qBands.filter(_._1 < b), 10)
         .select(lit(b.toLong).as("n_bands"), col("vec_id"))
-    }.reduce(_ unionByName _)
-      .join(truth, "vec_id")
-      .groupBy(col("n_bands"))
-      .agg(count(lit(1)).as("h"))
-    depths.map(_.toLong).toDF("n_bands")
-      .join(hits, Seq("n_bands"), "left")
-      .select(col("n_bands"),
-        coalesce(col("h"), lit(0L)).as("hits"),
-        round(coalesce(col("h"), lit(0L)) / lit(10.0), 4)
-          .as("recall_at_10"))
+    })
   }
 
   /** Index-freshness eval — the "when do appended deltas justify
@@ -1379,18 +1266,11 @@ object Similarity {
     val variants = Seq(
       ("frozen_base", centsOf(e.filter(col("vec_id") <= splitAt))),
       ("retrained", centsOf(e)))
-    val hits = variants.map { case (m, cents) =>
+    recallGrid(truth, variants.map(_._1).toDF("variant"),
+      variants.map { case (m, cents) =>
         annIvf(s, dir, sharedCents = Some(cents))
           .select(lit(m).as("variant"), col("vec_id"))
-      }.reduce(_ unionByName _)
-      .join(truth, "vec_id")
-      .groupBy(col("variant")).agg(count(lit(1)).as("h"))
-    variants.map(_._1).toDF("variant")
-      .join(hits, Seq("variant"), "left")
-      .select(col("variant"),
-        coalesce(col("h"), lit(0L)).as("hits"),
-        round(coalesce(col("h"), lit(0L)) / lit(10.0), 4)
-          .as("recall_at_10"))
+      })
   }
 
   /** Maximal-marginal-relevance selection: from the relevance top-40

@@ -211,9 +211,9 @@ object Spatial {
   /** k nearest neighbors for each query point (customers with
     * custkey ≡ 7 mod 150 — a deterministic model-sized query set):
     * broadcast the queries, scan the corpus once, rank by squared
-    * integer distance with id tie-breaks. The exact face; the indexed
-    * variant at scale is [[radiusPairs]]' stencil with an expanding
-    * ring, which this oracle would verify the same way. */
+    * integer distance with id tie-breaks. The exact in-session face;
+    * [[knnJoinIndexed]] serves the same rows from a persisted
+    * cell-bucketed point index, graded by the same oracle. */
   def knnJoin(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
     val p = points(s, dir)
     // the query set is MODEL-SIZED by construction (capped id range) so

@@ -72,12 +72,16 @@ private[graft] object Staging {
       dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + fingerprint(dir, srcTable)
   }
 
+  /** The marker file a completed build of `basePath` commits. */
+  def marker(basePath: String): java.io.File =
+    new java.io.File(s"$basePath/_built")
+
   /** Run `build` exactly once per base path (marker-committed). */
   def buildOnce(basePath: String)(build: => Unit): Unit = {
-    val marker = new java.io.File(s"$basePath/_built")
-    if (!marker.exists()) {
+    val done = marker(basePath)
+    if (!done.exists()) {
       build
-      marker.createNewFile()
+      done.createNewFile()
     }
   }
 
@@ -164,7 +168,7 @@ private[graft] object Staging {
         Some(s"/tmp/graft_res_${tag}_${params}_$fp")
       }
     path match {
-      case Some(p) if new java.io.File(s"$p/_built").exists() =>
+      case Some(p) if marker(p).exists() =>
         s.read.parquet(s"$p/data")
       case _ =>
         val sc = s.sparkContext
@@ -174,7 +178,7 @@ private[graft] object Staging {
           path match {
             case Some(p) =>
               df.coalesce(1).write.mode("overwrite").parquet(s"$p/data")
-              new java.io.File(s"$p/_built").createNewFile()
+              marker(p).createNewFile()
               s.read.parquet(s"$p/data")
             case None => materialized(df, tag)
           }

@@ -759,47 +759,66 @@ object TextAnalysis {
     * directories are touched. At 100 TB that turns per-query cost from
     * a full corpus scan+explode into an O(matched buckets) read.
     * Scores are bit-identical to [[bm25]] (integer tf/df/dl, one shared
-    * formula, micro-quantized sum), so both share one oracle. */
+    * formula, micro-quantized sum), so both share one oracle.
+    *
+    * The one-generation case of the BM25 index kernel: [[bm25BuildGen]]
+    * over the whole corpus ([[bm25IndexRoot]]), queried by
+    * [[bm25QueryGens]] over that one root — the pair
+    * [[bm25Incremental]] runs over base and delta generations. */
   def bm25Indexed(s: SparkSession, dir: String, terms: Seq[String],
-                  k: Int = 10, buckets: Int = 64): DataFrame = {
+                  k: Int = 10, buckets: Int = 64): DataFrame =
+    bm25QueryGens(s, Seq(bm25IndexRoot(s, dir, buckets)), terms, k, buckets)
+
+  /** Root of the staged full-corpus BM25 index — one generation over
+    * every document, built once per corpus fingerprint. The root is
+    * opaque to callers: [[bm25Postings]], [[indexedPostings]] and
+    * [[bm25Stats]] read it. */
+  private[operators] def bm25IndexRoot(s: SparkSession, dir: String,
+                                       buckets: Int): String = {
     // the bucket count is part of the cache key: an index partitioned
     // mod B is only valid for queries hashing mod the same B
     val base = Staging.base("bm25_index_v1", dir, s"b$buckets", "documents")
-    val marker = new java.io.File(s"$base/_built")
-    if (!marker.exists()) {
-      val tk = Tables.documents(s, dir)
-        .select(col("doc_id"), tokens(col("text")).as("tk"))
-      val dl = tk.select(col("doc_id"), size(col("tk")).cast("long").as("dl"))
-      tk.select(col("doc_id"), explode(col("tk")).as("term"))
-        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-        .join(dl, "doc_id")
-        .withColumn("tb",
-          pmod(md5Base60(col("term")), lit(buckets.toLong)))
-        .write.mode("overwrite").partitionBy("tb").parquet(s"$base/postings")
-      dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("total"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$base/stats")
-      marker.createNewFile()
+    Staging.buildOnce(base) {
+      bm25BuildGen(Tables.documents(s, dir), base, buckets)
     }
-    val stats = s.read.parquet(s"$base/stats").collect().head
-    val (n, total) = (stats.getAs[Long]("n"), stats.getAs[Long]("total"))
-    bm25ScoreFromPostings(
-      indexedPostings(s, Seq(base), terms, buckets), n, total, k)
+    base
   }
 
-  /** Query-term bucket ids via the SAME kernel the index-build
-    * expression used — driver-side, so the read plans a static
-    * partition filter. */
-  private def termBuckets(terms: Seq[String], buckets: Int): Seq[Long] =
-    terms.map(t => math.floorMod(graft.functions.Md5Base.hash60(
+  /** The bucket of a string key, mod `buckets` — the index-build
+    * expression; [[bucketIds]] is its driver-side twin. */
+  private[operators] def bucketOf(key: Column, buckets: Int): Column =
+    pmod(md5Base60(key), lit(buckets.toLong))
+
+  /** Bucket ids of driver-side keys via the SAME Md5Base kernel
+    * [[bucketOf]] runs, so a read of a bucket-partitioned table plans a
+    * static partition filter. */
+  private[operators] def bucketIds(keys: Seq[String],
+                                   buckets: Int): Seq[Long] =
+    keys.map(t => math.floorMod(graft.functions.Md5Base.hash60(
         org.apache.spark.unsafe.types.UTF8String.fromString(t)),
       buckets.toLong)).distinct
 
+  /** Every (doc_id, term, tf, dl) postings row of an index root. */
+  private[operators] def bm25Postings(s: SparkSession,
+                                      root: String): DataFrame =
+    s.read.parquet(s"$root/postings")
+      .select(col("doc_id"), col("term"), col("tf"), col("dl"))
+
+  /** Merged corpus stats (N, Σdl) of generation roots: the per-generation
+    * one-row models sum exactly. */
+  private[operators] def bm25Stats(s: SparkSession,
+                                   roots: Seq[String]): (Long, Long) = {
+    val statRows = roots.map(g => s.read.parquet(s"$g/stats").collect().head)
+    (statRows.map(_.getAs[Long]("n")).sum,
+      statRows.map(_.getAs[Long]("total")).sum)
+  }
+
   /** Statically-pruned postings read over one or more index
     * GENERATIONS, unioned (doc sets are disjoint by construction). */
-  private def indexedPostings(s: SparkSession, gens: Seq[String],
-                              terms: Seq[String], buckets: Int)
+  private[operators] def indexedPostings(s: SparkSession, gens: Seq[String],
+                                         terms: Seq[String], buckets: Int)
   : DataFrame = {
-    val tbs = termBuckets(terms, buckets)
+    val tbs = bucketIds(terms, buckets)
     gens.map { g =>
       s.read.parquet(s"$g/postings")
         .filter(col("tb").isin(tbs: _*))
@@ -874,12 +893,8 @@ object TextAnalysis {
           .reduce(_ unionByName _)
           .write.mode("overwrite").partitionBy("tb")
           .parquet(s"$base/compact/postings")
-        val statRows = Seq(base, s"$base/delta")
-          .map(g => s.read.parquet(s"$g/stats").collect().head)
         import s.implicits._
-        Seq((statRows.map(_.getAs[Long]("n")).sum,
-            statRows.map(_.getAs[Long]("total")).sum))
-          .toDF("n", "total")
+        Seq(bm25Stats(s, Seq(base, s"$base/delta"))).toDF("n", "total")
           .coalesce(1).write.mode("overwrite")
           .parquet(s"$base/compact/stats")
       }
@@ -920,9 +935,7 @@ object TextAnalysis {
     tk.select(col("doc_id"), explode(col("tk")).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
       .join(dl, "doc_id")
-      .withColumn("tb",
-        pmod(md5Base60(col("term")),
-          lit(buckets.toLong)))
+      .withColumn("tb", bucketOf(col("term"), buckets))
       .write.mode("overwrite").partitionBy("tb")
       .parquet(s"$path/postings")
     dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("total"))
@@ -935,10 +948,7 @@ object TextAnalysis {
   private[graft] def bm25QueryGens(s: SparkSession, roots: Seq[String],
                                    terms: Seq[String], k: Int,
                                    buckets: Int): DataFrame = {
-    // merged corpus stats: per-generation one-row models sum exactly
-    val statRows = roots.map(g => s.read.parquet(s"$g/stats").collect().head)
-    val n = statRows.map(_.getAs[Long]("n")).sum
-    val total = statRows.map(_.getAs[Long]("total")).sum
+    val (n, total) = bm25Stats(s, roots)
     bm25ScoreFromPostings(
       indexedPostings(s, roots, terms, buckets), n, total, k)
   }

@@ -448,8 +448,8 @@ object Training {
     * and the model a session ships around is KB-scale parquet. A
     * regenerated corpus changes the fingerprint and retrains; results
     * are bit-identical either way (the staged frames ARE the loop's
-    * output). Concurrent FIRST calls in separate JVMs can race the
-    * build — same deployment lock caveat as the IVF index.
+    * output). Concurrent first calls in separate JVMs share the
+    * [[Staging]] caveat.
     * `finish` receives (rules, final vocab) with nothing cached —
     * everything the loop persisted is unpersisted before staging
     * completes. */
@@ -458,8 +458,7 @@ object Training {
     // v1 = algorithm version: bump when the training logic changes so
     // a stale staged model can never serve a new code version
     val base = Staging.base("bpe_v1", dir, s"$merges", "documents")
-    val marker = new java.io.File(s"$base/_built")
-    if (!marker.exists()) {
+    Staging.buildOnce(base) {
       val sc = s.sparkContext
       val preexisting = sc.getPersistentRDDs.keySet
       try {
@@ -500,7 +499,6 @@ object Training {
         buf.toList.toDF("iter", "pair", "merged", "pair_count")
           .coalesce(1).write.mode("overwrite").parquet(s"$base/rules")
         vocab.write.mode("overwrite").parquet(s"$base/vocab")
-        marker.createNewFile()
       } finally {
         sc.getPersistentRDDs
           .filterNot { case (id, _) => preexisting(id) }

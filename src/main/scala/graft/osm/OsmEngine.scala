@@ -106,13 +106,9 @@ object OsmEngine {
     else {
       val arc = new java.io.File(path)
       require(arc.isFile, s"no such archive: $path")
-      val dig = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"${arc.getAbsolutePath}:${arc.length()}:${arc.lastModified()}"
-          .getBytes("UTF-8"))
-        .take(8).map(b => "%02x".format(b)).mkString
-      val dir = new java.io.File(s"/tmp/graft_osmzip_$dig")
-      val marker = new java.io.File(dir, "_built")
-      if (!marker.exists()) {
+      val dir = new java.io.File("/tmp/graft_osmzip_" + graft.operators.Staging
+        .digestHex(s"${arc.getAbsolutePath}:${arc.length()}:${arc.lastModified()}"))
+      graft.operators.Staging.buildOnce(dir.getPath) {
         dir.mkdirs()
         val zf = new java.util.zip.ZipFile(arc)
         try {
@@ -133,10 +129,10 @@ object OsmEngine {
           try java.nio.file.Files.copy(in, out.toPath,
             java.nio.file.StandardCopyOption.REPLACE_EXISTING)
           finally in.close()
-          marker.createNewFile()
         } finally zf.close()
       }
-      dir.listFiles().filter(_.getName != "_built").head.getAbsolutePath
+      dir.listFiles().filter(_ != graft.operators.Staging.marker(dir.getPath))
+        .head.getAbsolutePath
     }
 
   /** One rowTag read. Explicit schema: everything stays a string, exactly

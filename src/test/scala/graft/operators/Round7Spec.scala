@@ -59,12 +59,18 @@ class Round7Spec extends SparkSpec {
 
   test("incremental BM25: both postings generations are statically " +
       "pruned to the query terms' buckets") {
-    val df = TextAnalysis.bm25Incremental(spark, sf,
-      Seq("spark", "query", "filter"))
+    val terms = Seq("spark", "query", "filter")
+    val df = TextAnalysis.bm25Incremental(spark, sf, terms)
     val p = df.queryExecution.executedPlan.toString
     // one pruned scan per generation (base + delta)
     assert("PartitionFilters: \\[tb#\\d+ IN".r.findAllIn(p).size >= 2,
       s"expected tb partition pruning on both generation scans:\n$p")
+    // merged stats + unioned postings score exactly like the full corpus
+    val want = TextAnalysis.bm25(graft.Tables.documents(spark, sf), terms)
+      .collect().map(_.toSeq).toSeq
+    assert(want.nonEmpty)
+    assert(df.collect().map(_.toSeq).toSeq === want,
+      "incremental BM25 diverged from the in-session bm25")
   }
 
   test("incremental LSH index: base + delta signature generations are " +
