@@ -471,14 +471,12 @@ object Dedup {
     * asserts against the O(log n) bound. */
   def ccWithRounds(pairs: DataFrame, maxIter: Int = 25): (DataFrame, Int) = {
     val s = pairs.sparkSession
-    val sc = s.sparkContext
     // loop rounds materialize IN MEMORY (eager localCheckpoint — an
     // iterative plan otherwise doubles per round and replays from the
-    // source); every checkpoint RDD is tracked and unpersisted before
-    // return, and the converged edge set is staged to disk ONCE so the
-    // returned plan depends on no transient storage. O(log n) rounds
-    // keeps the in-loop footprint to two edge-set snapshots.
-    val preexisting = sc.getPersistentRDDs.keySet
+    // source) inside a Staging.scratch scope, and the converged edge
+    // set is staged to disk ONCE so the returned plan depends on no
+    // transient storage. O(log n) rounds keeps the in-loop footprint
+    // to two edge-set snapshots.
     val nodes = pairs.select(col("doc_a").as("id"))
       .union(pairs.select(col("doc_b").as("id"))).distinct()
     // keyed by the edge set's semantic hash — see minhashLsh's staging
@@ -509,7 +507,7 @@ object Dedup {
     val marker = new java.io.File(s"$finalPath/_built")
     val reusable = srcFiles.nonEmpty && marker.exists()
     var rounds = 0
-    if (!reusable) try {
+    if (!reusable) Staging.scratch(s) {
       // Lineage.cut, not bare localCheckpoint: each star round's tree
       // references `cur` several times, so preserved stats would
       // compound doubly-exponentially across rounds (the round-9
@@ -528,10 +526,6 @@ object Dedup {
       }
       cur.write.mode("overwrite").parquet(finalPath)
       if (srcFiles.nonEmpty) marker.createNewFile()
-    } finally {
-      sc.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting(id) }
-        .values.foreach(_.unpersist(blocking = false))
     }
     val stars = s.read.parquet(finalPath)
     val lab = stars.groupBy(col("src")).agg(min(col("dst")).as("mn"))
@@ -632,11 +626,9 @@ object Dedup {
     * per micro-batch via foreachBatch. */
   def nearDupCross(s: SparkSession, history: DataFrame, batch: DataFrame,
                    threshold: Double = 0.5): DataFrame = {
-    // resultOnce owns the snapshot → build → materialize →
-    // finally-unpersist cycle: the side checkpoints no longer
-    // accumulate across calls, file-backed (history, batch) pairs
-    // reuse a completed classification, and the returned plan depends
-    // on no transient storage
+    // resultOnce scopes the side checkpoints, file-backed (history,
+    // batch) pairs reuse a completed classification, and the returned
+    // plan depends on no transient storage
     Staging.resultOnce("neardup_cross_v1",
       s"t${math.round(threshold * 10000)}", Seq(history, batch)) {
       val (hSh, hBands) = nearDupSides(history)
@@ -700,20 +692,12 @@ object Dedup {
       history.queryExecution.analyzed.semanticHash())
     val base = Staging.base("neardup_index_v2", dir, s"h$histId",
       "documents")
-    Staging.buildOnce(base) {
-      val sc0 = s.sparkContext
-      val pre0 = sc0.getPersistentRDDs.keySet
-      try {
-        val sh = shingled(history).localCheckpoint(true)
-        sh.write.mode("overwrite").parquet(s"$base/shingles")
-        nearDupBands(sh).write.mode("overwrite")
-          .partitionBy("band").parquet(s"$base/bands")
-      } finally {
-        sc0.getPersistentRDDs
-          .filterNot { case (id, _) => pre0(id) }
-          .values.foreach(_.unpersist(blocking = false))
-      }
-    }
+    Staging.buildOnce(base) { Staging.scratch(s) {
+      val sh = shingled(history).localCheckpoint(true)
+      sh.write.mode("overwrite").parquet(s"$base/shingles")
+      nearDupBands(sh).write.mode("overwrite")
+        .partitionBy("band").parquet(s"$base/bands")
+    } }
     val hSh = s.read.parquet(s"$base/shingles")
     val hBands = s.read.parquet(s"$base/bands")
       .select(col("doc_id"), col("band").cast("int"), col("band_key"))

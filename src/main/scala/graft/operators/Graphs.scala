@@ -25,8 +25,8 @@ import graft.functions.Kernels._
   * Scale notes: PageRank is the canonical Pregel-style iteration — one
   * shuffle per round on (node), ranks and edges co-partitioned after
   * the first round, lineage cut per round by eager localCheckpoint
-  * (tracked and unpersisted before return; the converged vector stages
-  * to parquet once so the returned plan owns no transient storage).
+  * (the converged vector stages to parquet once, so the returned plan
+  * owns no transient storage).
   * Rank mass moves in integer MICRO-units: per-edge contributions and
   * the damped update round to whole micros each round, so every sum is
   * an integer sum — order-independent across partitionings and engines
@@ -50,13 +50,13 @@ object Graphs {
     * code version — `v2` = the r14 rank-space edge rewire, bumped for
     * EVERY consumer of [[linkEdges]] (r15): a corpus whose fingerprint
     * is unchanged must not serve a pre-rewire staged result built from
-    * the phantom-endpoint graph. Concurrent first calls in separate
-    * JVMs can race the build — the same deployment-lock caveat as the
-    * IVF index. */
+    * the phantom-endpoint graph. `build` runs in a [[Staging.scratch]]
+    * scope, so the checkpoints it persists are released once the
+    * result is staged. */
   private def staged(s: SparkSession, dir: String, tag: String,
                      params: String)(build: String => Unit): DataFrame = {
     val base = Staging.base(s"stage_${tag}_v2", dir, params, "documents")
-    Staging.buildOnce(base)(build(s"$base/data"))
+    Staging.buildOnce(base)(Staging.scratch(s)(build(s"$base/data")))
     s.read.parquet(s"$base/data")
   }
 
@@ -134,45 +134,37 @@ object Graphs {
     // decimal-exact 1 - damping: the IEEE expression 1 - 0.85 sits one
     // ulp off the 0.15 literal the oracle embeds (see textrank)
     val teleport = (BigDecimal(1) - BigDecimal(damping.toString)).toDouble
-    val sc = s.sparkContext
-    val preexisting = sc.getPersistentRDDs.keySet
-    try {
-      // materialize the loop-invariant inputs ONCE — without this the
-      // edge derivation (documents scan + explode + degree join) and
-      // the node list replay inside every round's plan
-      val nodes = Tables.documents(s, dir).select(col("doc_id").as("node"))
-        .localCheckpoint(true)
-      val edges = linkEdges(s, dir)
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      val withDeg = edges.join(deg, "src").localCheckpoint(true)
-      val nTotal = broadcast(nodes.agg(count(lit(1)).as("n_docs"))
-        .localCheckpoint(true))
-      var ranks = nodes.crossJoin(nTotal)
+    // materialize the loop-invariant inputs ONCE — without this the
+    // edge derivation (documents scan + explode + degree join) and
+    // the node list replay inside every round's plan
+    val nodes = Tables.documents(s, dir).select(col("doc_id").as("node"))
+      .localCheckpoint(true)
+    val edges = linkEdges(s, dir)
+    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+    val withDeg = edges.join(deg, "src").localCheckpoint(true)
+    val nTotal = broadcast(nodes.agg(count(lit(1)).as("n_docs"))
+      .localCheckpoint(true))
+    var ranks = nodes.crossJoin(nTotal)
+      .select(col("node"),
+        round(lit(1e6) / col("n_docs")).cast("long").as("r"))
+      .localCheckpoint(true)
+    for (_ <- 1 to iters) {
+      val contrib = withDeg
+        .join(ranks, col("src") === col("node"))
+        .select(col("dst"),
+          round(col("r").cast("double") / col("outdeg"))
+            .cast("long").as("c"))
+        .groupBy(col("dst")).agg(sum(col("c")).as("in_mass"))
+      ranks = nodes
+        .join(contrib, col("node") === col("dst"), "left")
+        .crossJoin(nTotal)
         .select(col("node"),
-          round(lit(1e6) / col("n_docs")).cast("long").as("r"))
+          (round(lit(teleport) * lit(1e6) / col("n_docs")).cast("long") +
+            round(lit(damping) * coalesce(col("in_mass"), lit(0L)))
+              .cast("long")).as("r"))
         .localCheckpoint(true)
-      for (_ <- 1 to iters) {
-        val contrib = withDeg
-          .join(ranks, col("src") === col("node"))
-          .select(col("dst"),
-            round(col("r").cast("double") / col("outdeg"))
-              .cast("long").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("in_mass"))
-        ranks = nodes
-          .join(contrib, col("node") === col("dst"), "left")
-          .crossJoin(nTotal)
-          .select(col("node"),
-            (round(lit(teleport) * lit(1e6) / col("n_docs")).cast("long") +
-              round(lit(damping) * coalesce(col("in_mass"), lit(0L)))
-                .cast("long")).as("r"))
-          .localCheckpoint(true)
-      }
-      ranks.write.mode("overwrite").parquet(finalPath)
-    } finally {
-      sc.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting(id) }
-        .values.foreach(_.unpersist(blocking = false))
     }
+    ranks.write.mode("overwrite").parquet(finalPath)
   }.select(col("node"), col("r").as("rank_micros"))
 
   /** PERSONALIZED PageRank — [[pagerank]] with the teleport mass
@@ -189,49 +181,41 @@ object Graphs {
                            damping: Double = 0.85,
                            seedMod: Int = 97): DataFrame = staged(s, dir,
       "ppr", s"${iters}_${math.round(damping * 1000)}_$seedMod") { finalPath =>
-    val sc = s.sparkContext
-    val preexisting = sc.getPersistentRDDs.keySet
-    try {
-      val nodes = Tables.documents(s, dir).select(col("doc_id").as("node"))
-        .localCheckpoint(true)
-      val edges = linkEdges(s, dir)
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      val withDeg = edges.join(deg, "src").localCheckpoint(true)
-      val isSeed = pmod(col("node"), lit(seedMod.toLong)) === 0L
-      val nSeeds = broadcast(nodes.filter(isSeed)
-        .agg(count(lit(1)).as("n_seeds")).localCheckpoint(true))
-      // decimal-exact 1 - damping (see pagerank)
-      val tp = (BigDecimal(1) - BigDecimal(damping.toString)).toDouble
-      def teleport: Column =
-        when(isSeed, round(lit(tp) * lit(1e6) / col("n_seeds"))
-          .cast("long")).otherwise(lit(0L))
-      var ranks = nodes.crossJoin(nSeeds)
+    val nodes = Tables.documents(s, dir).select(col("doc_id").as("node"))
+      .localCheckpoint(true)
+    val edges = linkEdges(s, dir)
+    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+    val withDeg = edges.join(deg, "src").localCheckpoint(true)
+    val isSeed = pmod(col("node"), lit(seedMod.toLong)) === 0L
+    val nSeeds = broadcast(nodes.filter(isSeed)
+      .agg(count(lit(1)).as("n_seeds")).localCheckpoint(true))
+    // decimal-exact 1 - damping (see pagerank)
+    val tp = (BigDecimal(1) - BigDecimal(damping.toString)).toDouble
+    def teleport: Column =
+      when(isSeed, round(lit(tp) * lit(1e6) / col("n_seeds"))
+        .cast("long")).otherwise(lit(0L))
+    var ranks = nodes.crossJoin(nSeeds)
+      .select(col("node"),
+        when(isSeed, round(lit(1e6) / col("n_seeds")).cast("long"))
+          .otherwise(lit(0L)).as("r"))
+      .localCheckpoint(true)
+    for (_ <- 1 to iters) {
+      val contrib = withDeg
+        .join(ranks, col("src") === col("node"))
+        .select(col("dst"),
+          round(col("r").cast("double") / col("outdeg"))
+            .cast("long").as("c"))
+        .groupBy(col("dst")).agg(sum(col("c")).as("in_mass"))
+      ranks = nodes
+        .join(contrib, col("node") === col("dst"), "left")
+        .crossJoin(nSeeds)
         .select(col("node"),
-          when(isSeed, round(lit(1e6) / col("n_seeds")).cast("long"))
-            .otherwise(lit(0L)).as("r"))
+          (teleport +
+            round(lit(damping) * coalesce(col("in_mass"), lit(0L)))
+              .cast("long")).as("r"))
         .localCheckpoint(true)
-      for (_ <- 1 to iters) {
-        val contrib = withDeg
-          .join(ranks, col("src") === col("node"))
-          .select(col("dst"),
-            round(col("r").cast("double") / col("outdeg"))
-              .cast("long").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("in_mass"))
-        ranks = nodes
-          .join(contrib, col("node") === col("dst"), "left")
-          .crossJoin(nSeeds)
-          .select(col("node"),
-            (teleport +
-              round(lit(damping) * coalesce(col("in_mass"), lit(0L)))
-                .cast("long")).as("r"))
-          .localCheckpoint(true)
-      }
-      ranks.write.mode("overwrite").parquet(finalPath)
-    } finally {
-      sc.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting(id) }
-        .values.foreach(_.unpersist(blocking = false))
     }
+    ranks.write.mode("overwrite").parquet(finalPath)
   }.select(col("node"), col("r").as("ppr_micros"))
 
   /** Per-node triangle participation over the undirected simple graph
@@ -241,43 +225,35 @@ object Graphs {
     * all three corners. Pure integer counting — no fp anywhere. */
   def triangleCounts(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "tri", "d") { finalPath =>
-    val sc = s.sparkContext
-    val preexisting = sc.getPersistentRDDs.keySet
-    try {
-      val und = linkEdges(s, dir)
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .distinct()
-        .localCheckpoint(true)
-      val deg = und.select(col("a").as("v"))
-        .union(und.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("d"))
-      val withDegs = und
-        .join(deg.withColumnRenamed("v", "a").withColumnRenamed("d", "da"), "a")
-        .join(deg.withColumnRenamed("v", "b").withColumnRenamed("d", "db"), "b")
-      // materialized once — it feeds all three join roles below
-      val oriented = withDegs.select(
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")), col("a"))
-          .otherwise(col("b")).as("lo"),
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")), col("b"))
-          .otherwise(col("a")).as("hi"))
-        .localCheckpoint(true)
-      val e1 = oriented.select(col("lo").as("u"), col("hi").as("v"))
-      val e2 = oriented.select(col("lo").as("v2"), col("hi").as("w"))
-      val wedges = e1.join(e2, col("v") === col("v2"))
-        .select(col("u"), col("v"), col("w"))
-      val closing = oriented.select(col("lo").as("u"), col("hi").as("w"))
-      val tris = wedges.join(closing, Seq("u", "w"))
-      tris.select(explode(array(col("u"), col("v"), col("w"))).as("node"))
-        .groupBy(col("node")).agg(count(lit(1)).as("triangles"))
-        .write.mode("overwrite").parquet(finalPath)
-    } finally {
-      sc.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting(id) }
-        .values.foreach(_.unpersist(blocking = false))
-    }
+    val und = linkEdges(s, dir)
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .distinct()
+      .localCheckpoint(true)
+    val deg = und.select(col("a").as("v"))
+      .union(und.select(col("b").as("v")))
+      .groupBy(col("v")).agg(count(lit(1)).as("d"))
+    val withDegs = und
+      .join(deg.withColumnRenamed("v", "a").withColumnRenamed("d", "da"), "a")
+      .join(deg.withColumnRenamed("v", "b").withColumnRenamed("d", "db"), "b")
+    // materialized once — it feeds all three join roles below
+    val oriented = withDegs.select(
+      when(col("da") < col("db") ||
+        (col("da") === col("db") && col("a") < col("b")), col("a"))
+        .otherwise(col("b")).as("lo"),
+      when(col("da") < col("db") ||
+        (col("da") === col("db") && col("a") < col("b")), col("b"))
+        .otherwise(col("a")).as("hi"))
+      .localCheckpoint(true)
+    val e1 = oriented.select(col("lo").as("u"), col("hi").as("v"))
+    val e2 = oriented.select(col("lo").as("v2"), col("hi").as("w"))
+    val wedges = e1.join(e2, col("v") === col("v2"))
+      .select(col("u"), col("v"), col("w"))
+    val closing = oriented.select(col("lo").as("u"), col("hi").as("w"))
+    val tris = wedges.join(closing, Seq("u", "w"))
+    tris.select(explode(array(col("u"), col("v"), col("w"))).as("node"))
+      .groupBy(col("node")).agg(count(lit(1)).as("triangles"))
+      .write.mode("overwrite").parquet(finalPath)
   }
 
   /** Distance-limited BFS (the k-hop neighborhood) from `seed` over the
@@ -292,43 +268,35 @@ object Graphs {
     * set is the FRONTIER (nodes first reached this round), not the
     * graph: settled nodes never re-expand (textbook BFS, not
     * Bellman-Ford re-relaxation), so each round shuffles only (node)
-    * longs proportional to the hop ring. Lineage cut per round;
-    * everything unpersisted on exit. A fixed `maxHops` rounds run even
-    * after the frontier empties — each such round is a join between an
-    * empty frame and the neighbor list, metadata-only at any scale. */
+    * longs proportional to the hop ring. Lineage cut per round. A
+    * fixed `maxHops` rounds run even after the frontier empties — each
+    * such round is a join between an empty frame and the neighbor
+    * list, metadata-only at any scale. */
   def khopDistances(s: SparkSession, dir: String, seed: Long = 0L,
                     maxHops: Int = 8): DataFrame =
     staged(s, dir, "bfs", s"${seed}_$maxHops") { finalPath =>
-      val sc = s.sparkContext
-      val preexisting = sc.getPersistentRDDs.keySet
-      try {
-        val und = linkEdges(s, dir)
-          .select(least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"))
-          .distinct()
-        val nbrs = und.select(col("a").as("node"), col("b").as("nbr"))
-          .union(und.select(col("b").as("node"), col("a").as("nbr")))
-          .localCheckpoint(true)
-        // loop-carried frames go through Lineage.cut: settled appears
-        // twice per round (anti-join + union), so preserved checkpoint
-        // stats would compound across hops (see Lineage)
-        var settled = Lineage.cut(s.range(1).select(lit(seed).as("node"),
-          lit(0L).as("dist")))
-        var frontier = settled
-        for (h <- 1 to maxHops) {
-          frontier = Lineage.cut(frontier
-            .join(nbrs, "node")
-            .select(col("nbr").as("node")).distinct()
-            .join(settled.select(col("node")), Seq("node"), "left_anti")
-            .select(col("node"), lit(h.toLong).as("dist")))
-          settled = Lineage.cut(settled.unionByName(frontier))
-        }
-        settled.write.mode("overwrite").parquet(finalPath)
-      } finally {
-        sc.getPersistentRDDs
-          .filterNot { case (id, _) => preexisting(id) }
-          .values.foreach(_.unpersist(blocking = false))
+      val und = linkEdges(s, dir)
+        .select(least(col("src"), col("dst")).as("a"),
+          greatest(col("src"), col("dst")).as("b"))
+        .distinct()
+      val nbrs = und.select(col("a").as("node"), col("b").as("nbr"))
+        .union(und.select(col("b").as("node"), col("a").as("nbr")))
+        .localCheckpoint(true)
+      // loop-carried frames go through Lineage.cut: settled appears
+      // twice per round (anti-join + union), so preserved checkpoint
+      // stats would compound across hops (see Lineage)
+      var settled = Lineage.cut(s.range(1).select(lit(seed).as("node"),
+        lit(0L).as("dist")))
+      var frontier = settled
+      for (h <- 1 to maxHops) {
+        frontier = Lineage.cut(frontier
+          .join(nbrs, "node")
+          .select(col("nbr").as("node")).distinct()
+          .join(settled.select(col("node")), Seq("node"), "left_anti")
+          .select(col("node"), lit(h.toLong).as("dist")))
+        settled = Lineage.cut(settled.unionByName(frontier))
       }
+      settled.write.mode("overwrite").parquet(finalPath)
     }
 
   /** Weighted single-source shortest paths bounded to ≤ `maxHops`
@@ -362,43 +330,35 @@ object Graphs {
   def harmonicCloseness(s: SparkSession, dir: String, seedMod: Int = 97,
                         maxHops: Int = 8): DataFrame =
     staged(s, dir, "close", s"${seedMod}_$maxHops") { finalPath =>
-      val sc = s.sparkContext
-      val preexisting = sc.getPersistentRDDs.keySet
-      try {
-        val und = linkEdges(s, dir)
-          .select(least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"))
-          .distinct()
-        val nbrs = und.select(col("a").as("node"), col("b").as("nbr"))
-          .union(und.select(col("b").as("node"), col("a").as("nbr")))
-          .localCheckpoint(true)
-        val seeds = Tables.documents(s, dir)
-          .filter(pmod(col("doc_id"), lit(seedMod.toLong)) === 0L)
-          .select(col("doc_id").as("seed"))
-        // Lineage.cut on the loop-carried frames (settled appears
-        // twice per round — see Lineage)
-        var settled = Lineage.cut(seeds
-          .select(col("seed"), col("seed").as("node"), lit(0L).as("dist")))
-        var frontier = settled
-        for (h <- 1 to maxHops) {
-          frontier = Lineage.cut(frontier.join(nbrs, "node")
-            .select(col("seed"), col("nbr").as("node")).distinct()
-            .join(settled.select(col("seed"), col("node")),
-              Seq("seed", "node"), "left_anti")
-            .select(col("seed"), col("node"), lit(h.toLong).as("dist")))
-          settled = Lineage.cut(settled.unionByName(frontier))
-        }
-        settled.filter(col("dist") > 0)
-          .groupBy(col("seed"))
-          .agg(count(lit(1)).as("n_reached"),
-            sum(round(lit(1e6) / col("dist")).cast("long"))
-              .as("harmonic_micros"))
-          .write.mode("overwrite").parquet(finalPath)
-      } finally {
-        sc.getPersistentRDDs
-          .filterNot { case (id, _) => preexisting(id) }
-          .values.foreach(_.unpersist(blocking = false))
+      val und = linkEdges(s, dir)
+        .select(least(col("src"), col("dst")).as("a"),
+          greatest(col("src"), col("dst")).as("b"))
+        .distinct()
+      val nbrs = und.select(col("a").as("node"), col("b").as("nbr"))
+        .union(und.select(col("b").as("node"), col("a").as("nbr")))
+        .localCheckpoint(true)
+      val seeds = Tables.documents(s, dir)
+        .filter(pmod(col("doc_id"), lit(seedMod.toLong)) === 0L)
+        .select(col("doc_id").as("seed"))
+      // Lineage.cut on the loop-carried frames (settled appears
+      // twice per round — see Lineage)
+      var settled = Lineage.cut(seeds
+        .select(col("seed"), col("seed").as("node"), lit(0L).as("dist")))
+      var frontier = settled
+      for (h <- 1 to maxHops) {
+        frontier = Lineage.cut(frontier.join(nbrs, "node")
+          .select(col("seed"), col("nbr").as("node")).distinct()
+          .join(settled.select(col("seed"), col("node")),
+            Seq("seed", "node"), "left_anti")
+          .select(col("seed"), col("node"), lit(h.toLong).as("dist")))
+        settled = Lineage.cut(settled.unionByName(frontier))
       }
+      settled.filter(col("dist") > 0)
+        .groupBy(col("seed"))
+        .agg(count(lit(1)).as("n_reached"),
+          sum(round(lit(1e6) / col("dist")).cast("long"))
+            .as("harmonic_micros"))
+        .write.mode("overwrite").parquet(finalPath)
     }.orderBy(col("seed").asc)
 
   /** `graph_walks` — DeepWalk-style random-walk corpus generation
@@ -422,43 +382,35 @@ object Graphs {
   def randomWalks(s: SparkSession, dir: String, seedMod: Int = 97,
                   walkLen: Int = 8, nWalks: Int = 2): DataFrame =
     staged(s, dir, "walks", s"${seedMod}_${walkLen}_$nWalks") { finalPath =>
-      val sc = s.sparkContext
-      val preexisting = sc.getPersistentRDDs.keySet
-      try {
-        val de = linkEdges(s, dir).distinct()
-        val bySrc = Window.partitionBy(col("src"))
-        val ranked = de.select(col("src"), col("dst"),
-            row_number().over(bySrc.orderBy(col("dst"))).cast("long")
-              .as("rk"),
-            count(lit(1)).over(bySrc).as("outdeg"))
+      val de = linkEdges(s, dir).distinct()
+      val bySrc = Window.partitionBy(col("src"))
+      val ranked = de.select(col("src"), col("dst"),
+          row_number().over(bySrc.orderBy(col("dst"))).cast("long")
+            .as("rk"),
+          count(lit(1)).over(bySrc).as("outdeg"))
+        .localCheckpoint(true)
+      var cur = Tables.documents(s, dir)
+        .filter(pmod(col("doc_id"), lit(seedMod.toLong)) === 0L)
+        .select(col("doc_id").as("seed"),
+          explode(array((0 until nWalks).map(k => lit(k.toLong)): _*))
+            .as("k"))
+        .select((col("seed") * lit(nWalks.toLong) + col("k"))
+          .as("walk_id"), col("seed").as("node"))
+        .localCheckpoint(true)
+      var acc = cur.select(col("walk_id"), lit(0L).as("step"),
+        col("node"))
+      for (t <- 1 to walkLen) {
+        cur = cur.join(ranked, col("node") === col("src"))
+          .filter(col("rk") === pmod(md5Base60(
+            concat_ws(":", col("walk_id"), lit(t.toLong), col("node"))),
+            col("outdeg")) + 1L)
+          .select(col("walk_id"), col("dst").as("node"))
           .localCheckpoint(true)
-        var cur = Tables.documents(s, dir)
-          .filter(pmod(col("doc_id"), lit(seedMod.toLong)) === 0L)
-          .select(col("doc_id").as("seed"),
-            explode(array((0 until nWalks).map(k => lit(k.toLong)): _*))
-              .as("k"))
-          .select((col("seed") * lit(nWalks.toLong) + col("k"))
-            .as("walk_id"), col("seed").as("node"))
-          .localCheckpoint(true)
-        var acc = cur.select(col("walk_id"), lit(0L).as("step"),
-          col("node"))
-        for (t <- 1 to walkLen) {
-          cur = cur.join(ranked, col("node") === col("src"))
-            .filter(col("rk") === pmod(md5Base60(
-              concat_ws(":", col("walk_id"), lit(t.toLong), col("node"))),
-              col("outdeg")) + 1L)
-            .select(col("walk_id"), col("dst").as("node"))
-            .localCheckpoint(true)
-          acc = acc.unionByName(
-            cur.select(col("walk_id"), lit(t.toLong).as("step"),
-              col("node")))
-        }
-        acc.write.mode("overwrite").parquet(finalPath)
-      } finally {
-        sc.getPersistentRDDs
-          .filterNot { case (id, _) => preexisting(id) }
-          .values.foreach(_.unpersist(blocking = false))
+        acc = acc.unionByName(
+          cur.select(col("walk_id"), lit(t.toLong).as("step"),
+            col("node")))
       }
+      acc.write.mode("overwrite").parquet(finalPath)
     }.orderBy(col("walk_id").asc, col("step").asc)
 
   /** `graph_walk_pairs` — skip-gram training pairs from the
@@ -488,37 +440,29 @@ object Graphs {
   def ssspWeighted(s: SparkSession, dir: String, seed: Long = 0L,
                    maxHops: Int = 8): DataFrame =
     staged(s, dir, "sssp", s"${seed}_$maxHops") { finalPath =>
-      val sc = s.sparkContext
-      val preexisting = sc.getPersistentRDDs.keySet
-      try {
-        val edges = linkEdges(s, dir)
-          .select(col("src"), col("dst"),
-            (lit(1L) + (col("src") + col("dst")) % 7).as("w"))
-          .localCheckpoint(true)
-        // Lineage.cut on the loop-carried frames (best appears twice
-        // per round: the improvement probe and the union — see Lineage)
-        var best = Lineage.cut(s.range(1).select(lit(seed).as("node"),
-          lit(0L).as("cost")))
-        var frontier = best
-        for (_ <- 1 to maxHops) {
-          val relaxed = frontier
-            .join(edges, col("node") === col("src"))
-            .select(col("dst").as("node"),
-              (col("cost") + col("w")).as("cost"))
-            .groupBy("node").agg(min("cost").as("cost"))
-          frontier = Lineage.cut(relaxed
-            .join(best.withColumnRenamed("cost", "old"), Seq("node"), "left")
-            .filter(col("old").isNull || col("cost") < col("old"))
-            .select(col("node"), col("cost")))
-          best = Lineage.cut(best.unionByName(frontier)
-            .groupBy("node").agg(min("cost").as("cost")))
-        }
-        best.write.mode("overwrite").parquet(finalPath)
-      } finally {
-        sc.getPersistentRDDs
-          .filterNot { case (id, _) => preexisting(id) }
-          .values.foreach(_.unpersist(blocking = false))
+      val edges = linkEdges(s, dir)
+        .select(col("src"), col("dst"),
+          (lit(1L) + (col("src") + col("dst")) % 7).as("w"))
+        .localCheckpoint(true)
+      // Lineage.cut on the loop-carried frames (best appears twice
+      // per round: the improvement probe and the union — see Lineage)
+      var best = Lineage.cut(s.range(1).select(lit(seed).as("node"),
+        lit(0L).as("cost")))
+      var frontier = best
+      for (_ <- 1 to maxHops) {
+        val relaxed = frontier
+          .join(edges, col("node") === col("src"))
+          .select(col("dst").as("node"),
+            (col("cost") + col("w")).as("cost"))
+          .groupBy("node").agg(min("cost").as("cost"))
+        frontier = Lineage.cut(relaxed
+          .join(best.withColumnRenamed("cost", "old"), Seq("node"), "left")
+          .filter(col("old").isNull || col("cost") < col("old"))
+          .select(col("node"), col("cost")))
+        best = Lineage.cut(best.unionByName(frontier)
+          .groupBy("node").agg(min("cost").as("cost")))
       }
+      best.write.mode("overwrite").parquet(finalPath)
     }
 
   /** The block-community graph for label propagation: the ring+hub
@@ -563,55 +507,47 @@ object Graphs {
     *
     * Scale shape: the canonical Pregel iteration again — each round is
     * one (nbr ⋈ labels) join plus two integer hash-aggs over (node,
-    * label) longs, lineage cut per round, everything unpersisted on
-    * exit. The argmax is encoded in one integer key
+    * label) longs, lineage cut per round. The argmax is encoded in one
+    * integer key
     * (count·1e8 + (1e8−1−label), labels < 1e8 by the corpus-id bound)
     * so the per-node reduce is a plain MAX — map-side combinable,
     * order-independent, and byte-identical in the DuckDB
     * recursive-CTE replay. */
   def communities(s: SparkSession, dir: String, iters: Int = 15): DataFrame =
     staged(s, dir, "lpa", s"${iters}_rk") { finalPath =>
-    val sc = s.sparkContext
-    val preexisting = sc.getPersistentRDDs.keySet
-    try {
-      val nodes = Tables.documents(s, dir).select(col("doc_id").as("node"))
+    val nodes = Tables.documents(s, dir).select(col("doc_id").as("node"))
+      .localCheckpoint(true)
+    // the packed-argmax encoding below reserves 8 decimal digits for
+    // the label field — fail fast instead of silently corrupting if
+    // a corpus ever exceeds it (one model-sized driver scalar)
+    require(nodes.agg(max(col("node"))).head.getLong(0) < 99999999L,
+      "LPA label encoding requires doc_id < 1e8; widen the field")
+    val und = blockEdges(s, dir)
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .distinct()
+    // undirected neighborhoods INCLUDING self — the self row keeps an
+    // acquired minimum sticky instead of sliding past it
+    val nbrs = und.select(col("a").as("node"), col("b").as("nbr"))
+      .union(und.select(col("b").as("node"), col("a").as("nbr")))
+      .union(nodes.select(col("node"), col("node").as("nbr")))
+      .localCheckpoint(true)
+    var labels = nodes.select(col("node"), col("node").as("lbl"))
+      .localCheckpoint(true)
+    for (_ <- 1 to iters) {
+      labels = nbrs
+        .join(labels.withColumnRenamed("node", "ln"),
+          col("nbr") === col("ln"))
+        .groupBy(col("node"), col("lbl"))
+        .agg(count(lit(1)).as("c"))
+        .groupBy(col("node"))
+        .agg(max(col("c") * 100000000L + (lit(99999999L) - col("lbl")))
+          .as("p"))
+        .select(col("node"),
+          (lit(99999999L) - pmod(col("p"), lit(100000000L))).as("lbl"))
         .localCheckpoint(true)
-      // the packed-argmax encoding below reserves 8 decimal digits for
-      // the label field — fail fast instead of silently corrupting if
-      // a corpus ever exceeds it (one model-sized driver scalar)
-      require(nodes.agg(max(col("node"))).head.getLong(0) < 99999999L,
-        "LPA label encoding requires doc_id < 1e8; widen the field")
-      val und = blockEdges(s, dir)
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .distinct()
-      // undirected neighborhoods INCLUDING self — the self row keeps an
-      // acquired minimum sticky instead of sliding past it
-      val nbrs = und.select(col("a").as("node"), col("b").as("nbr"))
-        .union(und.select(col("b").as("node"), col("a").as("nbr")))
-        .union(nodes.select(col("node"), col("node").as("nbr")))
-        .localCheckpoint(true)
-      var labels = nodes.select(col("node"), col("node").as("lbl"))
-        .localCheckpoint(true)
-      for (_ <- 1 to iters) {
-        labels = nbrs
-          .join(labels.withColumnRenamed("node", "ln"),
-            col("nbr") === col("ln"))
-          .groupBy(col("node"), col("lbl"))
-          .agg(count(lit(1)).as("c"))
-          .groupBy(col("node"))
-          .agg(max(col("c") * 100000000L + (lit(99999999L) - col("lbl")))
-            .as("p"))
-          .select(col("node"),
-            (lit(99999999L) - pmod(col("p"), lit(100000000L))).as("lbl"))
-          .localCheckpoint(true)
-      }
-      labels.write.mode("overwrite").parquet(finalPath)
-    } finally {
-      sc.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting(id) }
-        .values.foreach(_.unpersist(blocking = false))
     }
+    labels.write.mode("overwrite").parquet(finalPath)
   }.select(col("node"), col("lbl").as("community"))
 
   /** Newman modularity of the label-propagation partition — the eval
@@ -679,38 +615,30 @@ object Graphs {
     * weight (the multiset semantics [[linkEdges]] documents). */
   def hits(s: SparkSession, dir: String, iters: Int = 4): DataFrame =
     staged(s, dir, "hits", s"$iters") { finalPath =>
-    val sc = s.sparkContext
-    val preexisting = sc.getPersistentRDDs.keySet
-    try {
-      val nodes = Tables.documents(s, dir).select(col("doc_id").as("node"))
+    val nodes = Tables.documents(s, dir).select(col("doc_id").as("node"))
+      .localCheckpoint(true)
+    val edges = linkEdges(s, dir).localCheckpoint(true)
+    var hub = nodes.select(col("node"), lit(1000000L).as("h"))
+      .localCheckpoint(true)
+    var auth = hub.select(col("node"), lit(0L).as("a"))
+    for (_ <- 1 to iters) {
+      auth = edges
+        .join(hub.withColumnRenamed("node", "hn"), col("src") === col("hn"))
+        .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a"))
         .localCheckpoint(true)
-      val edges = linkEdges(s, dir).localCheckpoint(true)
-      var hub = nodes.select(col("node"), lit(1000000L).as("h"))
+      hub = edges
+        .join(auth.withColumnRenamed("node", "an"), col("dst") === col("an"))
+        .groupBy(col("src").as("node")).agg(sum(col("a")).as("h"))
         .localCheckpoint(true)
-      var auth = hub.select(col("node"), lit(0L).as("a"))
-      for (_ <- 1 to iters) {
-        auth = edges
-          .join(hub.withColumnRenamed("node", "hn"), col("src") === col("hn"))
-          .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a"))
-          .localCheckpoint(true)
-        hub = edges
-          .join(auth.withColumnRenamed("node", "an"), col("dst") === col("an"))
-          .groupBy(col("src").as("node")).agg(sum(col("a")).as("h"))
-          .localCheckpoint(true)
-      }
-      // every node has out-edges (out-degree 2-3) so hub covers all
-      // nodes; auth misses in-degree-0 nodes -> left join, 0 mass
-      nodes
-        .join(hub, Seq("node"), "left")
-        .join(auth, Seq("node"), "left")
-        .select(col("node"), coalesce(col("h"), lit(0L)).as("h"),
-          coalesce(col("a"), lit(0L)).as("a"))
-        .write.mode("overwrite").parquet(finalPath)
-    } finally {
-      sc.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting(id) }
-        .values.foreach(_.unpersist(blocking = false))
     }
+    // every node has out-edges (out-degree 2-3) so hub covers all
+    // nodes; auth misses in-degree-0 nodes -> left join, 0 mass
+    nodes
+      .join(hub, Seq("node"), "left")
+      .join(auth, Seq("node"), "left")
+      .select(col("node"), coalesce(col("h"), lit(0L)).as("h"),
+        coalesce(col("a"), lit(0L)).as("a"))
+      .write.mode("overwrite").parquet(finalPath)
   }.select(col("node"), col("h"), col("a"))
     // normalization maxima as a 1-row broadcast agg, not single-
     // partition whole-frame windows: no total order is needed for two
@@ -823,6 +751,27 @@ object Graphs {
           .as("reciprocity_micros"))
   }
 
+  /** The "kc:" md5-seeded irregular graph that [[kcore]] and
+    * [[diameter]] share: node i emits 1 + (h60("kc:i") mod 5) edges to
+    * h60("kc:i:j") mod N, neighbors drawn in RANK space and mapped to
+    * real ids (the r14 rewire — see [[rankedDocs]]). Eager (rank pass):
+    * callers reach it only inside their staged builds. */
+  private def kcEdges(s: SparkSession, dir: String): DataFrame = {
+    val ranked = rankedDocs(s, dir)
+    ranked
+      .select(col("doc_id"), col("n_docs"),
+        explode(sequence(lit(0L),
+          pmod(md5Base60(
+            concat(lit("kc:"), col("doc_id"))), lit(5L)))).as("j"))
+      .select(col("doc_id").as("src"),
+        pmod(md5Base60(
+          concat(lit("kc:"), col("doc_id"), lit(":"), col("j"))),
+          col("n_docs")).as("dst_rnk"))
+      .join(rankToId(ranked), "dst_rnk")
+      .select(col("src"), col("dst"))
+      .filter(col("dst") =!= col("src"))
+  }
+
   /** Bounded k-core peel — the density backbone extraction behind
     * spam/link-farm filtering and community seeding: repeatedly delete
     * nodes of degree < k (each deletion can expose new under-degree
@@ -832,40 +781,19 @@ object Graphs {
     * is idempotent after fixpoint, and the fixture converges in ≤ 6).
     *
     * The ring-lattice link graph is degree-regular (k-core degenerates
-    * to all-or-nothing on it), so this operator derives its own
-    * md5-seeded irregular graph: node i emits 1 + (h60("kc:i") mod 5)
-    * edges to h60("kc:i:j") mod N — both engines derive the identical
+    * to all-or-nothing on it), so this operator peels the md5-seeded
+    * irregular [[kcEdges]] graph — both engines derive the identical
     * multiset through the md5-60 bridge.
     *
     * Scale shape: per round one degree aggregation (map-side combined)
     * + two semi-joins of the edge set against the surviving nodes, all
     * hash-partitioned on node ids — (node, node) longs only, never
-    * payloads. Rounds materialize via eager localCheckpoint (tracked,
-    * unpersisted on exit; converged set staged to parquet once) — the
-    * ccWithRounds loop discipline. Early-exits when the edge count is
-    * stable: peeling is monotone, so count equality IS fixpoint. */
+    * payloads. Rounds materialize via eager localCheckpoint (converged
+    * set staged to parquet once) — the ccWithRounds loop discipline.
+    * Early-exits when the edge count is stable: peeling is monotone,
+    * so count equality IS fixpoint. */
   def kcore(s: SparkSession, dir: String, k: Int = 4,
             rounds: Int = 10): DataFrame = {
-    val sc = s.sparkContext
-    val preexisting = sc.getPersistentRDDs.keySet
-    // md5 degrees/neighbors drawn in RANK space and mapped to real ids
-    // (the r14 rewire — see [[rankedDocs]]). `def`: the eager rank pass
-    // and the peel run only inside the staged build.
-    def raw = {
-      val ranked = rankedDocs(s, dir)
-      ranked
-        .select(col("doc_id"), col("n_docs"),
-          explode(sequence(lit(0L),
-            pmod(md5Base60(
-              concat(lit("kc:"), col("doc_id"))), lit(5L)))).as("j"))
-        .select(col("doc_id").as("src"),
-          pmod(md5Base60(
-            concat(lit("kc:"), col("doc_id"), lit(":"), col("j"))),
-            col("n_docs")).as("dst_rnk"))
-        .join(rankToId(ranked), "dst_rnk")
-        .select(col("src"), col("dst"))
-        .filter(col("dst") =!= col("src"))
-    }
     // staged per (corpus fingerprint, k, rounds) — the mst/diameter
     // protocol (r14): the peel fixpoint runs once per corpus, warm
     // calls read the surviving edge set. Previously this face rebuilt
@@ -873,11 +801,11 @@ object Graphs {
     val stBase = Staging.base("stage_kcore_v3", dir, s"k${k}_r$rounds",
       "documents")
     val finalPath = s"$stBase/data"
-    Staging.buildOnce(stBase) { try {
+    Staging.buildOnce(stBase) { Staging.scratch(s) {
       // Lineage.cut: each peel round references `live` four times
       // (degree rollup both sides + two semi-joins), so preserved
       // checkpoint stats would compound across rounds (see Lineage)
-      var live = Lineage.cut(raw
+      var live = Lineage.cut(kcEdges(s, dir)
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
         .distinct())
@@ -901,10 +829,6 @@ object Graphs {
         r += 1
       }
       live.write.mode("overwrite").parquet(finalPath)
-    } finally {
-      sc.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting(id) }
-        .values.foreach(_.unpersist(blocking = false))
     } }
     val core = s.read.parquet(finalPath)
     core.select(col("a").as("node"))
@@ -938,8 +862,6 @@ object Graphs {
     * degree-apex ordering [[triangles]] uses applies verbatim. */
   def ktruss(s: SparkSession, dir: String, k: Int = 4,
              rounds: Int = 6): DataFrame = {
-    val sc = s.sparkContext
-    val preexisting = sc.getPersistentRDDs.keySet
     // hub-concentrated draws land in the first ⌈N/8⌉ RANKS, mapped to
     // real ids (the r14 rewire — see [[rankedDocs]]). `def`: the eager
     // rank pass and the truss peel run only inside the staged build.
@@ -974,7 +896,7 @@ object Graphs {
     val stBase = Staging.base("stage_ktruss_v3", dir, s"k${k}_r$rounds",
       "documents")
     val finalPath = s"$stBase/data"
-    Staging.buildOnce(stBase) { try {
+    Staging.buildOnce(stBase) { Staging.scratch(s) {
       // Lineage.cut: support() references `live` three times per
       // round (edge + both adjacency roles — see Lineage)
       var live = Lineage.cut(raw
@@ -998,10 +920,6 @@ object Graphs {
         .select(col("a"), col("b"),
           coalesce(col("sup"), lit(0L)).as("sup"))
         .write.mode("overwrite").parquet(finalPath)
-    } finally {
-      sc.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting(id) }
-        .values.foreach(_.unpersist(blocking = false))
     } }
     s.read.parquet(finalPath).select(col("a"), col("b"), col("sup"))
   }
@@ -1035,77 +953,69 @@ object Graphs {
   def betweenness(s: SparkSession, dir: String, seedMod: Int = 97,
                   maxDepth: Int = 4, topK: Int = 100): DataFrame =
     staged(s, dir, "betw", s"${seedMod}_${maxDepth}_$topK") { finalPath =>
-      val sc = s.sparkContext
-      val preexisting = sc.getPersistentRDDs.keySet
-      try {
-        val und = linkEdges(s, dir)
-          .select(least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"))
-          .distinct()
-        val nbrs = und.select(col("a").as("node"), col("b").as("nbr"))
-          .union(und.select(col("b").as("node"), col("a").as("nbr")))
-          .localCheckpoint(true)
-        val seeds = Tables.documents(s, dir)
-          .filter(pmod(col("doc_id"), lit(seedMod.toLong)) === 0L)
-          .select(col("doc_id").as("seed"))
-        // forward: levels(h) = (seed, node, sigma) of nodes FIRST
-        // reached at depth h, sigma = #shortest paths from seed
-        var levels = Vector(seeds
-          .select(col("seed"), col("seed").as("node"),
-            lit(1L).as("sigma")).localCheckpoint(true))
-        var settled = levels(0).select(col("seed"), col("node"))
-          .localCheckpoint(true)
-        for (_ <- 1 to maxDepth) {
-          // Lineage.cut: settled appears twice per level (anti-join
-          // + union) — see Lineage
-          val nxt = Lineage.cut(levels.last.join(nbrs, "node")
-            .select(col("seed"), col("nbr").as("node"), col("sigma"))
-            .join(settled, Seq("seed", "node"), "left_anti")
-            .groupBy(col("seed"), col("node"))
-            .agg(sum(col("sigma")).as("sigma")))
-          settled = Lineage.cut(settled
-            .unionByName(nxt.select(col("seed"), col("node"))))
-          levels = levels :+ nxt
-        }
-        // backward: delta(h) carries only nonzero-dependency nodes;
-        // a successor absent from delta(h+1) has delta 0 (coalesce)
-        var delta = levels(maxDepth)
-          .select(col("seed"), col("node"), lit(0L).as("delta"))
-          .filter(lit(false)) // empty frame with the right schema
-          .localCheckpoint(true)
-        var acc = Vector.empty[DataFrame]
-        for (h <- (maxDepth - 1) to 1 by -1) {
-          val succ = levels(h + 1)
-            .select(col("seed"), col("node").as("w"),
-              col("sigma").as("sigma_w"))
-            .join(delta.select(col("seed"), col("node").as("w"),
-              col("delta").as("delta_w")), Seq("seed", "w"), "left")
-            .select(col("seed"), col("w"), col("sigma_w"),
-              coalesce(col("delta_w"), lit(0L)).as("delta_w"))
-          val dl = levels(h).join(nbrs, "node")
-            .select(col("seed"), col("node"), col("sigma"),
-              col("nbr").as("w"))
-            .join(succ, Seq("seed", "w"))
-            .select(col("seed"), col("node"),
-              round(col("sigma").cast("double") /
-                col("sigma_w").cast("double") *
-                (lit(1000000L) + col("delta_w")).cast("double"))
-                .cast("long").as("term"))
-            .groupBy(col("seed"), col("node"))
-            .agg(sum(col("term")).as("delta"))
-          acc = acc :+ Lineage.cut(dl)
-          delta = acc.last
-        }
-        acc.reduceOption(_ unionByName _).getOrElse(delta)
-          .groupBy(col("node")).agg(sum(col("delta")).as("bc_micros"))
-          .orderBy(col("bc_micros").desc, col("node").asc)
-          .limit(topK)
-          .write.mode("overwrite").parquet(finalPath)
-      } finally {
-        sc.getPersistentRDDs
-          .filterNot { case (id, _) => preexisting(id) }
-          .values.foreach(_.unpersist(blocking = false))
+      val und = linkEdges(s, dir)
+        .select(least(col("src"), col("dst")).as("a"),
+          greatest(col("src"), col("dst")).as("b"))
+        .distinct()
+      val nbrs = und.select(col("a").as("node"), col("b").as("nbr"))
+        .union(und.select(col("b").as("node"), col("a").as("nbr")))
+        .localCheckpoint(true)
+      val seeds = Tables.documents(s, dir)
+        .filter(pmod(col("doc_id"), lit(seedMod.toLong)) === 0L)
+        .select(col("doc_id").as("seed"))
+      // forward: levels(h) = (seed, node, sigma) of nodes FIRST
+      // reached at depth h, sigma = #shortest paths from seed
+      var levels = Vector(seeds
+        .select(col("seed"), col("seed").as("node"),
+          lit(1L).as("sigma")).localCheckpoint(true))
+      var settled = levels(0).select(col("seed"), col("node"))
+        .localCheckpoint(true)
+      for (_ <- 1 to maxDepth) {
+        // Lineage.cut: settled appears twice per level (anti-join
+        // + union) — see Lineage
+        val nxt = Lineage.cut(levels.last.join(nbrs, "node")
+          .select(col("seed"), col("nbr").as("node"), col("sigma"))
+          .join(settled, Seq("seed", "node"), "left_anti")
+          .groupBy(col("seed"), col("node"))
+          .agg(sum(col("sigma")).as("sigma")))
+        settled = Lineage.cut(settled
+          .unionByName(nxt.select(col("seed"), col("node"))))
+        levels = levels :+ nxt
       }
+      // backward: delta(h) carries only nonzero-dependency nodes;
+      // a successor absent from delta(h+1) has delta 0 (coalesce)
+      var delta = levels(maxDepth)
+        .select(col("seed"), col("node"), lit(0L).as("delta"))
+        .filter(lit(false)) // empty frame with the right schema
+        .localCheckpoint(true)
+      var acc = Vector.empty[DataFrame]
+      for (h <- (maxDepth - 1) to 1 by -1) {
+        val succ = levels(h + 1)
+          .select(col("seed"), col("node").as("w"),
+            col("sigma").as("sigma_w"))
+          .join(delta.select(col("seed"), col("node").as("w"),
+            col("delta").as("delta_w")), Seq("seed", "w"), "left")
+          .select(col("seed"), col("w"), col("sigma_w"),
+            coalesce(col("delta_w"), lit(0L)).as("delta_w"))
+        val dl = levels(h).join(nbrs, "node")
+          .select(col("seed"), col("node"), col("sigma"),
+            col("nbr").as("w"))
+          .join(succ, Seq("seed", "w"))
+          .select(col("seed"), col("node"),
+            round(col("sigma").cast("double") /
+              col("sigma_w").cast("double") *
+              (lit(1000000L) + col("delta_w")).cast("double"))
+              .cast("long").as("term"))
+          .groupBy(col("seed"), col("node"))
+          .agg(sum(col("term")).as("delta"))
+        acc = acc :+ Lineage.cut(dl)
+        delta = acc.last
+      }
+      acc.reduceOption(_ unionByName _).getOrElse(delta)
+        .groupBy(col("node")).agg(sum(col("delta")).as("bc_micros"))
+        .orderBy(col("bc_micros").desc, col("node").asc)
+        .limit(topK)
+        .write.mode("overwrite").parquet(finalPath)
     }.orderBy(col("bc_micros").desc, col("node").asc)
 
   /** See [[Lineage.cut]] — the loop-carried checkpoint that discards
@@ -1187,8 +1097,6 @@ object Graphs {
     * synchronous barriers with microseconds on the driver. */
   def mst(s: SparkSession, dir: String, rounds: Int = 16,
           localThreshold: Long = 100000L): DataFrame = {
-    val sc = s.sparkContext
-    val preexisting = sc.getPersistentRDDs.keySet
     // md5 coins draw the OUT-NEIGHBOR IN RANK SPACE (the r14 rewire,
     // same device as linkEdges): dst = the id at rank md5 % n, so
     // every endpoint is a real doc_id on any id space; rank == doc_id
@@ -1228,7 +1136,7 @@ object Graphs {
     val stBase = Staging.base("stage_mst_v4", dir,
       s"r${rounds}_t$localThreshold", "documents")
     val finalPath = s"$stBase/data"
-    Staging.buildOnce(stBase) { try {
+    Staging.buildOnce(stBase) { Staging.scratch(s) {
       // contracted edge multigraph: ONE min-key representative edge
       // per component pair, components start as the nodes themselves
       var cedges = cut(edges0
@@ -1348,10 +1256,6 @@ object Graphs {
       mstParts.reduceOption(_ unionAll _)
         .getOrElse(edges0.select(col("a"), col("b"), col("w")).limit(0))
         .write.mode("overwrite").parquet(finalPath)
-    } finally {
-      sc.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting(id) }
-        .values.foreach(_.unpersist(blocking = false))
     } }
     s.read.parquet(finalPath).select(col("a"), col("b"), col("w"))
   }
@@ -1361,8 +1265,8 @@ object Graphs {
     * BFS from a fixed seed, take the farthest node A (its eccentricity
     * already lower-bounds the diameter), BFS again from A — the
     * second eccentricity is the double-sweep bound, empirically exact
-    * on most real graphs. Runs over [[kcore]]'s "kc:" md5 graph
-    * (shared deliberately — one fixture, many lenses); seed = min
+    * on most real graphs. Runs over the [[kcEdges]] graph [[kcore]]
+    * peels (shared deliberately — one fixture, many lenses); seed = min
     * doc_id, farthest-ties broken by min node. Both sweeps are
     * depth-16-capped synchronous BFS (≥ the fixture diameter at every
     * tested SF; the r-round contract is well-defined either way — the
@@ -1377,30 +1281,11 @@ object Graphs {
     * frame by join, no collect anywhere. */
   def diameter(s: SparkSession, dir: String, maxDepth: Int = 16)
       : DataFrame = {
-    val sc = s.sparkContext
-    val preexisting = sc.getPersistentRDDs.keySet
-    // same "kc:" fixture as kcore, drawn in RANK space (r14 rewire).
-    // `def`: the eager rank pass must only run inside the staged build
-    def raw = {
-      val ranked = rankedDocs(s, dir)
-      ranked
-        .select(col("doc_id"), col("n_docs"),
-          explode(sequence(lit(0L),
-            pmod(md5Base60(
-              concat(lit("kc:"), col("doc_id"))), lit(5L)))).as("j"))
-        .select(col("doc_id").as("src"),
-          pmod(md5Base60(
-            concat(lit("kc:"), col("doc_id"), lit(":"), col("j"))),
-            col("n_docs")).as("dst_rnk"))
-        .join(rankToId(ranked), "dst_rnk")
-        .select(col("src"), col("dst"))
-        .filter(col("dst") =!= col("src"))
-    }
     val stBase = Staging.base("stage_diam_v3", dir, s"d$maxDepth",
       "documents")
     val finalPath = s"$stBase/data"
-    Staging.buildOnce(stBase) { try {
-      val und = raw
+    Staging.buildOnce(stBase) { Staging.scratch(s) {
+      val und = kcEdges(s, dir)
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
         .distinct()
@@ -1441,10 +1326,6 @@ object Graphs {
         .select(col("n_reached"), col("far_a"), col("ecc_a"),
           col("far_b"), col("diameter_lb"))
         .write.mode("overwrite").parquet(finalPath)
-    } finally {
-      sc.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting(id) }
-        .values.foreach(_.unpersist(blocking = false))
     } }
     s.read.parquet(finalPath)
       .select(col("n_reached"), col("far_a"), col("ecc_a"),
@@ -1513,10 +1394,10 @@ object Graphs {
       : DataFrame = {
     val basePath = Staging.base("scc_labels_v2", dir, s"cap$cap",
       "documents")
-    Staging.buildOnce(basePath) {
+    Staging.buildOnce(basePath)(Staging.scratch(s) {
       sccLabelsCompute(s, dir, cap).write.mode("overwrite")
         .parquet(s"$basePath/labels")
-    }
+    })
     s.read.parquet(s"$basePath/labels")
   }
 
@@ -1579,7 +1460,7 @@ object Graphs {
     val stBase = Staging.base("stage_cond_v1", dir, s"cap$cap",
       "documents")
     val finalPath = s"$stBase/data"
-    Staging.buildOnce(stBase) {
+    Staging.buildOnce(stBase) { Staging.scratch(s) {
     val labels = sccLabels(s, dir, cap).localCheckpoint(true)
     val dagEdges = sccEdges(s, dir, cap)
       .join(labels.withColumnRenamed("u", "src")
@@ -1619,7 +1500,7 @@ object Graphs {
     labels.groupBy(col("scc_label")).agg(count(lit(1)).as("size"))
       .join(depth, "scc_label")
       .write.mode("overwrite").parquet(finalPath)
-    }
+    } }
     s.read.parquet(finalPath)
       .select(col("scc_label"), col("size"), col("depth"))
       .orderBy(col("depth").asc, col("scc_label").asc)

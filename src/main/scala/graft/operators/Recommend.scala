@@ -31,45 +31,36 @@ object Recommend {
     * Scores are integer micros from single IEEE ops on exact integer
     * counts, so the DuckDB oracle reproduces them bit-for-bit:
     * lift = n_ab·N / (n_a·n_b), cosine = n_ab / √(n_a·n_b). */
-  /** Staged basket statistics shared by [[itemCooccur]] and
-    * [[assocRules]] (r14): the supported pair counts (the basket
-    * self-join, the expensive part), per-item support, and the order
-    * count — pure functions of (lineitem, minSupport), built once per
-    * corpus fingerprint. Both faces previously re-ran the self-join
-    * per call. */
+  /** Staged basket statistics shared by [[itemCooccur]],
+    * [[assocRules]] and [[cooccurIndexed]]'s postings build (r14): the
+    * supported pair counts (the basket self-join, the expensive part),
+    * per-item support, and the order count — pure functions of
+    * (lineitem, minSupport), built once per corpus fingerprint. */
   private def basketStats(s: SparkSession, dir: String,
                           minSupport: Int)
       : (DataFrame, DataFrame, DataFrame) = {
     val base = Staging.base("cooc_pairs_v1", dir, s"ms$minSupport",
       "lineitem")
-    Staging.buildOnce(base) {
-      val sc = s.sparkContext
-      val preexisting = sc.getPersistentRDDs.keySet
-      try {
-        // items feeds three aggregations — checkpoint once
-        val items = Tables.lineitem(s, dir)
-          .select(col("l_orderkey").as("okey"),
-            col("l_partkey").as("item"))
-          .distinct().localCheckpoint(true)
-        items.agg(countDistinct(col("okey")).as("n_orders"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$base/n")
-        items.groupBy(col("item")).agg(count(lit(1)).as("n_item"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$base/support")
-        items.as("a")
-          .join(items.as("b"), col("a.okey") === col("b.okey"))
-          .filter(col("a.item") < col("b.item"))
-          .groupBy(col("a.item").as("item_a"),
-            col("b.item").as("item_b"))
-          .agg(count(lit(1)).as("n_ab"))
-          .filter(col("n_ab") >= minSupport)
-          .write.mode("overwrite").parquet(s"$base/pairs")
-      } finally {
-        sc.getPersistentRDDs
-          .filterNot { case (id, _) => preexisting(id) }
-          .values.foreach(_.unpersist(blocking = false))
-      }
-    }
+    Staging.buildOnce(base) { Staging.scratch(s) {
+      // items feeds three aggregations — checkpoint once
+      val items = Tables.lineitem(s, dir)
+        .select(col("l_orderkey").as("okey"),
+          col("l_partkey").as("item"))
+        .distinct().localCheckpoint(true)
+      items.agg(countDistinct(col("okey")).as("n_orders"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$base/n")
+      items.groupBy(col("item")).agg(count(lit(1)).as("n_item"))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$base/support")
+      items.as("a")
+        .join(items.as("b"), col("a.okey") === col("b.okey"))
+        .filter(col("a.item") < col("b.item"))
+        .groupBy(col("a.item").as("item_a"),
+          col("b.item").as("item_b"))
+        .agg(count(lit(1)).as("n_ab"))
+        .filter(col("n_ab") >= minSupport)
+        .write.mode("overwrite").parquet(s"$base/pairs")
+    } }
     (s.read.parquet(s"$base/pairs"),
       s.read.parquet(s"$base/support"), s.read.parquet(s"$base/n"))
   }
@@ -344,18 +335,7 @@ object Recommend {
     import org.apache.spark.sql.expressions.Window
     val base = Staging.base("cooc_index_v2", dir, "", "lineitem")
     Staging.buildOnce(base) {
-      val it = Tables.lineitem(s, dir)
-        .select(col("l_orderkey").as("okey"), col("l_partkey").as("item"))
-        .distinct()
-      val nOrders = it.agg(countDistinct(col("okey")).as("n_orders"))
-      val support = it.groupBy(col("item"))
-        .agg(count(lit(1)).as("n_item"))
-      val pairs = it.as("a")
-        .join(it.as("b"), col("a.okey") === col("b.okey"))
-        .filter(col("a.item") < col("b.item"))
-        .groupBy(col("a.item").as("item_a"), col("b.item").as("item_b"))
-        .agg(count(lit(1)).as("n_ab"))
-        .filter(col("n_ab") >= minSupport)
+      val (pairs, support, nOrders) = basketStats(s, dir, minSupport)
       val sym = pairs
         .select(col("item_a").as("item"), col("item_b").as("nbr"),
           col("n_ab"))

@@ -27,6 +27,59 @@ import org.apache.spark.sql.functions._
   */
 object Retrieval {
 
+  /** The arms of one [[overlapped]] section: `apply` forks an arm on
+    * the global pool, `join` waits for its result. */
+  private final class Arms(sc: org.apache.spark.SparkContext,
+                           group: String) {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    private val forked =
+      new java.util.concurrent.ConcurrentLinkedQueue[Future[_]]()
+    val firstFailure =
+      new java.util.concurrent.atomic.AtomicReference[Throwable]()
+
+    /** Records `e` if it is the section's first failure, and then
+      * cancels the group's running and future jobs. */
+    def fail(e: Throwable): Unit =
+      if (firstFailure.compareAndSet(null, e))
+        sc.cancelJobGroupAndFutureJobs(group)
+
+    def apply[A](arm: => A): Future[A] = {
+      val f = Future {
+        sc.setJobGroup(group, "overlapped arm")
+        try arm
+        catch { case e: Throwable => fail(e); throw e }
+        finally sc.clearJobGroup() // pooled threads keep local properties
+      }(ExecutionContext.global)
+      forked.add(f)
+      f
+    }
+
+    def join[A](f: Future[A]): A = Await.result(f, Duration.Inf)
+
+    def awaitAll(): Unit =
+      forked.forEach(f => { Await.ready(f, Duration.Inf); () })
+  }
+
+  private val overlapGroups = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Runs `body`, whose arms overlap their driver-side construction,
+    * as one unit: every arm's jobs run in a per-call job group, the
+    * first failure (an arm's or `body`'s own) cancels that group's
+    * running and future jobs, the call returns only once every arm has
+    * stopped, and that first failure is rethrown once — no arm is left
+    * running detached jobs behind a failed call. Arm results and the
+    * order `body` assembles them in are its own. */
+  private def overlapped[T](s: SparkSession)(body: Arms => T): T = {
+    val arms = new Arms(s.sparkContext,
+      s"graft-overlap-${overlapGroups.incrementAndGet()}")
+    val result = scala.util.Try(body(arms))
+    result.failed.foreach(arms.fail)
+    arms.awaitAll()
+    Option(arms.firstFailure.get).foreach(e => throw e)
+    result.get
+  }
+
   /** Reciprocal-rank-fusion constant (Cormack & Clarke's k = 60 — the
     * published default that damps rank-1 dominance). */
   val RrfK = 60
@@ -92,16 +145,14 @@ object Retrieval {
     // arm constructions each run model-sized driver jobs (index stats /
     // quantizer / probe-cell collects); the two arms touch DISJOINT
     // staged directories (bm25_index vs ivf_index), so their
-    // constructions overlap safely (guide §2.6) — the fused frame is
-    // built from the same two arm frames either way
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fSparse = Future(TextAnalysis.bm25Indexed(s, dir, terms, armK))
-    val fDense = Future(
-      Similarity.annIvfIndexed(s, dir, armK).select("vec_id", "cos_sim"))
-    rrfFuse(Await.result(fSparse, Duration.Inf),
-      Await.result(fDense, Duration.Inf), k)
+    // constructions overlap safely — the fused frame is built from the
+    // same two arm frames either way
+    overlapped(s) { arm =>
+      val sparse = arm(TextAnalysis.bm25Indexed(s, dir, terms, armK))
+      val dense = arm(
+        Similarity.annIvfIndexed(s, dir, armK).select("vec_id", "cos_sim"))
+      rrfFuse(arm.join(sparse), arm.join(dense), k)
+    }
   }
 
   /** `ret4_prf_rm3` — RM3-style pseudo-relevance feedback, the
@@ -289,20 +340,18 @@ object Retrieval {
     // postings index exists, so the PRF arm (which reads the same
     // postings inside prfRm3Indexed) can never race its build
     // directory; the PRF and dense constructions — each a chain of
-    // model-sized collects over disjoint staged dirs — then overlap
-    // (guide §2.6). Arm frames and the fused result are unchanged.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
+    // model-sized collects over disjoint staged dirs — then overlap.
+    // Arm frames and the fused result are unchanged.
     val seed = ranked(TextAnalysis.bm25Indexed(s, dir, terms, armK),
       "doc_id", "score", "seed_rank")
-    val fPrf = Future(ranked(prfRm3Indexed(s, dir, terms, k = armK),
-      "doc_id", "score", "prf_rank"))
-    val fDense = Future(ranked(Similarity.annIvfIndexed(s, dir, armK)
-      .select(col("vec_id"), col("cos_sim")),
-      "vec_id", "cos_sim", "dense_rank"))
-    val prf = Await.result(fPrf, Duration.Inf)
-    val dense = Await.result(fDense, Duration.Inf)
+    val (prf, dense) = overlapped(s) { arm =>
+      val fPrf = arm(ranked(prfRm3Indexed(s, dir, terms, k = armK),
+        "doc_id", "score", "prf_rank"))
+      val fDense = arm(ranked(Similarity.annIvfIndexed(s, dir, armK)
+        .select(col("vec_id"), col("cos_sim")),
+        "vec_id", "cos_sim", "dense_rank"))
+      (arm.join(fPrf), arm.join(fDense))
+    }
     seed.join(prf, Seq("doc_id"), "full_outer")
       .join(dense, Seq("doc_id"), "full_outer")
       .select(col("doc_id"), col("seed_rank"), col("prf_rank"),
@@ -468,7 +517,7 @@ object Retrieval {
     // the exact dense top-20 stages once per embeddings fingerprint
     // (the eval2 truth convention) — the eval face stops re-running a
     // corpus tokenization and a brute-force scan per invocation
-    // Job overlap (r16, guide §2.6): this face is a chain of ≤10-row
+    // Job overlap (r16): this face is a chain of ≤10-row
     // jobs — two arm materializations, the fused list, four arm
     // collects — that ran strictly sequentially, so its wall time was
     // the SUM of eight tiny jobs' latencies on an otherwise idle
@@ -478,9 +527,6 @@ object Retrieval {
     // pure-compute pieces then overlap. Each arm's rows are unchanged
     // — only the submission order is concurrent, and the output rows
     // are assembled in the fixed arm order.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val bm20df = TextAnalysis.bm25Indexed(s, dir,
       Seq("spark", "query", "filter"), 20) // builds postings if missing
     val dnBase = Staging.base("ann_brute_v1", dir, "k20", "embeddings")
@@ -488,30 +534,36 @@ object Retrieval {
       Similarity.annBruteForce(s, dir, 20).select("vec_id", "cos_sim")
         .coalesce(1).write.mode("overwrite").parquet(s"$dnBase/top")
     }
-    val fBm = Future(bm20df.localCheckpoint(true))
-    val fDn = Future(s.read.parquet(s"$dnBase/top").localCheckpoint(true))
-    // arm 3 is an independent served stack (its own staged artifacts
-    // were built by its first construction in this JVM or a prior run;
-    // its postings dir is the one bm25Indexed just ensured above)
-    val fArm3 = Future(rrfFusionIndexed(s, dir).select("doc_id")
-      .collect().map(_.getLong(0)))
-    val bm20 = Await.result(fBm, Duration.Inf)
-    val dn20 = Await.result(fDn, Duration.Inf)
-    val fR1 = Future(rrfFuse(bm20, dn20, 10).select("doc_id")
-      .collect().map(_.getLong(0)).toSet)
-    val fArm1 = Future(
-      bm20.orderBy(col("score").desc, col("doc_id").asc).limit(10)
-        .select("doc_id").collect().map(_.getLong(0)))
-    val fArm2 = Future(
-      dn20.orderBy(col("cos_sim").desc, col("vec_id").asc).limit(10)
-        .select(col("vec_id").as("doc_id")).collect().map(_.getLong(0)))
-    val fArm4 = Future(minMaxFuse(bm20, dn20, 10).select("doc_id")
-      .collect().map(_.getLong(0)))
-    val arms: Seq[(String, Array[Long])] = Seq(
-      ("1_rrf_vs_bm25", Await.result(fArm1, Duration.Inf)),
-      ("2_rrf_vs_dense", Await.result(fArm2, Duration.Inf)),
-      ("3_rrf_vs_indexed", Await.result(fArm3, Duration.Inf)),
-      ("4_rrf_vs_minmax", Await.result(fArm4, Duration.Inf)))
+    // the scope opens before the arms fork and closes after every arm
+    // stopped, so it releases exactly this section's bm20/dn20
+    // checkpoints: only the collected ids leave it
+    val (aIds, arms) = Staging.scratch(s)(overlapped(s) { arm =>
+      val fBm = arm(bm20df.localCheckpoint(true))
+      val fDn = arm(s.read.parquet(s"$dnBase/top").localCheckpoint(true))
+      // arm 3 is an independent served stack (its own staged artifacts
+      // were built by its first construction in this JVM or a prior
+      // run; its postings dir is the one bm25Indexed just ensured above)
+      val fArm3 = arm(rrfFusionIndexed(s, dir).select("doc_id")
+        .collect().map(_.getLong(0)))
+      val bm20 = arm.join(fBm)
+      val dn20 = arm.join(fDn)
+      val fR1 = arm(rrfFuse(bm20, dn20, 10).select("doc_id")
+        .collect().map(_.getLong(0)).toSet)
+      val fArm1 = arm(
+        bm20.orderBy(col("score").desc, col("doc_id").asc).limit(10)
+          .select("doc_id").collect().map(_.getLong(0)))
+      val fArm2 = arm(
+        dn20.orderBy(col("cos_sim").desc, col("vec_id").asc).limit(10)
+          .select(col("vec_id").as("doc_id")).collect().map(_.getLong(0)))
+      val fArm4 = arm(minMaxFuse(bm20, dn20, 10).select("doc_id")
+        .collect().map(_.getLong(0)))
+      val arms: Seq[(String, Array[Long])] = Seq(
+        ("1_rrf_vs_bm25", arm.join(fArm1)),
+        ("2_rrf_vs_dense", arm.join(fArm2)),
+        ("3_rrf_vs_indexed", arm.join(fArm3)),
+        ("4_rrf_vs_minmax", arm.join(fArm4)))
+      (arm.join(fR1), arms)
+    })
     // model-sized driver finish (r14): every list is ≤10 ids, so the
     // overlap/Jaccard readout is pure arithmetic on collected K-row
     // models — the prfRm3Indexed collect discipline. The distributed
@@ -524,7 +576,6 @@ object Retrieval {
     // NULL) — NOT what the retired Spark plan did (non-ANSI
     // round(NaN).cast(long) was 0L), so the driver-side finish is the
     // side that agrees with the oracle on an empty union.
-    val aIds = Await.result(fR1, Duration.Inf)
     val rows = arms.map { case (name, bIds) =>
       val common = bIds.count(aIds.contains).toLong
       val denom = aIds.size.toLong + bIds.length - common

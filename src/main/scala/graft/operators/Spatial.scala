@@ -164,47 +164,39 @@ object Spatial {
     * TakeOrderedAndProject top-K. */
   def giStar(s: SparkSession, dir: String, rMicros: Long = 2000000L,
              topK: Int = 10): DataFrame = {
-    // snapshot + finally-unpersist (the mst/cc convention): the cells
-    // checkpoint would otherwise accumulate a persisted RDD per call;
-    // the ≤ topK-row result materializes before the unpersist
-    val sc = s.sparkContext
-    val preexisting = sc.getPersistentRDDs.keySet
-    try {
-    val cells = points(s, dir)
-      .groupBy(floor(col("x") / rMicros).cast("long").as("cx"),
-        floor(col("y") / rMicros).cast("long").as("cy"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(true) // feeds stencil both sides + global stats
-    val offs = array((for { dx <- -1 to 1; dy <- -1 to 1 } yield
-      struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy"))): _*)
-    val hood = cells
-      .select(explode(offs).as("o"), col("cx"), col("cy"), col("n"))
-      .select((col("cx") + col("o.dx")).as("tx"),
-        (col("cy") + col("o.dy")).as("ty"), col("n"))
-      .groupBy(col("tx"), col("ty"))
-      .agg(sum(col("n")).as("s_sum"), count(lit(1)).as("w_cells"))
-    val tot = broadcast(cells.agg(count(lit(1)).as("nc"),
-      sum(col("n")).as("sn"), sum(col("n") * col("n")).as("sn2")))
-    val ncD = col("nc").cast("double")
-    val wD = col("w_cells").cast("double")
-    val mean = col("sn").cast("double") / ncD
-    val sd = sqrt(col("sn2").cast("double") / ncD - mean * mean)
-    val den = sd * sqrt((ncD * wD - wD * wD) / (ncD - lit(1.0)))
-    Staging.materializedLocal(cells
-      .join(hood, col("cx") === col("tx") && col("cy") === col("ty"))
-      .crossJoin(tot)
-      .filter(col("nc") > 1L &&
-        col("nc") * col("sn2") - col("sn") * col("sn") > 0L)
-      .select(col("cx"), col("cy"), col("n").as("n_points"),
-        col("w_cells"), col("s_sum"),
-        round(lit(1e6) * ((col("s_sum").cast("double") - wD * mean) /
-          den)).cast("long").as("gi_micros"))
-      .orderBy(col("gi_micros").desc, col("cx").asc, col("cy").asc)
-      .limit(topK), topK)
-    } finally {
-      sc.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting(id) }
-        .values.foreach(_.unpersist(blocking = false))
+    // the ≤ topK-row result materializes inside the scope
+    Staging.scratch(s) {
+      val cells = points(s, dir)
+        .groupBy(floor(col("x") / rMicros).cast("long").as("cx"),
+          floor(col("y") / rMicros).cast("long").as("cy"))
+        .agg(count(lit(1)).as("n"))
+        .localCheckpoint(true) // feeds stencil both sides + global stats
+      val offs = array((for { dx <- -1 to 1; dy <- -1 to 1 } yield
+        struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy"))): _*)
+      val hood = cells
+        .select(explode(offs).as("o"), col("cx"), col("cy"), col("n"))
+        .select((col("cx") + col("o.dx")).as("tx"),
+          (col("cy") + col("o.dy")).as("ty"), col("n"))
+        .groupBy(col("tx"), col("ty"))
+        .agg(sum(col("n")).as("s_sum"), count(lit(1)).as("w_cells"))
+      val tot = broadcast(cells.agg(count(lit(1)).as("nc"),
+        sum(col("n")).as("sn"), sum(col("n") * col("n")).as("sn2")))
+      val ncD = col("nc").cast("double")
+      val wD = col("w_cells").cast("double")
+      val mean = col("sn").cast("double") / ncD
+      val sd = sqrt(col("sn2").cast("double") / ncD - mean * mean)
+      val den = sd * sqrt((ncD * wD - wD * wD) / (ncD - lit(1.0)))
+      Staging.materializedLocal(cells
+        .join(hood, col("cx") === col("tx") && col("cy") === col("ty"))
+        .crossJoin(tot)
+        .filter(col("nc") > 1L &&
+          col("nc") * col("sn2") - col("sn") * col("sn") > 0L)
+        .select(col("cx"), col("cy"), col("n").as("n_points"),
+          col("w_cells"), col("s_sum"),
+          round(lit(1e6) * ((col("s_sum").cast("double") - wD * mean) /
+            den)).cast("long").as("gi_micros"))
+        .orderBy(col("gi_micros").desc, col("cx").asc, col("cy").asc)
+        .limit(topK), topK)
     }
   }
 

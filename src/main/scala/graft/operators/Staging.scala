@@ -19,7 +19,11 @@ package graft.operators
   *    directory; a deployment puts a lock (or a scheduler-owned build
   *    step) in front, same as any shared index build. Within one JVM
   *    the marker check is idempotent: rebuilding identical content
-  *    over a still-read directory is benign (same input ⇒ same bytes).
+  *    over a still-read directory is benign (same input ⇒ same bytes);
+  *  - the RDDs a build persists as scratch (loop checkpoints,
+  *    multi-consumer frames) are released by [[Staging.scratch]],
+  *    which the building operator opts into — see its one
+  *    concurrency condition.
   */
 /** Eager lineage cut for ITERATIVE loops that also DISCARDS the origin
   * plan's statistics. `Dataset.localCheckpoint` preserves the optimized
@@ -85,17 +89,39 @@ private[graft] object Staging {
     }
   }
 
+  /** The scratch scope for an operator's persisted intermediates: runs
+    * `body` and, whether it returns or throws, unpersists (without
+    * blocking) every RDD persisted while it ran. RDDs persisted before
+    * the scope are kept. What `body` returns must therefore not read a
+    * scratch RDD: stage it to parquet or [[materialized]] first.
+    *
+    * The one condition: the scope knows its RDDs only as the ones that
+    * appeared between its snapshot and its exit, not by the thread
+    * that persisted them, so it must not run while other threads
+    * persist RDDs they still need on the same context. That is why the
+    * scope is opt-in and not part of [[buildOnce]]: a build reached
+    * from overlapped arms (the retrieval fusion faces' index roots)
+    * would unpersist the local checkpoints its sibling arms create at
+    * the same moment. */
+  def scratch[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
+    val sc = s.sparkContext
+    val preexisting = sc.getPersistentRDDs.keySet
+    try body
+    finally sc.getPersistentRDDs
+      .filterNot { case (id, _) => preexisting(id) }
+      .values.foreach(_.unpersist(blocking = false))
+  }
+
   private val matCounter = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Materialize `df` to a per-call /tmp parquet and return a read of
     * it — lets an operator whose inputs are arbitrary in-memory frames
-    * unpersist its checkpointed intermediates in a `finally` WITHOUT
-    * invalidating the returned plan (a localCheckpoint truncates
-    * lineage, so unpersisting one that a still-lazy result plan reads
-    * would lose the data; the mst/cc convention applied to unfingerprinted
-    * inputs). The path is per-(JVM, call) unique, so concurrent calls
-    * never clobber a plan another caller still reads; the bytes written
-    * are result-sized (rollups/top-K), never corpus-sized. */
+    * close its [[scratch]] scope WITHOUT invalidating the returned plan
+    * (a localCheckpoint truncates lineage, so unpersisting one that a
+    * still-lazy result plan reads would lose the data). The path is
+    * per-(JVM, call) unique, so concurrent calls never clobber a plan
+    * another caller still reads; the bytes written are result-sized
+    * (rollups/top-K), never corpus-sized. */
   def materialized(df: org.apache.spark.sql.DataFrame, tag: String)
       : org.apache.spark.sql.DataFrame = {
     val s = df.sparkSession
@@ -134,18 +160,17 @@ private[graft] object Staging {
   private[graft] def reapOnExit(path: String): Unit = reapHookInstalled.add(path)
 
   /** [[materialized]] with cross-call reuse for PURELY FILE-BACKED
-    * inputs (the ccWithRounds convention), owning the whole
-    * snapshot → build → materialize → finally-unpersist cycle: when
-    * every leaf of every input is a file relation, the result is
-    * staged once per (tag, params, input plans, source-file digest)
-    * and warm calls read the parquet WITHOUT running `build` (so the
-    * expensive checkpointed intermediates are never even created);
-    * any in-memory leaf (specs' LocalRelations, streaming
-    * micro-batches' LogicalRDDs) has no fingerprint to trust and
-    * falls back to per-call materialization — always fresh, exactly
-    * the pre-staging semantics. Either way, every RDD `build`
-    * persists is unpersisted before return and the returned plan
-    * depends on no transient storage. */
+    * inputs (the ccWithRounds convention), running build and
+    * materialization in one [[scratch]] scope: when every leaf of
+    * every input is a file relation, the result is staged once per
+    * (tag, params, input plans, source-file digest) and warm calls
+    * read the parquet WITHOUT running `build` (so the expensive
+    * checkpointed intermediates are never even created); any
+    * in-memory leaf (specs' LocalRelations, streaming micro-batches'
+    * LogicalRDDs) has no fingerprint to trust and falls back to
+    * per-call materialization — always fresh, exactly the pre-staging
+    * semantics. Either way the returned plan depends on no transient
+    * storage. */
   def resultOnce(tag: String, params: String,
                  inputs: Seq[org.apache.spark.sql.DataFrame])
                 (build: => org.apache.spark.sql.DataFrame)
@@ -170,23 +195,16 @@ private[graft] object Staging {
     path match {
       case Some(p) if marker(p).exists() =>
         s.read.parquet(s"$p/data")
-      case _ =>
-        val sc = s.sparkContext
-        val preexisting = sc.getPersistentRDDs.keySet
-        try {
-          val df = build
-          path match {
-            case Some(p) =>
-              df.coalesce(1).write.mode("overwrite").parquet(s"$p/data")
-              marker(p).createNewFile()
-              s.read.parquet(s"$p/data")
-            case None => materialized(df, tag)
-          }
-        } finally {
-          sc.getPersistentRDDs
-            .filterNot { case (id, _) => preexisting(id) }
-            .values.foreach(_.unpersist(blocking = false))
+      case _ => scratch(s) {
+        val df = build
+        path match {
+          case Some(p) =>
+            df.coalesce(1).write.mode("overwrite").parquet(s"$p/data")
+            marker(p).createNewFile()
+            s.read.parquet(s"$p/data")
+          case None => materialized(df, tag)
         }
+      }
     }
   }
 

@@ -2094,61 +2094,53 @@ object TextAnalysis {
     val teleport = (BigDecimal(1) - BigDecimal(damping.toString)).toDouble
     val base = Staging.base("stage_textrank_v1", dir,
       s"${iters}_${math.round(damping * 1000)}", "documents")
-    Staging.buildOnce(base) {
-      val sc = s.sparkContext
-      val preexisting = sc.getPersistentRDDs.keySet
-      try {
-        val tk = Tables.documents(s, dir)
-          .select(tokens(lower(col("text"))).as("tk"))
-          .filter(size(col("tk")) >= 2)
-        val pairs = tk
-          .select(slice(col("tk"), lit(1), size(col("tk")) - 1).as("l"),
-            slice(col("tk"), lit(2), size(col("tk")) - 1).as("r"))
-          .select(explode(arrays_zip(col("l"), col("r"))).as("p"))
-          .select(col("p.l").as("a"), col("p.r").as("b"))
-          .filter(col("a") =!= col("b"))
-        // aggregate the DIRECTED bigrams first (one corpus explode),
-        // then symmetrize the vocab²-bounded count frame — identical
-        // edge weights at half the corpus-scan and shuffle cost of
-        // symmetrizing the raw token stream
-        val directed = pairs.groupBy(col("a"), col("b"))
-          .agg(count(lit(1)).as("w"))
-        val edges = directed
-          .unionAll(directed.select(col("b").as("a"), col("a").as("b"),
-            col("w")))
-          .groupBy(col("a"), col("b")).agg(sum(col("w")).as("w"))
-          .select(col("a").as("src"), col("b").as("dst"), col("w"))
-        val wout = edges.groupBy(col("src")).agg(sum(col("w")).as("wout"))
-        val withW = edges.join(wout, "src").localCheckpoint(true)
-        val nodes = edges.select(col("src").as("term")).distinct()
-          .localCheckpoint(true)
-        val nTotal = broadcast(nodes.agg(count(lit(1)).as("n"))
-          .localCheckpoint(true))
-        var ranks = nodes.crossJoin(nTotal)
+    Staging.buildOnce(base) { Staging.scratch(s) {
+      val tk = Tables.documents(s, dir)
+        .select(tokens(lower(col("text"))).as("tk"))
+        .filter(size(col("tk")) >= 2)
+      val pairs = tk
+        .select(slice(col("tk"), lit(1), size(col("tk")) - 1).as("l"),
+          slice(col("tk"), lit(2), size(col("tk")) - 1).as("r"))
+        .select(explode(arrays_zip(col("l"), col("r"))).as("p"))
+        .select(col("p.l").as("a"), col("p.r").as("b"))
+        .filter(col("a") =!= col("b"))
+      // aggregate the DIRECTED bigrams first (one corpus explode),
+      // then symmetrize the vocab²-bounded count frame — identical
+      // edge weights at half the corpus-scan and shuffle cost of
+      // symmetrizing the raw token stream
+      val directed = pairs.groupBy(col("a"), col("b"))
+        .agg(count(lit(1)).as("w"))
+      val edges = directed
+        .unionAll(directed.select(col("b").as("a"), col("a").as("b"),
+          col("w")))
+        .groupBy(col("a"), col("b")).agg(sum(col("w")).as("w"))
+        .select(col("a").as("src"), col("b").as("dst"), col("w"))
+      val wout = edges.groupBy(col("src")).agg(sum(col("w")).as("wout"))
+      val withW = edges.join(wout, "src").localCheckpoint(true)
+      val nodes = edges.select(col("src").as("term")).distinct()
+        .localCheckpoint(true)
+      val nTotal = broadcast(nodes.agg(count(lit(1)).as("n"))
+        .localCheckpoint(true))
+      var ranks = nodes.crossJoin(nTotal)
+        .select(col("term"),
+          round(lit(1e6) / col("n")).cast("long").as("r"))
+        .localCheckpoint(true)
+      for (_ <- 1 to iters) {
+        val contrib = withW.join(ranks, col("src") === col("term"))
+          .select(col("dst"),
+            round(col("r").cast("double") * col("w") / col("wout"))
+              .cast("long").as("c"))
+          .groupBy(col("dst")).agg(sum(col("c")).as("in_mass"))
+        ranks = nodes.join(contrib, col("term") === col("dst"), "left")
+          .crossJoin(nTotal)
           .select(col("term"),
-            round(lit(1e6) / col("n")).cast("long").as("r"))
+            (round(lit(teleport) * lit(1e6) / col("n")).cast("long") +
+              round(lit(damping) * coalesce(col("in_mass"), lit(0L)))
+                .cast("long")).as("r"))
           .localCheckpoint(true)
-        for (_ <- 1 to iters) {
-          val contrib = withW.join(ranks, col("src") === col("term"))
-            .select(col("dst"),
-              round(col("r").cast("double") * col("w") / col("wout"))
-                .cast("long").as("c"))
-            .groupBy(col("dst")).agg(sum(col("c")).as("in_mass"))
-          ranks = nodes.join(contrib, col("term") === col("dst"), "left")
-            .crossJoin(nTotal)
-            .select(col("term"),
-              (round(lit(teleport) * lit(1e6) / col("n")).cast("long") +
-                round(lit(damping) * coalesce(col("in_mass"), lit(0L)))
-                  .cast("long")).as("r"))
-            .localCheckpoint(true)
-        }
-        ranks.write.mode("overwrite").parquet(s"$base/data")
-      } finally {
-        sc.getPersistentRDDs
-          .filterNot { case (id, _) => preexisting(id) }
-          .values.foreach(_.unpersist(blocking = false))
       }
-    }
+      ranks.write.mode("overwrite").parquet(s"$base/data")
+    } }
     s.read.parquet(s"$base/data")
       .select(col("term"), col("r").as("rank_micros"))
       .orderBy(col("rank_micros").desc, col("term").asc)

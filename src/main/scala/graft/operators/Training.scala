@@ -57,7 +57,6 @@ object Training {
     * the 4-long weight vector round-trips through the driver. */
   private def gdLoop(s: SparkSession, dir: String, iters: Int, lr: Double)
                     (predict: Column => Column): DataFrame = {
-    val sc = s.sparkContext
     val toks = filter(split(lower(col("text")), "\\s+"),
       t => length(t) > lit(0))
     val feats0 = Tables.documents(s, dir).select(
@@ -69,37 +68,31 @@ object Training {
         greatest(length(col("text")), lit(1))).cast("long").as("x3"),
       lit(1000000L).as("x4"),
       when(col("lang") === "en", 1000000L).otherwise(0L).as("y"))
-    val preexisting = sc.getPersistentRDDs.keySet
-    val w =
-      try {
-        val feats = feats0.localCheckpoint(true)
-        val xs = Seq("x1", "x2", "x3", "x4")
-        var w = Array(0L, 0L, 0L, 0L)
-        // n rides along in every step's aggregate row instead of its
-        // own up-front count() job: the loop is driver-job-count bound
-        // (8 synchronous steps over a 4-long-column checkpoint), so one
-        // fewer round trip is a direct ~11% fixed-cost cut
-        var n = -1L
-        for (_ <- 1 to iters) {
-          val dot = xs.zipWithIndex
-            .map { case (c, j) => lit(w(j)) * col(c) }
-            .reduce(_ + _)
-          val resid = (predict(dot) - col("y")).as("r")
-          val g = feats.select(resid +: xs.map(col): _*)
-            .select(xs.map(c =>
-              sum(round(col("r").cast("double") * col(c) / lit(1e6))
-                .cast("long")).as(s"g_$c")) :+
-              count(lit(1)).as("n"): _*)
-            .head()
-          n = g.getLong(4)
-          w = Array.tabulate(4)(j => w(j) - rnd(lr * g.getLong(j).toDouble / n))
-        }
-        w
-      } finally {
-        sc.getPersistentRDDs
-          .filterNot { case (id, _) => preexisting(id) }
-          .values.foreach(_.unpersist(blocking = false))
+    val w = Staging.scratch(s) {
+      val feats = feats0.localCheckpoint(true)
+      val xs = Seq("x1", "x2", "x3", "x4")
+      var w = Array(0L, 0L, 0L, 0L)
+      // n rides along in every step's aggregate row instead of its
+      // own up-front count() job: the loop is driver-job-count bound
+      // (8 synchronous steps over a 4-long-column checkpoint), so one
+      // fewer round trip is a direct ~11% fixed-cost cut
+      var n = -1L
+      for (_ <- 1 to iters) {
+        val dot = xs.zipWithIndex
+          .map { case (c, j) => lit(w(j)) * col(c) }
+          .reduce(_ + _)
+        val resid = (predict(dot) - col("y")).as("r")
+        val g = feats.select(resid +: xs.map(col): _*)
+          .select(xs.map(c =>
+            sum(round(col("r").cast("double") * col(c) / lit(1e6))
+              .cast("long")).as(s"g_$c")) :+
+            count(lit(1)).as("n"): _*)
+          .head()
+        n = g.getLong(4)
+        w = Array.tabulate(4)(j => w(j) - rnd(lr * g.getLong(j).toDouble / n))
       }
+      w
+    }
     import s.implicits._
     Seq(("chars_k", w(0)), ("tokens_h", w(1)),
       ("vowel_ratio", w(2)), ("bias", w(3)))
@@ -458,53 +451,45 @@ object Training {
     // v1 = algorithm version: bump when the training logic changes so
     // a stale staged model can never serve a new code version
     val base = Staging.base("bpe_v1", dir, s"$merges", "documents")
-    Staging.buildOnce(base) {
-      val sc = s.sparkContext
-      val preexisting = sc.getPersistentRDDs.keySet
-      try {
-        val toks = filter(split(lower(col("text")), "\\s+"),
-          t => t.rlike("^[a-z]+$"))
-        var vocab = Tables.documents(s, dir)
-          .select(explode(toks).as("word"))
-          .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-          .select(col("word"), col("cnt"),
-            concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 "))
-              .as("seg"))
-          .localCheckpoint(true)
-        val buf = collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
-        for (r <- 1 to merges) {
-          val arr = split(trim(col("seg")), " ")
-          val pairs = zip_with(
-            slice(arr, lit(1), size(arr) - 1),
-            slice(arr, lit(2), size(arr) - 1),
-            (a, b) => concat(a, lit(" "), b))
-          val best = vocab.select(col("cnt"), explode(pairs).as("pair"))
-            .groupBy(col("pair")).agg(sum(col("cnt")).as("pc"))
-            .orderBy(col("pc").desc, col("pair").asc)
-            .limit(1).collect()
-          if (best.nonEmpty) {
-            val pair = best(0).getString(0)
-            val merged = pair.replace(" ", "")
-            buf += ((r, pair, merged, best(0).getLong(1)))
-            val pat = lit(" " + pair + " ")
-            val rep = lit(" " + merged + " ")
-            def once(c: Column): Column = call_function("replace", c, pat, rep)
-            vocab = vocab
-              .select(col("word"), col("cnt"),
-                once(once(once(col("seg")))).as("seg"))
-              .localCheckpoint(true)
-          }
+    Staging.buildOnce(base) { Staging.scratch(s) {
+      val toks = filter(split(lower(col("text")), "\\s+"),
+        t => t.rlike("^[a-z]+$"))
+      var vocab = Tables.documents(s, dir)
+        .select(explode(toks).as("word"))
+        .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
+        .select(col("word"), col("cnt"),
+          concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 "))
+            .as("seg"))
+        .localCheckpoint(true)
+      val buf = collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
+      for (r <- 1 to merges) {
+        val arr = split(trim(col("seg")), " ")
+        val pairs = zip_with(
+          slice(arr, lit(1), size(arr) - 1),
+          slice(arr, lit(2), size(arr) - 1),
+          (a, b) => concat(a, lit(" "), b))
+        val best = vocab.select(col("cnt"), explode(pairs).as("pair"))
+          .groupBy(col("pair")).agg(sum(col("cnt")).as("pc"))
+          .orderBy(col("pc").desc, col("pair").asc)
+          .limit(1).collect()
+        if (best.nonEmpty) {
+          val pair = best(0).getString(0)
+          val merged = pair.replace(" ", "")
+          buf += ((r, pair, merged, best(0).getLong(1)))
+          val pat = lit(" " + pair + " ")
+          val rep = lit(" " + merged + " ")
+          def once(c: Column): Column = call_function("replace", c, pat, rep)
+          vocab = vocab
+            .select(col("word"), col("cnt"),
+              once(once(once(col("seg")))).as("seg"))
+            .localCheckpoint(true)
         }
-        import s.implicits._
-        buf.toList.toDF("iter", "pair", "merged", "pair_count")
-          .coalesce(1).write.mode("overwrite").parquet(s"$base/rules")
-        vocab.write.mode("overwrite").parquet(s"$base/vocab")
-      } finally {
-        sc.getPersistentRDDs
-          .filterNot { case (id, _) => preexisting(id) }
-          .values.foreach(_.unpersist(blocking = false))
       }
-    }
+      import s.implicits._
+      buf.toList.toDF("iter", "pair", "merged", "pair_count")
+        .coalesce(1).write.mode("overwrite").parquet(s"$base/rules")
+      vocab.write.mode("overwrite").parquet(s"$base/vocab")
+    } }
     val rules = s.read.parquet(s"$base/rules").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
       .sortBy(_._1).toList

@@ -183,4 +183,43 @@ class RetrievalSpec extends SparkSpec {
     assert(!"Exchange rangepartitioning".r.findFirstIn(p).isDefined,
       s"corpus-sized global sort leaked into the fusion plan:\n$p")
   }
+
+  test("an arm that fails cancels its sibling: the fused call returns " +
+      "only after every arm stopped, and rethrows the arm's own error") {
+    // only the embeddings table: the sparse arm fails at once (no
+    // documents to index) while the dense arm is building its IVF
+    // index over the embeddings
+    val dir = graft.SparkSpec.tempDir("graft-overlap-fail")
+    java.nio.file.Files.copy(
+      java.nio.file.Path.of(s"$sf/embeddings.parquet"),
+      java.nio.file.Path.of(s"$dir/embeddings.parquet"))
+    val ivf = Staging.base("ivf_index_v1", dir, "", "embeddings")
+    Staging.reapOnExit(ivf)
+    val sc = spark.sparkContext
+    val lastJobStart = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        lastJobStart.accumulateAndGet(e.time, math.max)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val e = intercept[Exception] {
+        Retrieval.rrfFusionIndexed(spark, dir)
+      }
+      val returned = System.currentTimeMillis()
+      assert(e.getMessage.contains("documents.parquet"),
+        s"expected the sparse arm's own failure, got: $e")
+      // a detached sibling would go on submitting its build jobs and
+      // commit its index after the call returned
+      Thread.sleep(3000)
+      assert(lastJobStart.get() < returned,
+        "a sibling arm kept submitting jobs after the fused call returned")
+      assert(!Staging.marker(ivf).exists(),
+        "the cancelled dense arm committed its index build")
+    } finally sc.removeSparkListener(listener)
+    // the pooled threads that ran the cancelled group's arms carry no
+    // job group into later overlapped calls
+    assert(Retrieval.rrfFusionIndexed(spark, sf).count() > 0)
+  }
 }
