@@ -308,6 +308,12 @@ object Recommend {
   /** Bucket count of the persisted co-occurrence index. */
   val CoocBuckets = 16
 
+  /** The index's postings are read with their schema: a `minSupport`
+    * that no pair reaches writes no file to infer it from. */
+  private def coocPostings(s: SparkSession, base: String): DataFrame =
+    s.read.schema("item BIGINT, nbr BIGINT, n_ab BIGINT, " +
+      "lift_micros BIGINT, bucket INT").parquet(s"$base/postings")
+
   /** `rec4_cooccur_indexed` — the SERVING face of [[itemCooccur]],
     * the same staged-index treatment its BM25/IVF siblings got
     * (TextAnalysis.bm25Indexed, Similarity.annIvfIndexed): the
@@ -333,7 +339,7 @@ object Recommend {
   def cooccurIndexed(s: SparkSession, dir: String, nQuery: Int = 5,
                      k: Int = 5, minSupport: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val base = Staging.base("cooc_index_v2", dir, "", "lineitem")
+    val base = Staging.base("cooc_index_v2", dir, s"ms$minSupport", "lineitem")
     Staging.buildOnce(base) {
       val (pairs, support, nOrders) = basketStats(s, dir, minSupport)
       val sym = pairs
@@ -355,7 +361,7 @@ object Recommend {
       posts.write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$base/postings")
       // head-items sidecar: top-64 items by postings mass
-      s.read.parquet(s"$base/postings")
+      coocPostings(s, base)
         .groupBy(col("item")).agg(sum(col("n_ab")).as("mass"))
         .orderBy(col("mass").desc, col("item").asc).limit(64)
         .coalesce(1).write.mode("overwrite").parquet(s"$base/topitems")
@@ -369,7 +375,7 @@ object Recommend {
     val wantBuckets = items.map(_ % CoocBuckets).distinct
     val w = Window.partitionBy(col("item"))
       .orderBy(col("n_ab").desc, col("nbr").asc)
-    s.read.parquet(s"$base/postings")
+    coocPostings(s, base)
       .filter(col("bucket").isin(wantBuckets: _*) &&
         col("item").isin(items: _*))
       .withColumn("rnk", row_number().over(w).cast("long"))

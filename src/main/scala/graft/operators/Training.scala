@@ -378,8 +378,18 @@ object Training {
     * narrow 30-replace + coin projection over the vocab-bounded
     * distinct-word frame; the rollup is a 1-row broadcast. */
   def tok12BpeDropout(s: SparkSession, dir: String, merges: Int = 10,
-                      pTenths: Int = 3): DataFrame = {
-    val (rules, vocab) = bpeRun(s, dir, merges)((r, v) => (r, v))
+                      pTenths: Int = 3): DataFrame =
+    bpeRun(s, dir, merges)(bpeDropout(_, _, pTenths))
+
+  /** [[tok12BpeDropout]] over a given merge table and vocab. The
+    * dropout's NUL sentinel relies on every vocab word matching
+    * `^[a-z]+$` (the filter in [[bpeRun]]), so that is checked first. */
+  private[operators] def bpeDropout(rules: List[(Int, String, String, Long)],
+                                    vocab: DataFrame,
+                                    pTenths: Int): DataFrame = {
+    require(vocab.filter(!col("word").rlike("^[a-z]+$")).isEmpty,
+      "bpe dropout: every vocab word must match ^[a-z]+$, or the NUL " +
+        "sentinel of a dropped merge could occur in a segmentation")
     val seg0 = concat(lit(" "),
       regexp_replace(col("word"), "(.)", "$1 "))
     def apply3(c: Column, pair: String, merged: String): Column = {

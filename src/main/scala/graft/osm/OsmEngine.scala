@@ -222,66 +222,80 @@ object OsmEngine {
 
   // ---- shaping (R1, :463-537) ---------------------------------------
 
-  /** shape_element as a single Project. `clean = true` applies C1/C2 and
-    * the housenumber promotion (clean_address :305-326, effective
-    * semantics); `clean = false` reproduces the reference goldens. */
+  /** shape_element as staged projections. `clean = true` applies C1/C2
+    * and the housenumber promotion (clean_address :305-326, effective
+    * semantics); `clean = false` reproduces the reference goldens.
+    *
+    * An inlined `Column` is copied by reference into every expression
+    * that uses it: as one Project, the street value would sit ~49
+    * times inside `fixStreet`'s struct and that struct inside each use
+    * of the cleaned tags, ~25,000 analyzed expression nodes that every
+    * load and every query over the cached documents would analyze
+    * again. Each shared sub-expression is therefore bound once in its
+    * own projection and read by name after that: the problem-char
+    * filtered tags `_ok`, the street value `_sv`, its `fixStreet`
+    * struct `_fx` and the cleaned tags `_ct`. `CollapseProject` does
+    * not re-inline a non-cheap producer with more than one consumer,
+    * so the stages survive optimisation; the final select drops them. */
   def shape(elems: DataFrame, clean: Boolean = true): DataFrame = {
-    val rawTags = coalesce(col("tag"), array().cast(tagType))
-    // drop problem-char keys first (:503-504)
-    val okTags = filter(rawTags, t => !t.getField("_k").rlike(ProblemRe))
+    val key = (t: Column) => t.getField("_k")
+    val ok = elems
+      .filter(col("_user").isNotNull) // is_valid effective semantics (:455-461)
+      // drop problem-char keys first (:503-504)
+      .withColumn("_ok", filter(coalesce(col("tag"), array().cast(tagType)),
+        t => !key(t).rlike(ProblemRe)))
 
-    val streetVal = get( // original addr:street value, if any (null-safe
-      // on empty arrays — ANSI element_at throws on out-of-range index)
-      filter(okTags, t => t.getField("_k") === "addr:street"), lit(0))
-      .getField("_v")
-    val fixed  = fixStreet(streetVal)
-    val cleanedTags = if (!clean) okTags else {
-      val base = transform(okTags, t => struct(
-        t.getField("_k").as("_k"),
-        when(t.getField("_k") === "addr:street", fixed.getField("street"))
-          .when(t.getField("_k") === "addr:city", fixCity(t.getField("_v")))
+    val (staged, tags) = if (!clean) (ok, col("_ok")) else {
+      val fixed = ok
+        .withColumn("_sv", get( // original addr:street value, if any (null-
+          // safe on empty arrays — ANSI element_at throws out of range)
+          filter(col("_ok"), t => key(t) === "addr:street"), lit(0))
+          .getField("_v"))
+        .withColumn("_fx", fixStreet(col("_sv")))
+      val base = transform(col("_ok"), t => struct(
+        key(t).as("_k"),
+        when(key(t) === "addr:street", col("_fx.street"))
+          .when(key(t) === "addr:city", fixCity(t.getField("_v")))
           .otherwise(t.getField("_v")).as("_v")))
       // housenumber promotion: extracted street number overrides any
       // existing addr:housenumber (last-wins in the reference's dict)
-      val hn = fixed.getField("housenum")
-      when(hn.isNotNull,
+      val hn = col("_fx.housenum")
+      (fixed.withColumn("_ct", when(hn.isNotNull,
         concat(
-          filter(base, t => t.getField("_k") =!= "addr:housenumber"),
+          filter(base, t => key(t) =!= "addr:housenumber"),
           array(struct(lit("addr:housenumber").as("_k"), hn.as("_v")))))
-        .otherwise(base)
+        .otherwise(base)), col("_ct"))
     }
 
     val isAddr = (t: Column) =>
-      t.getField("_k").startsWith("addr:") &&
-        !regexp_like(t.getField("_k").substr(lit(6), length(t.getField("_k"))),
+      key(t).startsWith("addr:") &&
+        !regexp_like(key(t).substr(lit(6), length(key(t))),
           lit(LowerColonRe)) // second colon ⇒ dropped (:514-515)
     val addressEntries = transform(
-      filter(cleanedTags, isAddr),
-      t => struct(t.getField("_k").substr(lit(6), length(t.getField("_k"))).as("key"),
+      filter(tags, isAddr),
+      t => struct(key(t).substr(lit(6), length(key(t))).as("key"),
         t.getField("_v").as("value")))
     val residualEntries = transform(
-      filter(cleanedTags, t => !t.getField("_k").startsWith("addr:")),
-      t => struct(t.getField("_k").as("key"), t.getField("_v").as("value")))
+      filter(tags, t => !key(t).startsWith("addr:")),
+      t => struct(key(t).as("key"), t.getField("_v").as("value")))
 
-    elems
-      .filter(col("_user").isNotNull) // is_valid effective semantics (:455-461)
-      .select(
-        col("_id").as("id"),
-        col("type"),
-        col("_visible").as("visible"),
-        struct(
-          col("_version").as("version"), col("_changeset").as("changeset"),
-          col("_timestamp").as("timestamp"), col("_user").as("user"),
-          col("_uid").as("uid")).as("created"),
-        when(col("_lat").isNotNull,
-          array(col("_lat").cast("double"), col("_lon").cast("double")))
-          .as("pos"),
-        when(size(addressEntries) > 0, map_from_entries(addressEntries))
-          .as("address"),
-        map_from_entries(residualEntries).as("tags"),
-        // nd-less ways emit null (the reference omits the key), not []
-        when(col("type") === "way" && size(coalesce(col("nd"), array().cast(ndType))) > 0,
-          transform(col("nd"), n => n.getField("_ref"))).as("node_refs"))
+    staged.select(
+      col("_id").as("id"),
+      col("type"),
+      col("_visible").as("visible"),
+      struct(
+        col("_version").as("version"), col("_changeset").as("changeset"),
+        col("_timestamp").as("timestamp"), col("_user").as("user"),
+        col("_uid").as("uid")).as("created"),
+      when(col("_lat").isNotNull,
+        array(col("_lat").cast("double"), col("_lon").cast("double")))
+        .as("pos"),
+      when(size(addressEntries) > 0, map_from_entries(addressEntries))
+        .as("address"),
+      map_from_entries(residualEntries).as("tags"),
+      // nd-less ways emit null (the reference omits the key), not []
+      when(col("type") === "way" && size(coalesce(col("nd"), array().cast(ndType))) > 0,
+        transform(col("nd"), n => n.getField("_ref"))).as("node_refs"))
   }
 
   /** Full pipeline: read → shape → ND-JSON sink (reshape_data :565-584).

@@ -171,4 +171,11 @@ class Round7eSpec extends SparkSpec {
     assert(got === want)
     assert(got.nonEmpty)
   }
+
+  test("co-occurrence index: each minSupport reads its own postings") {
+    assert(Recommend.cooccurIndexed(spark, sf, minSupport = 2).count() > 0L)
+    // no pair reaches a support of one million, whatever was built first
+    assert(Recommend.cooccurIndexed(spark, sf, minSupport = 1000000)
+      .count() === 0L)
+  }
 }

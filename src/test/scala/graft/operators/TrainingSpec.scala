@@ -268,4 +268,16 @@ class TrainingSpec extends SparkSpec {
       assert(math.abs(unit.map(u => u * u).sum - 1e12) < 1e9)
     }
   }
+
+  test("bpe dropout refuses a vocab that breaks its sentinel invariant") {
+    import spark.implicits._
+    val rules = List((1, "a b", "ab", 2L))
+    val vocab = Seq(("ab", 1L), ("a\u0000b", 1L)).toDF("word", "cnt")
+    val e = intercept[IllegalArgumentException](
+      Training.bpeDropout(rules, vocab, pTenths = 3))
+    assert(e.getMessage.contains("^[a-z]+$"), e.getMessage)
+    // the same rules over a vocab that keeps the invariant encode
+    val ok = Training.bpeDropout(rules, vocab.filter($"word" === "ab"), 3)
+    assert(ok.select("n_tok").as[Long].collect().toSeq === Seq(1L))
+  }
 }

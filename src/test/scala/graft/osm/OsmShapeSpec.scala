@@ -2,7 +2,9 @@ package graft.osm
 
 import graft.SparkSpec
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Golden tests transcribed from the reference's inline assertions
   * (openstreet_kolkata.py:539-562, :165-166) against the reconstructed
@@ -85,5 +87,45 @@ class OsmShapeSpec extends SparkSpec {
     val back = spark.read.json(out)
     assert(back.count() === shaped.count())
     assert(back.count() === 11) // 12 node/way minus the user-less node
+  }
+
+  /** Expression nodes summed over every operator of a plan. */
+  private def exprNodes(p: LogicalPlan): Int =
+    p.collect { case op => op.expressions.map(_.collect { case e => e }.length).sum }.sum
+
+  test("shape binds each shared sub-expression once: its plan stays small") {
+    // inlined Column values are copied by reference: as one Project,
+    // shape's plan holds ~8,400 optimized expression nodes here. The input
+    // is read afresh: over the cached `elems`, the cache lookup would swap
+    // shape's plan for the scan of `shapedClean`/`shapedRaw`
+    val fresh = OsmEngine.elements(spark, fixture("example.osm"))
+    for (clean <- Seq(true, false)) {
+      val n = exprNodes(OsmEngine.shape(fresh, clean).queryExecution.optimizedPlan)
+      assert(n <= 2000, s"clean = $clean: $n expression nodes")
+    }
+    // a query over the cached documents plans against a cache scan; its
+    // analyzed plan, which the cache lookup canonicalises, holds shape's
+    val docs = OsmEngine.reshapeToJson(spark, fixture("example.osm"),
+      SparkSpec.tempDir("graft-json"))
+    try {
+      val n = exprNodes(OsmEngine.q2TypeCounts(docs).queryExecution.analyzed)
+      assert(n <= 2000, s"q2 over the cached documents: $n expression nodes")
+    } finally docs.unpersist()
+  }
+
+  test("shape's schema, nullability included, is the document shape") {
+    val str = (n: String) => StructField(n, StringType)
+    val strMap = MapType(StringType, StringType, valueContainsNull = true)
+    val want = StructType(Seq(
+      str("id"), str("type"), str("visible"),
+      StructField("created", StructType(
+        Seq("version", "changeset", "timestamp", "user", "uid").map(str)),
+        nullable = false),
+      StructField("pos", ArrayType(DoubleType, containsNull = true)),
+      StructField("address", strMap),
+      StructField("tags", strMap, nullable = false),
+      StructField("node_refs", ArrayType(StringType, containsNull = true))))
+    assert(shapedClean.schema === want)
+    assert(shapedRaw.schema === want)
   }
 }
